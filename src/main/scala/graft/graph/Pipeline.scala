@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit, sum}
 
 import graft.sources.Transcripts
 import graft.extract.Extract
@@ -182,6 +183,11 @@ object Pipeline {
     val sec = (System.nanoTime() - t0) / 1e9
     println(s"""{"pipeline":"kg","sfDir":"$sfDir","edges":$nEdges,"sec":$sec,"triples_per_sec":${nEdges / sec}}""")
     StageStore.metrics(spark, sfDir).show(100, truncate = false)
+    // per-stage lineage rollup: how many writer partitions each commit
+    // produced and how many rows they hold
+    StageStore.lineage(spark, sfDir).groupBy("stage")
+      .agg(count(lit(1)).as("parts"), sum("output_rows").as("rows"))
+      .orderBy("stage").show(100, truncate = false)
     spark.stop()
   }
 }

@@ -1,9 +1,20 @@
 package graft.graph
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.schema.{Lineage, Metric}
 
 /** Checkpointed stage tables: every pipeline stage is materialized to a
   * parquet table exactly once and re-read by all consumers.
@@ -17,9 +28,11 @@ import org.apache.spark.sql.functions._
   * tables; parquet directories with `_SUCCESS` carry the equivalent
   * snapshot-commit semantics in this sandbox (SURVEY.md §7.0).
   *
-  * Each commit also appends per-partition lineage rows
+  * Each commit also records per-partition lineage rows
   * (stage, partition_id, rows, wall_ms) and stage-level metric rows —
-  * the north rule's observability requirement.
+  * the north rule's observability requirement — taken from the stage's
+  * write itself: committing a stage runs one Spark write and no other
+  * job, and reading a committed stage runs none.
   */
 object StageStore {
 
@@ -129,74 +142,92 @@ object StageStore {
   /** Storage backend (parquet here; Iceberg on a cluster — see TableIO). */
   val io: TableIO = ParquetTableIO
 
+  // one lock per stage dir: two threads asking for one stage build it
+  // once, while nested builds of different stages (dup_clusters_* ->
+  // dup_pairs_*) take different locks and cannot deadlock
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
+  // committed schema per stage dir (the commit's own, or inferred once on
+  // a cold resume): every later read skips parquet schema inference. A
+  // file-source read makes every field nullable, as inference does.
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
   /** Materialize `build` at `<base>/<stage>` unless already committed;
-    * return a reader of the committed table. */
+    * return a reader of the committed table. A commit runs the write's
+    * own job(s) and nothing else; reading a committed stage runs no job. */
   def getOrCreate(spark: SparkSession, inputKey: String, stage: String)(
       build: => DataFrame): DataFrame = {
     val base = baseFor(inputKey)
     val dir = s"$base/$stage"
-    if (!io.exists(spark, dir)) {
-      val t0 = System.nanoTime()
-      io.overwrite(build, dir)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      commitObservability(spark, base, stage, dir, wallMs)
-    }
-    io.read(spark, dir)
+    if (!io.exists(spark, dir))
+      locks.computeIfAbsent(dir, _ => new Object).synchronized {
+        if (!io.exists(spark, dir)) commit(spark, base, stage, dir, build)
+      }
+    io.read(spark, dir, schemas.computeIfAbsent(dir, _ => io.schema(spark, dir)))
   }
 
-  /** Per-partition lineage + stage metrics for a committed stage table.
-    * ONE distributed pass: a rollup on spark_partition_id yields the
-    * per-partition counts (lineage) AND the grand-total row (metrics) in
-    * a single job — the previous shape re-read the table a second time
-    * just for the global approx_count_distinct (guide §1.2: don't compute
-    * things twice). The rollup's total grouping merges the same HLL
-    * sketches a direct global aggregate would, so the recorded
-    * approx_distinct_convs value is unchanged. */
-  private def commitObservability(spark: SparkSession, base: String,
-      stage: String, dir: String, wallMs: Long): Unit = {
-    import spark.implicits._
-    val out = io.read(spark, dir)
-    val hasConv = out.columns.contains("conv_id")
-    val aggCols = count(lit(1)).as("output_rows") +:
-      (if (hasConv) Seq(approx_count_distinct(col("conv_id")).as("_convs"))
-       else Nil)
-    val all = out
-      .select((col("*") +: Seq(spark_partition_id().as("partition_id"))): _*)
-      .rollup(col("partition_id"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    val (totals, perPid) = all.partition(_.isNullAt(0))
-    val parts = perPid.map(r => (stage, r.getInt(0), r.getLong(1), wallMs))
-    val rows = parts.map(_._3).sum
+  /** Write `build` to `dir` and record its observability without another
+    * Spark job:
+    *   - totals (`output_rows`, `approx_distinct_convs`) are observed on
+    *     the write itself (`Dataset.observe`);
+    *   - per-partition lineage rows come from the committed part files'
+    *     footers (`partition_id` is the writer partition);
+    *   - the driver writes both as one small JSON-lines file per table,
+    *     under a unique name via temp file + rename, so concurrent commits
+    *     never share a staging dir and a killed commit leaves only a
+    *     hidden temp file that readers skip. */
+  private def commit(spark: SparkSession, base: String, stage: String,
+      dir: String, build: => DataFrame): Unit = {
+    val t0 = System.nanoTime()
+    val df = build
+    val obs = Observation(s"commit:$stage:${UUID.randomUUID()}")
+    val hasConv = df.columns.contains("conv_id")
     // entity/conversation cardinality estimate (SURVEY §2.6: metrics use
     // approx_count_distinct — exact distinct would be a full shuffle)
-    val approx =
-      if (hasConv)
-        Seq((stage, "approx_distinct_convs", totals.head.getLong(2).toDouble))
-      else Nil
-    val metrics = (Seq(
-      (stage, "output_rows", rows.toDouble),
-      (stage, "wall_ms", wallMs.toDouble),
-      (stage, "rows_per_sec", if (wallMs > 0) rows * 1000.0 / wallMs else 0.0))
-      ++ approx)
-      .toDF("stage", "name", "value")
-    // concurrent stage commits (Pipeline.runAll overlaps independent
-    // branches) must not append to the same directory at once: two
-    // concurrent append jobs share one _temporary staging dir and can
-    // clobber each other's task output — serialize the two tiny writes
-    obsLock.synchronized {
-      io.append(parts.toSeq
-        .toDF("stage", "partition_id", "output_rows", "wall_ms").coalesce(1),
-        s"$base/_lineage")
-      io.append(metrics.coalesce(1), s"$base/_metrics")
-    }
+    val totals = count(lit(1)) +:
+      (if (hasConv) Seq(approx_count_distinct(col("conv_id"))) else Nil)
+    io.overwrite(df.observe(obs, totals.head, totals.tail: _*), dir)
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    schemas.put(dir, df.schema)
+    val parts = io.partRows(spark, dir).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+    // the observed row arrives over the listener bus right after the write;
+    // if it never does, the footers still give the exact total
+    val observed = Try(Await.result(obs.future, 60.seconds)).toOption
+    val rows = observed.fold(parts.map(_._2).sum)(_.getLong(0))
+    val metrics = Seq(
+      Metric(stage, "output_rows", rows.toDouble),
+      Metric(stage, "wall_ms", wallMs.toDouble),
+      Metric(stage, "rows_per_sec", if (wallMs > 0) rows * 1000.0 / wallMs else 0.0)) ++
+      observed.filter(_ => hasConv)
+        .map(r => Metric(stage, "approx_distinct_convs", r.getLong(1).toDouble))
+    val name = s"$stage-${UUID.randomUUID()}.json"
+    writeLines(spark, s"$base/_lineage", name, parts.map { case (pid, n) =>
+      s"""{"stage":${jsonStr(stage)},"partition_id":$pid,"output_rows":$n,"wall_ms":$wallMs}"""
+    })
+    writeLines(spark, s"$base/_metrics", name, metrics.map(m =>
+      s"""{"stage":${jsonStr(m.stage)},"name":${jsonStr(m.name)},"value":${m.value}}"""))
   }
 
-  private val obsLock = new Object
+  private def jsonStr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** Write `lines` to `<dir>/<name>` atomically: a hidden temp file, then
+    * a rename. */
+  private def writeLines(spark: SparkSession, dir: String, name: String,
+      lines: Seq[String]): Unit = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(d, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes(UTF_8)) finally out.close()
+    if (!fs.rename(tmp, new Path(d, name)))
+      throw new java.io.IOException(s"StageStore: cannot commit $tmp")
+  }
 
   def lineage(spark: SparkSession, inputKey: String): DataFrame =
-    io.read(spark, s"${baseFor(inputKey)}/_lineage")
+    spark.read.schema(Encoders.product[Lineage].schema)
+      .json(s"${baseFor(inputKey)}/_lineage")
 
   def metrics(spark: SparkSession, inputKey: String): DataFrame =
-    io.read(spark, s"${baseFor(inputKey)}/_metrics")
+    spark.read.schema(Encoders.product[Metric].schema)
+      .json(s"${baseFor(inputKey)}/_metrics")
 }

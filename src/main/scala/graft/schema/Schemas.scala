@@ -70,8 +70,11 @@ case class Edge(
     conv_id: String,
     turn_idx: Int)
 
-/** Per-stage, per-partition lineage row (north-rule requirement);
-  * matches the columns StageStore.commitObservability persists. */
+/** Per-stage, per-partition lineage row (north-rule requirement), as
+  * StageStore.commit records it: `partition_id` is the writer partition
+  * of a committed part file (`part-NNNNN`), `output_rows` that
+  * partition's rows from the file footers, `wall_ms` the commit's wall
+  * time. */
 case class Lineage(
     stage: String,
     partition_id: Int,

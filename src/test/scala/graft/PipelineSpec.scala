@@ -1,7 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{Pipeline, StageStore}
 
@@ -31,6 +37,14 @@ class PipelineSpec extends SparkSpec {
       val n2 = Pipeline.runAll(spark, sfDir)
       assert(n2 === n1, "resumed run must reuse committed stages")
       assert(spark.read.parquet(s"$base/mentions").count() === marker)
+      // committed readers carry the schema a parquet read would infer
+      Seq("mentions" -> Pipeline.mentions _, "resolved" -> Pipeline.resolved _,
+        "nodes" -> Pipeline.nodes _, "triples" -> Pipeline.triples _,
+        "minted_nodes" -> Pipeline.mintedNodes _, "edges" -> Pipeline.edges _,
+        "version_nodes" -> Pipeline.versionNodes _,
+        "version_edges" -> Pipeline.versionEdges _).foreach { case (stage, read) =>
+        assert(read(spark, sfDir).schema === spark.read.parquet(s"$base/$stage").schema, stage)
+      }
     }
   }
 
@@ -93,6 +107,97 @@ class PipelineSpec extends SparkSpec {
         .agg(sum("output_rows")).collect()(0).getLong(0)
       assert(mentionsRows === spark.read
         .parquet(s"${StageStore.baseFor(sfDir)}/mentions").count())
+      // every committed stage: lineage sum = metrics total = table count
+      val base = StageStore.baseFor(sfDir)
+      val linRows = lin.groupBy("stage").agg(sum("output_rows")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val metRows = met.filter(col("name") === "output_rows").collect()
+        .map(r => r.getString(0) -> r.getDouble(2).toLong).toMap
+      assert(linRows.keySet === metRows.keySet)
+      linRows.foreach { case (stage, n) =>
+        assert(metRows(stage) === n, s"$stage: _metrics output_rows")
+        assert(spark.read.parquet(s"$base/$stage").count() === n,
+          s"$stage: committed table count")
+      }
+      // the cardinality estimate observed on the write is within 5 %
+      val approx = met.filter(col("stage") === "mentions" &&
+        col("name") === "approx_distinct_convs").collect()(0).getDouble(2)
+      val exact = spark.read.parquet(s"$base/mentions")
+        .select("conv_id").distinct().count()
+      assert(math.abs(approx - exact) <= 0.05 * exact, s"approx=$approx exact=$exact")
+      // a killed commit leaves only its hidden temp file: readers skip it
+      val before = rowSet(StageStore.metrics(spark, sfDir))
+      Files.write(Paths.get(s"$base/_metrics/.x.json.tmp"),
+        "{\"stage\":\"mentions\",\"name\":\"output_rows\",\"value\":-1.0}\n".getBytes("UTF-8"))
+      assert(rowSet(StageStore.metrics(spark, sfDir)) === before)
+    }
+  }
+
+  /** Jobs started on this thread while `f` runs. */
+  private def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${UUID.randomUUID()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("a stage commit runs only its write job; reading a committed stage runs none") {
+    withStageRoot {
+      val input = Files.createTempDirectory("graft_jobs_input").toString
+      def small: DataFrame = spark.range(0, 1000, 1, 4)
+        .select(concat(lit("c"), (col("id") % 37).cast("string")).as("conv_id"), col("id"))
+      val plainWrite = jobsOf(small.write.parquet(
+        Files.createTempDirectory("graft_jobs_plain").resolve("t").toString))
+      assert(plainWrite >= 1)
+      assert(jobsOf(StageStore.getOrCreate(spark, input, "small")(small)) === plainWrite,
+        "a commit must run the write's job(s) and nothing else")
+      var reader: DataFrame = null
+      assert(jobsOf {
+        reader = StageStore.getOrCreate(spark, input, "small")(
+          fail("a committed stage must not rebuild"))
+      } === 0, "reading a committed stage must run no job")
+      assert(reader.schema ===
+        spark.read.parquet(s"${StageStore.baseFor(input)}/small").schema)
+      assertSameRows(reader, small)
+    }
+  }
+
+  test("two threads asking for one stage build it once and read one commit") {
+    withStageRoot {
+      val input = Files.createTempDirectory("graft_race_input").toString
+      val builds = new AtomicInteger
+      val arrived = new CountDownLatch(2)
+      def table: DataFrame = spark.range(0, 200).select(col("id"), (col("id") % 7).as("k"))
+      def build: DataFrame = {
+        builds.incrementAndGet()
+        // both threads have asked for the stage: give the second one time
+        // to reach the store before this build commits
+        arrived.await(30, TimeUnit.SECONDS)
+        Thread.sleep(500)
+        table
+      }
+      val pool = Executors.newFixedThreadPool(2)
+      try {
+        val results = (1 to 2).map(_ => pool.submit(() => {
+          arrived.countDown()
+          StageStore.getOrCreate(spark, input, "raced")(build)
+        })).map(_.get(120, TimeUnit.SECONDS))
+        assert(builds.get === 1, "the stage must be built exactly once")
+        results.foreach(assertSameRows(_, table))
+      } finally pool.shutdown()
     }
   }
 }
