@@ -36,6 +36,8 @@ import graft.schema.{Lineage, Metric}
   */
 object StageStore {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private def md5hex(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -128,7 +130,7 @@ object StageStore {
       stamp
     } catch {
       case e: Throwable =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        log.warn(
           s"StageStore: input '$inputKey' unreadable (${e.getClass.getSimpleName}); " +
             "stamping a run-unique nonce — every stage recomputes into a " +
             "fresh directory until the input is readable")
@@ -167,10 +169,11 @@ object StageStore {
 
   /** Write `build` to `dir` and record its observability without another
     * Spark job:
-    *   - totals (`output_rows`, `approx_distinct_convs`) are observed on
-    *     the write itself (`Dataset.observe`);
-    *   - per-partition lineage rows come from the committed part files'
-    *     footers (`partition_id` is the writer partition);
+    *   - per-partition lineage rows, and `output_rows` as their sum, come
+    *     from the committed part files' footers (`partition_id` is the
+    *     writer partition);
+    *   - `approx_distinct_convs`, for stages with a `conv_id`, is observed
+    *     on the write itself (`Dataset.observe`);
     *   - the driver writes both as one small JSON-lines file per table,
     *     under a unique name via temp file + rename, so concurrent commits
     *     never share a staging dir and a killed commit leaves only a
@@ -179,26 +182,27 @@ object StageStore {
       dir: String, build: => DataFrame): Unit = {
     val t0 = System.nanoTime()
     val df = build
-    val obs = Observation(s"commit:$stage:${UUID.randomUUID()}")
-    val hasConv = df.columns.contains("conv_id")
     // entity/conversation cardinality estimate (SURVEY §2.6: metrics use
     // approx_count_distinct — exact distinct would be a full shuffle)
-    val totals = count(lit(1)) +:
-      (if (hasConv) Seq(approx_count_distinct(col("conv_id"))) else Nil)
-    io.overwrite(df.observe(obs, totals.head, totals.tail: _*), dir)
+    val obs = if (df.columns.contains("conv_id"))
+      Some(Observation(s"commit:$stage:${UUID.randomUUID()}")) else None
+    io.overwrite(obs.fold(df)(o => df.observe(o, approx_count_distinct(col("conv_id")))), dir)
     val wallMs = (System.nanoTime() - t0) / 1000000L
     schemas.put(dir, df.schema)
     val parts = io.partRows(spark, dir).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
-    // the observed row arrives over the listener bus right after the write;
-    // if it never does, the footers still give the exact total
-    val observed = Try(Await.result(obs.future, 60.seconds)).toOption
-    val rows = observed.fold(parts.map(_._2).sum)(_.getLong(0))
+    val rows = parts.map(_._2).sum
+    // the observed row arrives over the listener bus right after the write
+    val distinctConvs = obs.flatMap { o =>
+      val r = Try(Await.result(o.future, 60.seconds))
+      r.failed.foreach(e => log.warn(s"StageStore: no observed metrics for stage " +
+        s"'$stage' (${e.getClass.getSimpleName}); approx_distinct_convs not recorded"))
+      r.toOption.map(_.getLong(0))
+    }
     val metrics = Seq(
       Metric(stage, "output_rows", rows.toDouble),
       Metric(stage, "wall_ms", wallMs.toDouble),
       Metric(stage, "rows_per_sec", if (wallMs > 0) rows * 1000.0 / wallMs else 0.0)) ++
-      observed.filter(_ => hasConv)
-        .map(r => Metric(stage, "approx_distinct_convs", r.getLong(1).toDouble))
+      distinctConvs.map(n => Metric(stage, "approx_distinct_convs", n.toDouble))
     val name = s"$stage-${UUID.randomUUID()}.json"
     writeLines(spark, s"$base/_lineage", name, parts.map { case (pid, n) =>
       s"""{"stage":${jsonStr(stage)},"partition_id":$pid,"output_rows":$n,"wall_ms":$wallMs}"""
