@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Clustering, Curation, Dedup, Multimodal, Similarity, TextOps}
+import graft.graph.ParquetTableIO
 
 /** Driver-contract queries for the training-data pipeline operators
   * (dedup / similarity / text analysis / multimodal) over the `documents`
@@ -11,9 +12,9 @@ import graft.ops.{Clustering, Curation, Dedup, Multimodal, Similarity, TextOps}
 object OpsEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    ParquetTableIO.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    ParquetTableIO.read(s, s"$dir/embeddings.parquet")
 
   /** Committed 8-gram decontamination hit table (doc_id, n_hits) for the
     * standard benchmark split (doc_id % 100 == 0): THREE queries consume

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Events
+import graft.graph.ParquetTableIO
 
 /** Relational-operator coverage queries (SURVEY.md §2.5-2.10 families that
   * the KG pipeline itself doesn't exercise): decimal-exact aggregation,
@@ -13,14 +14,14 @@ import graft.streaming.Events
 object RelEntry {
 
   private def ev(s: SparkSession, dir: String) =
-    s.read.parquet(s"$dir/events.parquet")
+    ParquetTableIO.read(s, s"$dir/events.parquet")
 
   private def cents(c: org.apache.spark.sql.Column) =
     sum(round(c * 100).cast("long"))
 
   /** TPC-H Q1-shaped aggregate with exact integer money. */
   private def qRevenue(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
+    ParquetTableIO.read(s, s"$dir/lineitem.parquet")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         cents(col("l_quantity")).as("qty_cents"),
@@ -32,10 +33,10 @@ object RelEntry {
     * nation is a fixed 25-row vocabulary -> unconditional hint. The fact
     * table shuffles once on the grouping key. */
   private def qTopParts(s: SparkSession, dir: String): DataFrame = {
-    val l = s.read.parquet(s"$dir/lineitem.parquet")
-    val p = s.read.parquet(s"$dir/part.parquet")
-    val su = s.read.parquet(s"$dir/supplier.parquet")
-    val n = s.read.parquet(s"$dir/nation.parquet")
+    val l = ParquetTableIO.read(s, s"$dir/lineitem.parquet")
+    val p = ParquetTableIO.read(s, s"$dir/part.parquet")
+    val su = ParquetTableIO.read(s, s"$dir/supplier.parquet")
+    val n = ParquetTableIO.read(s, s"$dir/nation.parquet")
     val rev = l
       .join(graft.canonical.Joins.dim(su), l("l_suppkey") === su("s_suppkey"))
       .join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
@@ -51,8 +52,8 @@ object RelEntry {
     * per-part quantity totals before vs after 1998, full-outer joined,
     * classified added/removed/changed/same. */
   private def qChangedParts(s: SparkSession, dir: String): DataFrame = {
-    val l = s.read.parquet(s"$dir/lineitem.parquet")
-    val p = s.read.parquet(s"$dir/part.parquet")
+    val l = ParquetTableIO.read(s, s"$dir/lineitem.parquet")
+    val p = ParquetTableIO.read(s, s"$dir/part.parquet")
     val joined = l.join(graft.canonical.Joins.dim(p), l("l_partkey") === p("p_partkey"))
       .select(regexp_replace(col("p_name"), " ", "_").as("entity"),
         col("l_shipdate"), col("l_quantity"))

@@ -8,6 +8,7 @@ import graft.extract.Extract
 import graft.link.Resolve
 import graft.canonical.{Canonical, ConnectedComponents}
 import graft.version.Versions
+import graft.graph.ParquetTableIO
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -315,7 +316,7 @@ object SparkEntry {
     * kept exact) linked back to the canonical part-name dictionary via
     * broadcast exact match + trigram-MinHash blocking + Jaccard scoring. */
   private def qFuzzyLink(s: SparkSession, dir: String): DataFrame = {
-    val p = s.read.parquet(s"$dir/part.parquet")
+    val p = ParquetTableIO.read(s, s"$dir/part.parquet")
     val pname = regexp_replace(col("p_name"), " ", "_")
     val surfaces = p.select(
       when(col("p_partkey") % 3 === 0, pname)
@@ -394,7 +395,7 @@ object SparkEntry {
     * no issue row -> dropped by the validated-membership join. The %997
     * issue universe is defined HERE only. */
   private def issuesOf(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/part.parquet")
+    ParquetTableIO.read(s, s"$dir/part.parquet")
       .select((col("p_partkey") % 997).cast("long").as("issue_id")).distinct()
       .withColumn("state",
         element_at(array(lit("open"), lit("closed"), lit("merged")),
@@ -415,7 +416,7 @@ object SparkEntry {
     * issue), map-side combinable collect_list state. */
   private def qIssueNodesRich(s: SparkSession, dir: String): DataFrame = {
     val epoch = to_date(lit("1995-01-01"))
-    val base = s.read.parquet(s"$dir/part.parquet").select(
+    val base = ParquetTableIO.read(s, s"$dir/part.parquet").select(
       (col("p_partkey") % 997).cast("long").as("issue_id"),
       col("p_partkey").cast("long").as("cid"),
       regexp_replace(col("p_brand"), "[ #]", "_").as("label"),
@@ -491,7 +492,7 @@ object SparkEntry {
     // re-read the two-long (vec_id, cluster) table instead of re-running
     // assignment + means + reassignment each (VERDICT r03 #6)
     val clusters = graft.graph.StageStore.getOrCreate(s, dir, "node_clusters") {
-      graft.ops.Clustering.lloydStep(s.read.parquet(s"$dir/embeddings.parquet"))
+      graft.ops.Clustering.lloydStep(ParquetTableIO.read(s, s"$dir/embeddings.parquet"))
     }.withColumnRenamed("vec_id", "node_id")
     // both sides corpus-scaling, both distinct per node_id -> plain equi
     // join; AQE picks broadcast only while the cluster side actually fits
@@ -527,7 +528,7 @@ object SparkEntry {
     * property (`merged_by`) — the reference's nullable Int64 FK coercion
     * (knowledge_graph.py:274-279). NULLs cross the comparison boundary. */
   private def qPrEdges(s: SparkSession, dir: String): DataFrame = {
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+    val prs = ParquetTableIO.read(s, s"$dir/supplier.parquet").select(
       col("s_suppkey").cast("long").as("pr_id"),
       concat(lit("supplier:"), col("s_name")).as("canonical_name"),
       when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
@@ -559,12 +560,12 @@ object SparkEntry {
     * supplier — bounded; collect_list state is map-side combinable. */
   private def qPrNodesRich(s: SparkSession, dir: String): DataFrame = {
     val epoch = to_date(lit("1995-01-01"))
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+    val prs = ParquetTableIO.read(s, s"$dir/supplier.parquet").select(
       col("s_suppkey").cast("long").as("pr_id"),
       col("s_name"),
       when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
         .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
-    val cm0 = s.read.parquet(s"$dir/lineitem.parquet").select(
+    val cm0 = ParquetTableIO.read(s, s"$dir/lineitem.parquet").select(
       col("l_suppkey").cast("long").as("pr_id"),
       (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("cid"),
       col("l_orderkey").cast("long").as("ok"))
@@ -595,7 +596,7 @@ object SparkEntry {
     * The ArrayType(Float) column lives on the frame internally; the
     * comparison boundary is scalar (ppm-quantized CSV + dim count). */
   private def qNodesVec(s: SparkSession, dir: String): DataFrame = {
-    val e = s.read.parquet(s"$dir/embeddings.parquet").select(
+    val e = ParquetTableIO.read(s, s"$dir/embeddings.parquet").select(
       col("vec_id").cast("long").as("node_id"), col("embedding"))
     graft.graph.Pipeline.nodes(s, dir)
       .join(e, Seq("node_id"), "left")
@@ -620,7 +621,7 @@ object SparkEntry {
       .filter(col("pred") === "supplies")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("subj").as("canonical_name"))
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+    val prs = ParquetTableIO.read(s, s"$dir/supplier.parquet").select(
       concat(lit("supplier:"), col("s_name")).as("canonical_name"),
       col("s_suppkey").cast("long").as("pr_id"))
     val linked = valid.join(supplied, Seq("conv_id", "turn_idx"))
@@ -635,7 +636,7 @@ object SparkEntry {
     * the PR-author vocabulary. Contact strings are deterministically
     * built (conditional concat, X-family), never parsed. */
   private def qDevNodes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/nation.parquet").select(
+    ParquetTableIO.read(s, s"$dir/nation.parquet").select(
       col("n_nationkey").cast("long").as("dev_id"),
       col("n_name").as("dev_name"),
       concat(lower(regexp_replace(col("n_name"), " ", "_")),
@@ -647,7 +648,7 @@ object SparkEntry {
     * knowledge_graph.py:1407-1417): each PR's linked entity attributed to
     * the PR author (the supplier's nation). The node side is size-gated. */
   private def qDevEdges(s: SparkSession, dir: String): DataFrame = {
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+    val prs = ParquetTableIO.read(s, s"$dir/supplier.parquet").select(
       col("s_suppkey").cast("long").as("pr_number"),
       col("s_nationkey").cast("long").as("dev_id"),
       concat(lit("supplier:"), col("s_name")).as("canonical_name"))
@@ -664,7 +665,7 @@ object SparkEntry {
     * artifact rows have. Size is integer-derived so engines agree
     * exactly; timestamps cross the comparison boundary natively. */
   private def qArtifactNodes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet").select(
+    ParquetTableIO.read(s, s"$dir/orders.parquet").select(
       col("o_orderkey").cast("long").as("artifact_id"),
       concat(lit("artifact-"), col("o_orderkey").cast("string"))
         .as("artifact_name"),

@@ -12,7 +12,6 @@ import scala.util.Try
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.schema.{Lineage, Metric}
 
@@ -148,10 +147,6 @@ object StageStore {
   // once, while nested builds of different stages (dup_clusters_* ->
   // dup_pairs_*) take different locks and cannot deadlock
   private val locks = new ConcurrentHashMap[String, AnyRef]()
-  // committed schema per stage dir (the commit's own, or inferred once on
-  // a cold resume): every later read skips parquet schema inference. A
-  // file-source read makes every field nullable, as inference does.
-  private val schemas = new ConcurrentHashMap[String, StructType]()
 
   /** Materialize `build` at `<base>/<stage>` unless already committed;
     * return a reader of the committed table. A commit runs the write's
@@ -164,7 +159,7 @@ object StageStore {
       locks.computeIfAbsent(dir, _ => new Object).synchronized {
         if (!io.exists(spark, dir)) commit(spark, base, stage, dir, build)
       }
-    io.read(spark, dir, schemas.computeIfAbsent(dir, _ => io.schema(spark, dir)))
+    io.read(spark, dir)
   }
 
   /** Write `build` to `dir` and record its observability without another
@@ -188,7 +183,6 @@ object StageStore {
       Some(Observation(s"commit:$stage:${UUID.randomUUID()}")) else None
     io.overwrite(obs.fold(df)(o => df.observe(o, approx_count_distinct(col("conv_id")))), dir)
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    schemas.put(dir, df.schema)
     val parts = io.partRows(spark, dir).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
     val rows = parts.map(_._2).sum
     // the observed row arrives over the listener bus right after the write

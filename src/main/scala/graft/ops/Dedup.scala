@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -293,7 +294,7 @@ object Dedup {
     // rows), dup_clusters the collapse result — warm callers pay ONE
     // table read, no digest re-derivation, no CC rounds
     graft.graph.StageStore.getOrCreate(s, dir, s"dup_clusters_$t") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetTableIO.read(s, s"$dir/documents.parquet")
       val pairs = graft.graph.StageStore.getOrCreate(s, dir, s"dup_pairs_$t") {
         dupClustersWithPairs(docs, null, threshold = threshold)._1
       }
@@ -373,7 +374,7 @@ object Dedup {
     * is the thing to avoid. */
   def dupIndex(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.graph.StageStore.getOrCreate(s, dir, "dup_index") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetTableIO.read(s, s"$dir/documents.parquet")
       val reps = docs.select(col("doc_id"), md5(col("text")).as("_h"))
         .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 
 /** Sources for the transcript table (input_hint shape:
   * conv_id:string, turn_idx:int, role:string, text:string, tool:string,
@@ -50,11 +51,11 @@ object Transcripts {
   def fromTpch(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
-    val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val p = spark.read.parquet(s"$sfDir/part.parquet")
-    val s = spark.read.parquet(s"$sfDir/supplier.parquet")
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val o = ParquetTableIO.read(spark, s"$sfDir/orders.parquet")
+    val l = ParquetTableIO.read(spark, s"$sfDir/lineitem.parquet")
+    val p = ParquetTableIO.read(spark, s"$sfDir/part.parquet")
+    val s = ParquetTableIO.read(spark, s"$sfDir/supplier.parquet")
+    val c = ParquetTableIO.read(spark, s"$sfDir/customer.parquet")
 
     val cname = concat(lit("customer:"), regexp_replace($"c_name", " ", "_"))
     val pname = concat(lit("part:"), regexp_replace($"p_name", " ", "_"))

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 
 /** noop-sink isolation of the dup-cluster derivation chain (guide §1.4):
   * times each sub-stage of verifiedPairs + the CC collapse so the wall
@@ -30,7 +31,7 @@ object DedupProbe {
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = ParquetTableIO.read(spark, s"$sfDir/documents.parquet")
     // warmup pass so codegen/JIT costs don't land on the first stage
     noop(docs.select(md5(col("text"))))
 

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 
 /** A/B evidence for the checkAgainstIndex candidate pre-filter (VERDICT
   * r05 #1): probe a SMALL incoming batch (the append-ingest shape) against
@@ -28,7 +29,7 @@ object ProbeIncremental {
     // corpus stays a parquet-backed plan so Joins.fitsBroadcast sees real
     // file-size stats (a checkpointed frame has no estimate and would
     // force the semi-join arm in BOTH runs)
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = ParquetTableIO.read(spark, s"$dir/documents.parquet")
     val corpus = d.filter(col("doc_id") % batchMod =!= 7)
     val incoming = d.filter(col("doc_id") % batchMod === 7).localCheckpoint()
     val reps0 = corpus.select(col("doc_id"), md5(col("text")).as("_h"))

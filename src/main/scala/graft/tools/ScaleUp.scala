@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 
 /** Pressure-test corpus builder: replicate a TPC-H-derived test corpus
   * `copies`x by shifting CONVERSATION keys while keeping the dimension
@@ -34,7 +35,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = ParquetTableIO.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
 

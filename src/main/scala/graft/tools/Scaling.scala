@@ -7,6 +7,7 @@ import graft.sources.Transcripts
 import graft.extract.Extract
 import graft.link.Resolve
 import graft.triples.Triples
+import graft.graph.ParquetTableIO
 
 /** Two-parallelism scaling evidence (north rule: throughput scaling
   * efficiency >= 0.8 between N and 4N executors; sandbox substitute: the
@@ -61,7 +62,7 @@ object Scaling {
           c
         } else {
           df.write.mode("overwrite").parquet(s"$tmp/$name")
-          spark.read.parquet(s"$tmp/$name")
+          ParquetTableIO.read(spark, s"$tmp/$name")
         }
       }
       // Untimed warmup on a miniature corpus: JIT + whole-stage-codegen

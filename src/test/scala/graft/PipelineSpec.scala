@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{Pipeline, StageStore}
@@ -14,16 +11,6 @@ import graft.graph.{Pipeline, StageStore}
 /** Checkpoint/resume semantics of the staged pipeline (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics"). */
 class PipelineSpec extends SparkSpec {
-
-  private def withStageRoot[A](f: => A): A = {
-    val dir = Files.createTempDirectory("graft_test_stages").toString
-    val old = sys.props.get("graft.stage.dir")
-    sys.props("graft.stage.dir") = dir
-    try f finally old match {
-      case Some(v) => sys.props("graft.stage.dir") = v
-      case None => sys.props.remove("graft.stage.dir")
-    }
-  }
 
   test("stages are computed once and reused; pipeline is resumable") {
     withStageRoot {
@@ -131,27 +118,6 @@ class PipelineSpec extends SparkSpec {
         "{\"stage\":\"mentions\",\"name\":\"output_rows\",\"value\":-1.0}\n".getBytes("UTF-8"))
       assert(rowSet(StageStore.metrics(spark, sfDir)) === before)
     }
-  }
-
-  /** Jobs started on this thread while `f` runs. */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
   }
 
   test("a stage commit runs only its write job; reading a committed stage runs none") {

@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.Files
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +26,38 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Run `f` with the stage store rooted in a fresh temp dir. */
+  def withStageRoot[A](f: => A): A = {
+    val dir = Files.createTempDirectory("graft_test_stages").toString
+    val old = sys.props.get("graft.stage.dir")
+    sys.props("graft.stage.dir") = dir
+    try f finally old match {
+      case Some(v) => sys.props("graft.stage.dir") = v
+      case None => sys.props.remove("graft.stage.dir")
+    }
+  }
+
+  /** Jobs started on this thread while `f` runs. */
+  def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${UUID.randomUUID()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 
   /** Order-insensitive comparison (the reference's CFG-test style:
     * set semantics over emitted rows, test_cfg_parser.py:32-84). */
