@@ -450,7 +450,7 @@ object OpsEntry {
       |              CAST(length(bin(nd.n_docs // dfq.df)) AS BIGINT) AS idf
       |       FROM tfq JOIN dfq USING(term) CROSS JOIN nd)""".stripMargin
 
-  /** Word n-gram shingle CTE (mirrors Dedup.shingles for docs with >= n
+  /** Word n-gram shingle CTE (mirrors Kernels.WordNgrams for docs with >= n
     * words; shorter docs yield NULL shingles, filtered by `shf` — the
     * strict-sub-ngram drop). `src` lets a caller pre-project text (e.g.
     * the normalized-text decontamination). */

@@ -148,7 +148,9 @@ object Pipeline {
     * serializing ~3 s of version work after the edge count. Stage
     * ordering WITHIN each branch is unchanged, so per-stage recorded
     * walls still cover their own work (modulo shared-host concurrency,
-    * which the lineage rows disclose). Returns the emitted edge count. */
+    * which the lineage rows disclose). Returns the emitted edge count:
+    * the committed edge table's footer row sum (its `output_rows`), so
+    * no count job runs. */
   def runAll(spark: SparkSession, sfDir: String): Long = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -162,9 +164,9 @@ object Pipeline {
     nodes(spark, sfDir)
     triples(spark, sfDir)
     mintedNodes(spark, sfDir)
-    val e = edges(spark, sfDir).count()
+    edges(spark, sfDir)
     Await.result(versionBranch, Duration.Inf)
-    e
+    StageStore.committedRows(spark, sfDir, "edges")
   }
 
   /** spark-submit entry point: `graft.graph.Pipeline <sfDir>`. */

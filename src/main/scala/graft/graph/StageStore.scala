@@ -162,6 +162,11 @@ object StageStore {
     io.read(spark, dir)
   }
 
+  /** Row count of a committed stage from its part-file footers (the
+    * `output_rows` its commit recorded) — driver-side, no Spark job. */
+  def committedRows(spark: SparkSession, inputKey: String, stage: String): Long =
+    io.partRows(spark, s"${baseFor(inputKey)}/$stage").map(_._2).sum
+
   /** Write `build` to `dir` and record its observability without another
     * Spark job:
     *   - per-partition lineage rows, and `output_rows` as their sum, come

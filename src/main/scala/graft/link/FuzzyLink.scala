@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.{Dedup, Kernels}
 
 /** Fuzzy entity linking: map noisy surface forms onto a canonical
   * dictionary — the north star's profiled hot stage ("batched per-partition
@@ -15,17 +16,20 @@ import org.apache.spark.sql.functions._
   * become an equi-join on band buckets instead of a surface × dictionary
   * cross join), then scored by exact trigram Jaccard and resolved to the
   * best candidate with a total deterministic tiebreak (score desc, name
-  * asc). Everything is md5-based column expressions — codegen'd, and
-  * reproducible in the DuckDB oracle.
+  * asc). Everything is md5-based — column expressions plus the compiled
+  * signature kernel (graft.ops.Kernels) — and reproducible in the DuckDB
+  * oracle.
   */
 object FuzzyLink {
 
-  /** Trigrams over an already-materialized padded-name COLUMN ("^name$").
-    * The lambda must reference a bound attribute — a non-attribute subtree
-    * re-evaluates once per element inside a higher-order function (see
-    * Dedup.shinglesOfWords). Empty names yield an empty set (Spark's
-    * `sequence(1, 0)` would otherwise produce a bogus descending range
-    * where the DuckDB oracle's `range()` is empty). */
+  /** Trigram SET over an already-materialized padded-name COLUMN
+    * ("^name$"), for candidate scoring (blocking signatures shingle inside
+    * the compiled Kernels.minhashSig instead). Still a higher-order
+    * `transform`, so its lambda runs interpreted and must reference a
+    * bound attribute — a non-attribute subtree re-evaluates once per
+    * element (see Dedup.shinglesOfWords). Empty names yield an empty set
+    * (Spark's `sequence(1, 0)` would otherwise produce a bogus descending
+    * range where the DuckDB oracle's `range()` is empty). */
   def trigramsOfPadded(padded: Column): Column =
     when(length(padded) >= 3,
       array_distinct(transform(
@@ -37,29 +41,17 @@ object FuzzyLink {
   def charTrigramsCol(name: Column): Column =
     trigramsOfPadded(concat(lit("^"), name, lit("$")))
 
-  /** MinHash band buckets over char trigrams (k seeds, rowsPerBand).
-    * Signatures via explode + groupBy-min aggregates (one shuffle,
-    * map-side combinable) — the corpus-scale shape of Dedup
-    * .minhashSignatures; names with no trigrams get no bucket (no
+  /** MinHash band buckets over char trigrams (k seeds, rowsPerBand), one
+    * row per (distinct name, band): the compiled per-row signature
+    * ([[Kernels.minhashSig]] with the `^name$` trigram shingler), a
+    * groupBy-min per name and the shared band builder — the shape of
+    * Dedup.minhashBuckets. Names with no trigrams get no bucket (no
     * candidates), which matches the oracle's empty-set semantics. */
   def nameBuckets(df: DataFrame, nameCol: String, k: Int = 8,
-      rowsPerBand: Int = 2): DataFrame = {
-    val tg = df
-      .select(col(nameCol), concat(lit("^"), col(nameCol), lit("$")).as("_p"))
-      .select(col(nameCol), explode(trigramsOfPadded(col("_p"))).as("_tg"))
-    val sigs = (0 until k).map(s =>
-      min(md5(concat(lit(s"$s|"), col("_tg")))).as(s"m$s"))
-    val withSig = tg.groupBy(col(nameCol)).agg(sigs.head, sigs.tail: _*)
-    val nBands = k / rowsPerBand
-    // single pass over the signatures (see Dedup.minhashBuckets)
-    val bandStructs = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
-      struct(lit(b).cast("long").as("band"), md5(concat(parts: _*)).as("bucket"))
-    }
-    withSig
-      .select(col(nameCol), inline(array(bandStructs: _*)))
-      .select(col(nameCol), col("band"), col("bucket"))
-  }
+      rowsPerBand: Int = 2): DataFrame =
+    Dedup.bandsOf(Dedup.minPerKey(df.select(col(nameCol),
+      Kernels.minhashSig(col(nameCol), Kernels.CharTrigrams, k).as("_sig")), nameCol, k),
+      Seq(nameCol), k, rowsPerBand)
 
   /** Link surfaces to dictionary names.
     * Output: (surface, matched, score_ppm, method ∈ {exact, fuzzy}) —

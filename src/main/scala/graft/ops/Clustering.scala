@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Semantic clustering side-car (reference semantic_clustering.py:37-102 +
@@ -26,16 +26,22 @@ object Clustering {
       transform(col(vecCol), x => round(x.cast("double") * 1e6).cast("long"))
         .as("xq"))
 
-  /** Integer squared L2 distance between two quantized vectors. */
-  def dist2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
+  /** Integer-rounded centroid (cid, cq) of every cluster of an assigned
+    * quantized frame (vec_id, xq, cluster): a (k x dims)-group mean, then
+    * the dim-sorted means as one array per cluster (a struct-field
+    * extraction, no per-element lambda). */
+  private def centroids(withA: DataFrame): DataFrame =
+    withA.select(col("cluster"), posexplode(col("xq")).as(Seq("dim", "v")))
+      .groupBy(col("cluster"), col("dim"))
+      .agg(round(avg(col("v"))).cast("long").as("cv"))
+      .groupBy(col("cluster").as("cid"))
+      .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).getField("cv").as("cq"))
 
   /** Nearest centroid per vector: argmin over (d2, cid) via a struct-min
     * aggregate (partial-aggregation friendly; no per-vector sort). */
   private def assign(q: DataFrame, cents: DataFrame): DataFrame =
     q.crossJoin(broadcast(cents))
-      .withColumn("d2", dist2(col("xq"), col("cq")))
+      .withColumn("d2", Kernels.sqDist(col("xq"), col("cq")))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("cluster"))
 
@@ -91,14 +97,7 @@ object Clustering {
       // writing it to a stage table pays one pass, not two, and its plan
       // still shows the broadcast-assign shape
       val prev = a.localCheckpoint()
-      val means = q.join(prev, Seq("vec_id"))
-        .select(col("cluster"), posexplode(col("xq")).as(Seq("dim", "v")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(round(avg(col("v"))).cast("long").as("cv"))
-      val c = means.groupBy(col("cluster").as("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-          s => s.getField("cv")).as("cq"))
-      a = assign(q, c)
+      a = assign(q, centroids(q.join(prev, Seq("vec_id"))))
     }
     a
   }
@@ -110,15 +109,8 @@ object Clustering {
 
   private def sseOnQ(q: DataFrame, assignment: DataFrame): Long = {
     val withA = q.join(assignment, Seq("vec_id"))
-    val cents = withA
-      .select(col("cluster"), posexplode(col("xq")).as(Seq("dim", "v")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg(round(avg(col("v"))).cast("long").as("cv"))
-      .groupBy(col("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        s => s.getField("cv")).as("cq"))
-    withA.join(cents, Seq("cluster"))
-      .select(dist2(col("xq"), col("cq")).as("d2"))
+    withA.join(centroids(withA).withColumnRenamed("cid", "cluster"), Seq("cluster"))
+      .select(Kernels.sqDist(col("xq"), col("cq")).as("d2"))
       .agg(sum(col("d2"))).collect()(0).getLong(0)
   }
 
@@ -150,15 +142,8 @@ object Clustering {
     * null that would NPE at the collect boundary. */
   private def scoreOnQ(q: DataFrame, assignment: DataFrame): (Long, Long, Long) = {
     val withA = q.join(assignment, Seq("vec_id"))
-    val cents = withA
-      .select(col("cluster"), posexplode(col("xq")).as(Seq("dim", "v")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg(round(avg(col("v"))).cast("long").as("cv"))
-      .groupBy(col("cluster").as("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        s => s.getField("cv")).as("cq"))
-    val d = withA.crossJoin(broadcast(cents))
-      .withColumn("d2", dist2(col("xq"), col("cq")))
+    val d = withA.crossJoin(broadcast(centroids(withA)))
+      .withColumn("d2", Kernels.sqDist(col("xq"), col("cq")))
     val perVec = d.groupBy(col("vec_id"), col("cluster"))
       .agg(min(when(col("cid") === col("cluster"), col("d2"))).as("a"),
         min(when(col("cid") =!= col("cluster"), col("d2"))).as("b"))
@@ -200,8 +185,8 @@ object Clustering {
   private def sweepStats(q: DataFrame): (Long, Int, Long) = {
     val r = q.agg(count(lit(1)),
       coalesce(max(size(col("xq"))), lit(0)),
-      coalesce(max(aggregate(col("xq"), lit(0L),
-        (a, x) => greatest(a, abs(x)))), lit(0L))).head
+      coalesce(max(greatest(abs(array_max(col("xq"))), abs(array_min(col("xq"))))),
+        lit(0L))).head
     (r.getLong(0), r.getInt(1), r.getLong(2))
   }
 

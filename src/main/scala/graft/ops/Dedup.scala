@@ -14,13 +14,15 @@ import graft.graph.ParquetTableIO
   */
 object Dedup {
 
-  /** Shingles over an already-materialized words-array COLUMN. Higher-order
-    * functions evaluate their lambda interpreted, re-computing any
-    * non-attribute subtree once per element — so `w` must be a bound
-    * attribute (project `split(text)` in a previous select), never the
-    * `split` expression itself (measured ~250 redundant splits/doc
-    * otherwise). `orig` is the fallback single shingle for texts shorter
-    * than n words. */
+  /** Shingle ARRAY over an already-materialized words-array COLUMN — the
+    * set form that Jaccard verification and decontamination intersect or
+    * explode (signatures never build it: [[Kernels.minhashSig]] shingles
+    * inside its compiled kernel). This is still a higher-order `transform`,
+    * so its lambda runs interpreted and re-computes any non-attribute
+    * subtree once per element — `w` must be a bound attribute (project
+    * `split(text)` in a previous select), never the `split` expression
+    * itself (measured ~250 redundant splits/doc otherwise). `orig` is the
+    * fallback single shingle for texts shorter than n words. */
   def shinglesOfWords(w: Column, orig: Column, n: Int): Column =
     when(size(w) >= n,
       transform(
@@ -28,47 +30,34 @@ object Dedup {
         i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j)): _*)))
       .otherwise(array(orig))
 
-  /** Word n-gram shingles of a text column (assumes >= n words, falls back
-    * to the whole text otherwise). Convenience form for per-row use on
-    * SMALL inputs (candidate verification); corpus-scale paths go through
-    * [[shinglesOfWords]] with a materialized words column. */
-  def shingles(text: Column, n: Int): Column =
-    shinglesOfWords(split(text, " "), text, n)
-
-  /** One minhash value: lexicographic min of md5(seed || '|' || shingle).
-    * A distinct min-wise hash per seed.
+  /** MinHash signatures at corpus scale: the compiled per-row kernel
+    * ([[Kernels.minhashSig]], k seeded `md5` minima per doc) then a
+    * `groupBy(id)`-min over the k per-row columns — one shuffle of one row
+    * per doc, map-side combinable (min is associative). Emits one row per
+    * id, (idCol, <prefix>0 .. <prefix>{k-1}), for ANY input: duplicate ids
+    * merge into the min over all their shingles.
     *
-    * NOTE: as a nested higher-order expression this evaluates the whole
-    * shingle subtree per seed and resists codegen — fine for a handful of
-    * short arrays, pathological over a corpus. The corpus-scale path is
-    * [[minhashSignatures]] (identical md5 values, ~180x faster). */
-  def minhash(shingleCol: Column, seed: Int): Column =
-    array_min(transform(shingleCol, s => md5(concat(lit(s"$seed|"), s))))
-
-  /** MinHash signatures at corpus scale: explode the distinct shingles once
-    * and compute all k signatures as codegen'd `min(md5(seed || shingle))`
-    * aggregates grouped by doc id — one shuffle, map-side combinable (min
-    * is associative), linear in total shingle count. Emits one row per doc:
-    * (idCol, <prefix>0 .. <prefix>{k-1}). Values are bit-identical to
-    * [[minhash]] (min over duplicates == min over distinct). */
+    * STRICT n-grams (the decontaminate/repetition rule, applied family-
+    * wide): a doc with fewer than `ngram` words has no n-gram and emits no
+    * signature — every shingle-CTE oracle already drops such docs, so the
+    * whole-text fallback was a latent cross-engine desync that only the
+    * corpus's word-count convention papered over. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      ngram: Int, k: Int, prefix: String = "m"): DataFrame = {
-    // words materialized as an attribute BEFORE the shingle lambda (see
-    // shinglesOfWords: a non-attribute subtree re-evaluates per element).
-    // STRICT n-grams (the decontaminate/repetition rule, applied family-
-    // wide): a doc with fewer than `ngram` words has no n-gram and emits
-    // no signature — every shingle-CTE oracle already drops such docs,
-    // so the whole-text fallback was a latent cross-engine desync that
-    // only the corpus's word-count convention papered over
-    val words = docs.select(col(idCol), col(textCol).as("_t"),
-      split(col(textCol), " ").as("_w"))
-      .filter(size(col("_w")) >= ngram)
-    val sh = words.select(col(idCol),
-      explode(array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram))).as("_sg"))
-    val aggs = (0 until k).map(s =>
-      min(md5(concat(lit(s"$s|"), col("_sg")))).as(s"$prefix$s"))
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
+      ngram: Int, k: Int, prefix: String = "m"): DataFrame =
+    minPerKey(docs.select(col(idCol), wordSig(col(textCol), ngram, k)), idCol, k)
+      .select(col(idCol) +: (0 until k).map(s => col("_sig")(s).as(s"$prefix$s")): _*)
+
+  /** The per-row word n-gram signature as column `_sig`. */
+  private def wordSig(text: Column, ngram: Int, k: Int): Column =
+    Kernels.minhashSig(text, Kernels.WordNgrams(ngram), k).as("_sig")
+
+  /** `groupBy(key)`-min, seed by seed, of the per-row signature array
+    * `_sig` (k values): one row per key, with `_sig`. A key whose every
+    * row has a null signature (no shingle) emits no row. */
+  private[graft] def minPerKey(perRow: DataFrame, key: String, k: Int): DataFrame =
+    perRow.groupBy(col(key))
+      .agg(array((0 until k).map(s => min(col("_sig")(s))): _*).as("_sig"))
+      .filter(col("_sig")(0).isNotNull)
 
   /** Exact dedup: group identical texts, keep the minimum id as the
     * canonical representative (hash-groupBy; one shuffle on the digest). */
@@ -96,22 +85,25 @@ object Dedup {
   def minhashBuckets(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", ngram: Int = 3, k: Int = 8,
       rowsPerBand: Int = 2): DataFrame =
-    bandsOf(minhashSignatures(docs, idCol, textCol, ngram, k), idCol, k,
-      rowsPerBand)
+    bandsOf(minPerKey(docs.select(col(idCol), wordSig(col(textCol), ngram, k)), idCol, k),
+      Seq(idCol), k, rowsPerBand)
 
-  /** LSH band buckets of a signature frame (idCol, m0..m{k-1}) — one
-    * pass: a union of per-band selects would recompute the signature
-    * subtree once per band (same trap Transcripts.fromTpch avoids). */
-  private def bandsOf(withSig: DataFrame, idCol: String, k: Int,
+  /** LSH band buckets — the one band builder of every MinHash blocking
+    * path (doc signatures, per-row probes, name trigrams): the `keep`
+    * columns plus (band, bucket = md5 of the band's rowsPerBand values of
+    * the signature array `_sig`), one row per band. One pass: a union of
+    * per-band selects would recompute the signature subtree once per band
+    * (same trap Transcripts.fromTpch avoids). A row with a null signature
+    * emits no band. */
+  private[graft] def bandsOf(withSig: DataFrame, keep: Seq[String], k: Int,
       rowsPerBand: Int): DataFrame = {
-    val nBands = k / rowsPerBand
-    val bandStructs = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
+    val sig = col("_sig")
+    val bandStructs = (0 until k / rowsPerBand).map { b =>
+      val parts = (0 until rowsPerBand).map(r => sig(b * rowsPerBand + r))
       struct(lit(b).cast("long").as("band"), md5(concat(parts: _*)).as("bucket"))
     }
-    withSig
-      .select(col(idCol), inline(array(bandStructs: _*)))
-      .select(col(idCol), col("band"), col("bucket"))
+    withSig.select(keep.map(col) :+
+      inline(when(sig(0).isNotNull, array(bandStructs: _*))): _*)
   }
 
   /** Candidate near-dup pairs: same (band, bucket), a < b, deduped across
@@ -244,11 +236,12 @@ object Dedup {
     * verifyJaccard, and candidatePairs' two bucket consumers (size table
     * + join-back) re-executed the whole signature chain a second time —
     * three corpus text passes where one suffices (guide §1.2 "don't
-    * compute things twice"). The shingle-array and bucket frames are
-    * localCheckpointed (executor-local memory+disk); a production-scale
-    * deployment would commit them as stage tables instead. Values are
-    * bit-identical to the previous chain (same shingles, same seeded
-    * minima, same bands). */
+    * compute things twice"). The per-row signature is computed in the
+    * same pass and checkpointed with the shingle array. The shingle-array
+    * and bucket frames are localCheckpointed (executor-local
+    * memory+disk); a production-scale deployment would commit them as
+    * stage tables instead. Values are bit-identical to the previous chain
+    * (same shingles, same seeded minima, same bands). */
   def verifiedPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.5): DataFrame = {
     val ngram = 3; val k = 8; val rowsPerBand = 2
@@ -256,13 +249,11 @@ object Dedup {
       .select(col(idCol), col(textCol).as("_t"), split(col(textCol), " ").as("_w"))
       .filter(size(col("_w")) >= ngram)
       .select(col(idCol),
-        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("sh"))
+        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("sh"),
+        wordSig(col("_t"), ngram, k))
       .localCheckpoint()
-    val sh = withSh.select(col(idCol), explode(col("sh")).as("_sg"))
-    val aggs = (0 until k).map(s =>
-      min(md5(concat(lit(s"$s|"), col("_sg")))).as(s"m$s"))
-    val withSig = sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    val buckets = bandsOf(withSig, idCol, k, rowsPerBand).localCheckpoint()
+    val buckets = bandsOf(minPerKey(withSh, idCol, k), Seq(idCol), k, rowsPerBand)
+      .localCheckpoint()
     candidatePairs(buckets, idCol)
       .join(withSh.select(col(idCol).as("a"), col("sh").as("sha")), "a")
       .join(withSh.select(col(idCol).as("b"), col("sh").as("shb")), "b")
@@ -337,34 +328,21 @@ object Dedup {
       .agg(count(lit(1)).as("n_hits"))
   }
 
-  /** Per-ROW minhash band buckets (no explode/groupBy): each row
-    * computes its own k signatures via the nested-HOF [[minhash]] —
-    * fine at per-row granularity (a handful of short arrays; the
-    * corpus-scale explode path is [[minhashBuckets]], bit-identical
-    * values) — then emits one row per band. Aggregation-free, so it
-    * runs UNCHANGED on a streaming frame in append mode (the property
-    * [[checkAgainstIndex]] needs: probing is a stateless projection +
-    * stream-static joins, no watermarked aggregation state). */
+  /** Per-ROW minhash band buckets (no groupBy): each row's own k
+    * signatures from the compiled [[Kernels.minhashSig]] (bit-identical
+    * to [[minhashBuckets]] for distinct ids), then one row per band.
+    * Aggregation-free, so it runs UNCHANGED on a streaming frame in
+    * append mode (the property [[checkAgainstIndex]] needs: probing is a
+    * stateless projection + stream-static joins, no watermarked
+    * aggregation state). Strict n-grams, matching minhashBuckets and
+    * every shingle oracle — on the streaming ingest path no corpus
+    * word-count convention protects a fallback, so strictness here is
+    * load-bearing. */
   def rowBuckets(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", ngram: Int = 3, k: Int = 8,
-      rowsPerBand: Int = 2): DataFrame = {
-    // strict n-grams, matching minhashBuckets and every shingle oracle —
-    // on the streaming ingest path no corpus word-count convention
-    // protects the fallback, so strictness here is load-bearing
-    val withSh = docs.select(col(idCol), col(textCol).as("_t"),
-      split(col(textCol), " ").as("_w"))
-      .filter(size(col("_w")) >= ngram)
-      .select(col(idCol),
-        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("_sg"))
-    val sigs = (0 until k).map(s => minhash(col("_sg"), s).as(s"m$s"))
-    val withSig = withSh.select(col(idCol) +: sigs: _*)
-    val nBands = k / rowsPerBand
-    val bandStructs = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
-      struct(lit(b).cast("long").as("band"), md5(concat(parts: _*)).as("bucket"))
-    }
-    withSig.select(col(idCol), inline(array(bandStructs: _*)))
-  }
+      rowsPerBand: Int = 2): DataFrame =
+    bandsOf(docs.select(col(idCol), wordSig(col(textCol), ngram, k)), Seq(idCol), k,
+      rowsPerBand)
 
   /** Committed near-dup index of a corpus dir: the minhash band buckets
     * of the corpus's exact-dup representatives (same pre-collapse as
@@ -413,16 +391,9 @@ object Dedup {
       col(textCol).as("_t"), split(col(textCol), " ").as("_w"))
       .filter(size(col("_w")) >= ngram) // strict: see rowBuckets
       .select(col("new_id"),
-        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("_sgn"))
-    val sigs = (0 until k).map(s => minhash(col("_sgn"), s).as(s"m$s"))
-    val withSig = withSh.select(col("new_id") +: col("_sgn") +: sigs: _*)
-    val nBands = k / rowsPerBand
-    val bandStructs = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
-      struct(lit(b).cast("long").as("band"), md5(concat(parts: _*)).as("bucket"))
-    }
-    val probe = withSig
-      .select(col("new_id"), col("_sgn"), inline(array(bandStructs: _*)))
+        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("_sgn"),
+        wordSig(col("_t"), ngram, k))
+    val probe = bandsOf(withSh, Seq("new_id", "_sgn"), k, rowsPerBand)
     val cand0 = probe
       .join(graft.canonical.Joins.dim(
         index.select(col(idCol).as("corpus_id"), col("band"), col("bucket"))),

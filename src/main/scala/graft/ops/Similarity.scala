@@ -13,17 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
-
-  /** aggregate(zip_with(a,b,*), 0.0, +) — codegen'd dot product, no explode.
-    * Deterministic left-fold order -> reproducible float math. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(asDouble(a), x => x * x), lit(0.0), (acc, x) => acc + x))
-
   /** Exact top-k cosine neighbors for queries (vec_id < nQueries).
     * The query side is tiny -> broadcast; the corpus side streams, so the
     * plan is a single pass over N rows regardless of cluster size. The
@@ -35,9 +24,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val joined = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
       // parts-per-million integer score: exact cross-engine comparison
-      .withColumn("cos_ppm",
-        round(dot(col("qe"), col("embedding")) /
-          (norm(col("qe")) * norm(col("embedding"))) * 1e6).cast("long"))
+      .withColumn("cos_ppm", cosPpm(col("qe"), col("embedding")))
     graft.canonical.TopK.perGroup(joined, Seq("query_id"),
       Seq(col("cos_ppm").desc, col("vec_id")), k, "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -53,23 +40,11 @@ object Similarity {
     if ((h(0) & 0x80) != 0) 1.0 else -1.0
   }
 
-  /** Deterministic ±1 random-hyperplane table as a DataFrame (kept for
-    * callers that want the relational form; [[lshBuckets]] embeds the
-    * same weights as literal arrays instead). */
-  def planes(spark: org.apache.spark.sql.SparkSession, nPlanes: Int, dim: Int): DataFrame = {
-    val p = spark.range(nPlanes).select(col("id").as("p"))
-    val d = spark.range(dim).select(col("id").as("d"))
-    p.crossJoin(d).withColumn("w",
-      when(substring(md5(concat(col("p").cast("string"), lit("|"),
-        col("d").cast("string"))), 1, 1) >= "8", 1.0)
-        .otherwise(-1.0))
-  }
-
   /** Integer cosine score (parts-per-million): the argmin/argmax orderings
     * below compare quantized longs, so a last-ulp float difference between
     * engines can never flip a cell assignment or a rank. */
   private def cosPpm(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)) * 1e6).cast("long")
+    round(Kernels.dot(a, b) / (Kernels.norm(a) * Kernels.norm(b)) * 1e6).cast("long")
 
   /** Rank every vector of `vectors` against a codebook frame
     * (cell, ce): one row per (vec_id, cell) with the similarity rank
@@ -187,9 +162,7 @@ object Similarity {
     cand
       .join(emb.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
       .join(emb.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos_ppm",
-        round(dot(col("ea"), col("eb")) / (norm(col("ea")) * norm(col("eb"))) * 1e6)
-          .cast("long"))
+      .withColumn("cos_ppm", cosPpm(col("ea"), col("eb")))
       .filter(col("cos_ppm") >= minCosPpm)
       .select(col("a"), col("b"), col("cos_ppm"))
   }
@@ -226,22 +199,12 @@ object Similarity {
     * Vectors in the same bucket are ANN candidates (query cost becomes an
     * equi-join by bucket instead of a scan).
     *
-    * The plane weights are baked in as literal arrays, so each projection
-    * is a zip_with/aggregate fold over the embedding attribute — one pass
-    * per row, ZERO shuffles (the previous posexplode-to-(vec, dim) shape
-    * inflated the shuffle 64x at corpus scale, VERDICT r02). The fold
-    * order is the dim order, matching the oracle's sequential sum. The
-    * lambda reads the bound `embedding` attribute directly (casting
-    * inside the lambda) — a pre-projected transform() would re-evaluate
-    * per element (see Dedup.shinglesOfWords). */
-  def lshBuckets(emb: DataFrame, nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val bits = (0 until nPlanes).map { p =>
-      val w = typedLit((0 until dim).map(planeWeight(p, _)))
-      val s = aggregate(
-        zip_with(col("embedding"), w, (x, wv) => x.cast("double") * wv),
-        lit(0.0), (acc, v) => acc + v)
-      when(s > 0, "1").otherwise("0")
-    }
-    emb.select(col("vec_id"), concat(bits: _*).as("bucket"))
-  }
+    * The plane weights are baked into the compiled [[Kernels.lshBucket]]
+    * projection — one pass per row, ZERO shuffles (the previous
+    * posexplode-to-(vec, dim) shape inflated the shuffle 64x at corpus
+    * scale, VERDICT r02). Each plane's sum folds in dim order, matching
+    * the oracle's sequential sum. */
+  def lshBuckets(emb: DataFrame, nPlanes: Int = 8, dim: Int = 64): DataFrame =
+    emb.select(col("vec_id"), Kernels.lshBucket(col("embedding"),
+      (0 until nPlanes).map(p => (0 until dim).map(planeWeight(p, _)))).as("bucket"))
 }

@@ -209,7 +209,7 @@ object TextOps {
     * under small edits away from the minimal shingles. */
   def fingerprints(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    // explode + groupBy-min aggregates (one shuffle, map-side combinable)
-    // instead of a per-row nested transform — same md5 values, ~180x faster
+    // the compiled per-row signature kernel + a groupBy-min per doc (one
+    // shuffle of one row per doc, map-side combinable)
     Dedup.minhashSignatures(docs, idCol, textCol, ngram = 5, k = 4, prefix = "fp")
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.ParquetTableIO
 import graft.ops.TextOps
 
 /** Physical-plan quality gates: the properties that matter at 100 TB,
@@ -249,4 +250,39 @@ class PlanSpec extends SparkSpec {
       assert(probe.collect().map(_.getLong(1)).toSet === Set(1L))
     } finally sys.props.remove(key)
   }
+
+  /** Interpreted higher-order functions in the executed (AQE-final) plan
+    * of `df`, subqueries and query stages included; runs `df`. */
+  private def hofsIn(df: DataFrame): Seq[String] = {
+    df.collect()
+    PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.expressions.flatMap(_.collect {
+        case e if PlanWalk.banned(e.getClass.getSimpleName) => e.getClass.getSimpleName
+      })
+    }.flatten.distinct
+  }
+
+  test("compiled kernels: no per-element lambda in the vector and MinHash plans") {
+    // Spark 4.1 runs every higher-order function as CodegenFallback: its
+    // lambda is interpreted once per array element. These operators keep
+    // their array math in graft.ops.Kernels; a kernel written back as a
+    // lambda fails here instead of silently returning to the interpreter.
+    // parquet inputs, not local rows: Spark folds a projection over a
+    // local relation at planning time, which would hide its expressions
+    val q = SparkEntry.queries
+    val emb = ParquetTableIO.read(spark, s"$sfDir/embeddings.parquet")
+    val docs = ParquetTableIO.read(spark, s"$sfDir/documents.parquet")
+    val plans = Seq("emb_lsh_buckets", "doc_minhash_lsh", "doc_fingerprint",
+      "emb_cosine_dups", "emb_ann_topk").map(n => n -> q(n)(spark, sfDir)) ++ Seq(
+      "Clustering.lloyd" -> graft.ops.Clustering.lloyd(emb, k = 4, iters = 1),
+      "Dedup.rowBuckets" -> graft.ops.Dedup.rowBuckets(docs),
+      "FuzzyLink.nameBuckets" -> graft.link.FuzzyLink.nameBuckets(
+        docs.select(substring(col("text"), 1, 12).as("name")), "name"))
+    val found = plans.map { case (n, df) => n -> hofsIn(df) }.filter(_._2.nonEmpty)
+    assert(found.isEmpty, s"interpreted higher-order functions in: ${found.mkString(", ")}")
+  }
+}
+
+private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  val banned = Set("ArrayAggregate", "ZipWith", "ArrayTransform")
 }
