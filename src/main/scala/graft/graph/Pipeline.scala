@@ -172,14 +172,8 @@ object Pipeline {
   /** spark-submit entry point: `graft.graph.Pipeline <sfDir>`. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER, when set, points the build at a cluster
+    val spark = session(envCpus, sys.env.get("SPARK_MASTER"))
     val t0 = System.nanoTime()
     val nEdges = runAll(spark, sfDir)
     val sec = (System.nanoTime() - t0) / 1e9
@@ -191,5 +185,21 @@ object Pipeline {
       .agg(count(lit(1)).as("parts"), sum("output_rows").as("rows"))
       .orderBy("stage").show(100, truncate = false)
     spark.stop()
+  }
+
+  /** `SPARK_GRAFT_CPUS`, the local core count of every entry point. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The one session factory: `local[cpus]` (or `master`), one shuffle
+    * partition per core, UTC session time zone (the oracle's), UI off. */
+  def session(cpus: Int, master: Option[String] = None): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master.getOrElse(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 }

@@ -137,27 +137,20 @@ object Dedup {
     full.unionByName(star).distinct()
   }
 
-  /** Verify candidates with exact shingle-set Jaccard; keeps pairs with
-    * similarity >= threshold. */
-  def verifyJaccard(docs: DataFrame, pairs: DataFrame, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text", ngram: Int = 3): DataFrame = {
-    // strict n-grams (see minhashSignatures) — a sub-ngram doc can never
-    // be a candidate (it has no signature), so the filter only keeps the
-    // verify side consistent with the generation side
-    val withSh = docs
-      .select(col(idCol), col(textCol).as("_t"), split(col(textCol), " ").as("_w"))
-      .filter(size(col("_w")) >= ngram)
-      .select(col(idCol),
-        array_distinct(shinglesOfWords(col("_w"), col("_t"), ngram)).as("sh"))
+  /** Exact shingle-set Jaccard of each candidate pair (a, b): joins both
+    * ids to `shingles` (idCol, sh: the distinct shingle array) and keeps
+    * (a, b, jaccard) at similarity >= threshold. The verify tail of
+    * [[verifiedPairs]]. */
+  private[graft] def jaccardAtLeast(pairs: DataFrame, shingles: DataFrame,
+      idCol: String, threshold: Double): DataFrame =
     pairs
-      .join(withSh.select(col(idCol).as("a"), col("sh").as("sha")), "a")
-      .join(withSh.select(col(idCol).as("b"), col("sh").as("shb")), "b")
+      .join(shingles.select(col(idCol).as("a"), col("sh").as("sha")), "a")
+      .join(shingles.select(col(idCol).as("b"), col("sh").as("shb")), "b")
       .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("double"))
       .withColumn("uni", (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"))
       .withColumn("jaccard", col("inter") / col("uni"))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
-  }
 
   /** Near-duplicate clusters — the collapse step a dedup pass runs after
     * pair generation: verified near-dup pairs become edges of an
@@ -232,8 +225,8 @@ object Dedup {
     *
     * ONE shingle derivation (split + n-gram + distinct) feeds BOTH the
     * signature chain and the Jaccard verification: the previous
-    * composition re-derived the per-doc shingle arrays inside
-    * verifyJaccard, and candidatePairs' two bucket consumers (size table
+    * composition re-derived the per-doc shingle arrays for the
+    * verification, and candidatePairs' two bucket consumers (size table
     * + join-back) re-executed the whole signature chain a second time —
     * three corpus text passes where one suffices (guide §1.2 "don't
     * compute things twice"). The per-row signature is computed in the
@@ -254,14 +247,7 @@ object Dedup {
       .localCheckpoint()
     val buckets = bandsOf(minPerKey(withSh, idCol, k), Seq(idCol), k, rowsPerBand)
       .localCheckpoint()
-    candidatePairs(buckets, idCol)
-      .join(withSh.select(col(idCol).as("a"), col("sh").as("sha")), "a")
-      .join(withSh.select(col(idCol).as("b"), col("sh").as("shb")), "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .withColumn("uni", (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"))
-      .withColumn("jaccard", col("inter") / col("uni"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    jaccardAtLeast(candidatePairs(buckets, idCol), withSh, idCol, threshold)
   }
 
   /** [[dupClusters]] with the verified pair set routed through a

@@ -16,9 +16,9 @@ object Similarity {
   /** Exact top-k cosine neighbors for queries (vec_id < nQueries).
     * The query side is tiny -> broadcast; the corpus side streams, so the
     * plan is a single pass over N rows regardless of cluster size. The
-    * top-k cut goes through the size-gated TopK helper: at corpus scale
-    * the per-query rank no longer funnels all N scored rows through one
-    * window task (VERDICT r05 #7). */
+    * top-k cut is TopK's rank window, whose partial group limit keeps at
+    * most k scored rows per query and input partition ahead of the
+    * shuffle (VERDICT r05 #7). */
   def bruteForceTopK(emb: DataFrame, nQueries: Int = 20, k: Int = 10): DataFrame = {
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -127,7 +127,7 @@ object Similarity {
     * to exact/MinHash/SimHash/Jaccard): LSH buckets as the blocking key —
     * candidate generation is a bucket equi-self-join (a < b), never
     * all-pairs — then exact cosine verification at `minCosPpm`. The same
-    * candidate-then-verify shape as Dedup.candidatePairs/verifyJaccard,
+    * candidate-then-verify shape as Dedup.candidatePairs/jaccardAtLeast,
     * over vectors instead of shingle sets.
     *
     * Degenerate-bucket cap (same rule as Dedup.candidatePairs): a bucket

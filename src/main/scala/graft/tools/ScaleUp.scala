@@ -19,22 +19,10 @@ import graft.graph.ParquetTableIO
   * (shift = exact table count, so vec_id stays dense from 0 — the seed
   * contract of Clustering.lloyd).
   *
-  * Usage: runMain graft.tools.ScaleUp <srcDir> <dstDir> <copies>
+  * Driven by `graft.tools.Probe scaleup <srcDir> <dstDir> <copies>`.
   */
 object ScaleUp {
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dst = args(1)
-    val copies = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def run(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
     def read(t: String): DataFrame = ParquetTableIO.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
@@ -67,6 +55,5 @@ object ScaleUp {
     write(replicate(read("embeddings"), Seq("vec_id"), nVecs), "embeddings")
     println(s"[scaleup] wrote $dst: ${copies}x conversations/documents/" +
       s"embeddings, dimensions fixed")
-    spark.stop()
   }
 }

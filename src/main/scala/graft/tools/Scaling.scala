@@ -11,40 +11,37 @@ import graft.graph.ParquetTableIO
 
 /** Two-parallelism scaling evidence (north rule: throughput scaling
   * efficiency >= 0.8 between N and 4N executors; sandbox substitute: the
-  * same job + input at local[8] vs local[32]).
+  * same job + input at local[N] vs local[4N], one session each).
   *
   * The job is the full extraction->linking->triple pipeline over the
   * deterministic synthetic corpus (generated from spark.range — no I/O
   * bottleneck, so the measurement isolates compute/shuffle scaling).
-  * Besides throughput, the run asserts the triple-set checksum is
+  * Besides throughput, the pair run asserts the triple-set checksum is
   * IDENTICAL at both parallelism levels — the determinism half of the
-  * north rule.
-  *
-  * Usage: runMain graft.tools.Scaling [nConvs] [turnsPerConv]
+  * north rule. Driven by `graft.tools.Probe scaling`.
   */
 object Scaling {
 
   case class Run(parallelism: Int, seconds: Double, triples: Long,
       checksum: Long) {
     def perSec: Double = triples / seconds
+    def json: String =
+      f"""{"parallelism":$parallelism,"sec":$seconds%.2f,"triples":$triples,"triples_per_sec":$perSec%.0f,"checksum":$checksum}"""
   }
 
-  def runAt(parallelism: Int, nConvs: Long, turnsPerConv: Int): Run = {
-    val spark = SparkSession.builder()
-      .master(s"local[$parallelism]")
-      .appName(s"graft-scaling-$parallelism")
-      .config("spark.sql.shuffle.partitions", parallelism.toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** One timed pipeline run on `spark` at its default parallelism. Phase
+    * times go to stderr. Partition coalescing is off while it runs, so
+    * every shuffle keeps one partition per core. */
+  def runAt(spark: SparkSession, nConvs: Long, turnsPerConv: Int): Run = {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
     try {
       def phase[A](label: String)(f: => A): A = {
         val p0 = System.nanoTime()
         val res = f
-        if (sys.env.contains("GRAFT_SCALE_DEBUG"))
-          println(f"[scale] p=$parallelism $label ${(System.nanoTime() - p0) / 1e9}%.2f s")
+        System.err.println(f"[scale] p=$parallelism $label ${(System.nanoTime() - p0) / 1e9}%.2f s")
         res
       }
       val tmp = java.nio.file.Files
@@ -56,14 +53,8 @@ object Scaling {
       // NOT used — it serializes rows one by one (measured 9x slower than
       // a columnar parquet round-trip).
       def mat(df: org.apache.spark.sql.DataFrame, name: String) = {
-        if (sys.env.contains("GRAFT_SCALE_MEM")) {
-          val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          c.count()
-          c
-        } else {
-          df.write.mode("overwrite").parquet(s"$tmp/$name")
-          ParquetTableIO.read(spark, s"$tmp/$name")
-        }
+        df.write.mode("overwrite").parquet(s"$tmp/$name")
+        ParquetTableIO.read(spark, s"$tmp/$name")
       }
       // Untimed warmup on a miniature corpus: JIT + whole-stage-codegen
       // compilation is a per-JVM constant (~10s) that would otherwise
@@ -86,52 +77,29 @@ object Scaling {
         .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("chk")).collect()(0)
       val sec = (System.nanoTime() - t0) / 1e9
       Run(parallelism, sec, agg.getLong(0), agg.getLong(1))
-    } finally spark.stop()
+    } finally before.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
   }
 
-  def main(args: Array[String]): Unit = {
-    // "single <p> <nConvs> <turns>" runs one parallelism level and prints
-    // one JSON line — run p8 and p32 in SEPARATE JVMs to avoid cross-run
-    // JIT/GC/block-manager pollution; a wrapper combines the two lines.
-    if (args.headOption.contains("single")) {
-      val r = runAt(args(1).toInt, args(2).toLong, args(3).toInt)
-      println(f"""{"parallelism":${r.parallelism},"sec":${r.seconds}%.2f,"triples":${r.triples},"triples_per_sec":${r.perSec}%.0f,"checksum":${r.checksum}}""")
-      return
-    }
-    // "control <p>": the host-ceiling reference — a zero-shuffle, zero-IO,
-    // pure-codegen job (bit_xor of xxhash64 over a range). Whatever
-    // efficiency THIS job loses between two parallelism levels is memory
-    // bandwidth / SMT contention of the VM, not engine serialization; the
-    // pipeline's efficiency is reported alongside (and normalized to) it.
-    if (args.headOption.contains("control")) {
-      val p = args(1).toInt
-      val n = args.lift(2).map(_.toLong).getOrElse(4000000000L)
-      val spark = SparkSession.builder()
-        .master(s"local[$p]")
-        .config("spark.sql.shuffle.partitions", p.toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      spark.range(n min 100000000L) // untimed JIT warmup
-        .select(expr("bit_xor(xxhash64(id))")).collect()
-      val t0 = System.nanoTime()
-      spark.range(n).select(expr("bit_xor(xxhash64(id))")).collect()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"control":"xxhash64_fold","parallelism":$p,"rows":$n,"sec":$sec%.2f}""")
-      spark.stop()
-      return
-    }
-    // Default pair is local[2] vs local[8] (N and 4N): this host's memory
-    // bandwidth saturates below 32 threads (even a pure-CPU python loop
-    // only reaches 2.9x from 8->32 processes), so 8->32 measures the host,
-    // not the engine. 2->8 stays under saturation. See BENCH.md.
-    val nConvs = args.headOption.map(_.toLong).getOrElse(500000L)
-    val turns = args.lift(1).map(_.toInt).getOrElse(12)
-    val lo = runAt(2, nConvs, turns)
-    val hi = runAt(8, nConvs, turns)
+  /** The host-ceiling reference — a zero-shuffle, zero-IO, pure-codegen
+    * job (bit_xor of xxhash64 over a range) as one JSON line. Whatever
+    * efficiency THIS job loses between two parallelism levels is memory
+    * bandwidth / SMT contention of the VM, not engine serialization; the
+    * pipeline's efficiency is reported alongside (and normalized to) it. */
+  def control(spark: SparkSession, n: Long): String = {
+    spark.range(n min 100000000L) // untimed JIT warmup
+      .select(expr("bit_xor(xxhash64(id))")).collect()
+    val t0 = System.nanoTime()
+    spark.range(n).select(expr("bit_xor(xxhash64(id))")).collect()
+    val sec = (System.nanoTime() - t0) / 1e9
+    f"""{"control":"xxhash64_fold","parallelism":${spark.sparkContext.defaultParallelism},"rows":$n,"sec":$sec%.2f}"""
+  }
+
+  /** The N-vs-4N summary line of two runs over the same corpus; fails
+    * unless both produced the same triple set. */
+  def pair(lo: Run, hi: Run, nConvs: Long, turns: Int): String = {
     require(lo.checksum == hi.checksum && lo.triples == hi.triples,
       s"determinism violation: $lo vs $hi")
-    val eff = (hi.perSec / lo.perSec) / 4.0
-    println(f"""{"job":"synthetic_kg_pipeline","n_convs":$nConvs,"turns_per_conv":$turns,"triples":${hi.triples},"sec_n":${lo.seconds}%.2f,"sec_4n":${hi.seconds}%.2f,"triples_per_sec_n":${lo.perSec}%.0f,"triples_per_sec_4n":${hi.perSec}%.0f,"scaling_efficiency":$eff%.3f,"deterministic":true}""")
+    val eff = (hi.perSec / lo.perSec) / (hi.parallelism.toDouble / lo.parallelism)
+    f"""{"job":"synthetic_kg_pipeline","n_convs":$nConvs,"turns_per_conv":$turns,"triples":${hi.triples},"sec_n":${lo.seconds}%.2f,"sec_4n":${hi.seconds}%.2f,"triples_per_sec_n":${lo.perSec}%.0f,"triples_per_sec_4n":${hi.perSec}%.0f,"scaling_efficiency":$eff%.3f,"deterministic":true}"""
   }
 }

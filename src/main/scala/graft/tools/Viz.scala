@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * on a bare <canvas> (circle layout, no external JS/CDN), so the
   * artifact is a single portable file.
   *
-  * Usage: runMain graft.tools.Viz <sfDir> <outFile> [k]
+  * Driven by `graft.tools.Probe viz <sfDir> <outFile> [k]`.
   */
 object Viz {
 
@@ -99,20 +99,5 @@ object Viz {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     Files.write(Paths.get(outFile),
       html(top.toSeq, induced.toSeq).getBytes(StandardCharsets.UTF_8))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("/tmp/graft_subgraph.html")
-    val k = args.lift(2).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    export(spark, sfDir, out, k)
-    println(s"[viz] wrote $out")
-    spark.stop()
   }
 }

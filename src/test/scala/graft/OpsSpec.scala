@@ -71,7 +71,11 @@ class OpsSpec extends SparkSpec {
 
   test("jaccard verification separates near-dups from candidates") {
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("a", "b")
-    val v = Dedup.verifyJaccard(corpus, pairs, threshold = 0.5)
+    val shingles = corpus
+      .select(col("doc_id"), col("text").as("_t"), split(col("text"), " ").as("_w"))
+      .select(col("doc_id"),
+        array_distinct(Dedup.shinglesOfWords(col("_w"), col("_t"), 3)).as("sh"))
+    val v = Dedup.jaccardAtLeast(pairs, shingles, "doc_id", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(v === Set((1L, 2L)))
   }

@@ -1,6 +1,12 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.graph.ParquetTableIO
 import graft.ops.TextOps
@@ -195,31 +201,51 @@ class PlanSpec extends SparkSpec {
       "partial + final aggregate expected (map-side combine)")
   }
 
-  test("top-k gate: two-phase partial rank engages above the gate and equals the single-window path") {
-    import spark.implicits._
-    val rows = (0 until 3000).map(i => (s"g${i % 3}", s"w$i", (i * 37 % 101).toLong))
-      .toDF("grp", "word", "n").repartition(8)
-    val order = Seq(col("n").desc, col("word"))
-    val single = graft.canonical.TopK.perGroup(rows, Seq("grp"), order, 5, "rk")
-    assert(!plan(single).contains("_pp"),
-      "below the gate the classic single-window plan must be kept")
-    val key = "graft.topk.twoPhaseMinBytes"
-    sys.props(key) = "1" // force the at-scale path
-    try {
-      val two = graft.canonical.TopK.perGroup(rows, Seq("grp"), order, 5, "rk")
-      val p = plan(two)
-      assert(p.contains("_pp"),
-        s"two-phase partial rank must engage above the gate:\n${p.take(1500)}")
-      assert("Window".r.findAllIn(p).size >= 2,
-        "per-(group, partition) window + final per-group window expected")
-      assert(two.collect().map(_.toSeq).toSet ===
-        single.collect().map(_.toSeq).toSet,
-        "two-phase top-k must equal the single-window top-k exactly")
-      // a wired site follows the gate too (brute-force ANN)
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val ann = graft.ops.Similarity.bruteForceTopK(emb)
-      assert(plan(ann).contains("_pp"))
-    } finally sys.props.remove(key)
+  /** Hash exchanges below `df`'s top rank window, and whether a partial
+    * WindowGroupLimit sits below them; runs `df`. */
+  private def rankWindowShape(df: DataFrame): (Int, Boolean) = {
+    df.collect()
+    val window = PlanWalk.collect(df.queryExecution.executedPlan) { case w: WindowExec => w }.head
+    val exchanges = PlanWalk.collect(window) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    val partial = exchanges.exists(e => PlanWalk.collect(e.child) {
+      case l: WindowGroupLimitExec if l.mode == Partial => l
+    }.nonEmpty)
+    (exchanges.size, partial)
+  }
+
+  test("top-k: one hash exchange under the rank window, partial group limit below it") {
+    // brute-force ANN at sf0.001: its 500 x 20 cross join estimates ~31 GB
+    val ann = graft.ops.Similarity.bruteForceTopK(
+      ParquetTableIO.read(spark, s"$sfDir/embeddings.parquet"))
+    // 3,000 rows whose equi-join estimate (product of sides) tops 256 MB
+    val ids = spark.range(0, 3000)
+    val rows = ids.join(ids.select(col("id").as("j")), col("id") === col("j"))
+      .select((col("id") % 3).cast("string").as("grp"),
+        concat(lit("w"), col("id")).as("word"), (col("id") * 37 % 101).as("n"))
+    assert(rows.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(256L << 20))
+    val top = graft.canonical.TopK.perGroup(rows, Seq("grp"),
+      Seq(col("n").desc, col("word")), 5, "rk")
+    for ((name, df) <- Seq("bruteForceTopK" -> ann, "perGroup" -> top)) {
+      assert("\\b_pp\\b".r.findFirstIn(plan(df)).isEmpty, s"$name: hand-built partition rank")
+      assert(rankWindowShape(df) === ((1, true)),
+        s"$name: (hash exchanges under the rank window, partial limit below):\n${plan(df).take(2000)}")
+    }
+    val want = (0L until 3000L).map(i => ((i % 3).toString, s"w$i", i * 37 % 101))
+      .groupBy(_._1).values.flatMap(_.sortBy(r => (-r._3, r._2)).take(5)
+        .zipWithIndex.map { case ((g, w, n), i) => Seq(g, w, n, i + 1L) }).toSet
+    assert(top.collect().map(_.toSeq).toSet === want)
+  }
+
+  test("Probe plans: the ANN top-k dump has Spark's group limit, no hand-built phase") {
+    val out = Files.createTempDirectory("graft_probe_plans").toString
+    val Seq(f) = graft.tools.Probe.plans(spark, sfDir, out, "smoke", Seq("emb_ann_topk"))
+    assert(f === new File(out, "emb_ann_topk_smoke.txt") && f.isFile)
+    val dump = new String(Files.readAllBytes(f.toPath), "UTF-8")
+    // `_pp` as a whole word: the hand-built partition-rank column (cos_ppm is not one)
+    assert(dump.contains("WindowGroupLimit") && "\\b_pp\\b".r.findFirstIn(dump).isEmpty,
+      dump.take(1500))
   }
 
   test("incremental probe: corpus docs are candidate-filtered BEFORE shingling (batch)") {

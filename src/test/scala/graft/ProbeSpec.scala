@@ -1,0 +1,29 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+/** One session factory and one probe CLI: a source scan keeps it so. */
+class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
+
+  private def sources(dir: File): Seq[File] =
+    if (dir.isDirectory) dir.listFiles.toSeq.flatMap(sources)
+    else Seq(dir).filter(_.getName.endsWith(".scala"))
+
+  private def text(f: File) = new String(Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("sessions come from Pipeline.session and the tools have one main") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    val builders = sources(root)
+      .filterNot(f => Seq("graph/Pipeline.scala", "graft/Bench.scala", "graft/Verify.scala")
+        .exists(f.getPath.endsWith))
+      .filter(text(_).contains("SparkSession.builder("))
+    assert(builders.isEmpty,
+      s"build sessions with graft.graph.Pipeline.session, not SparkSession.builder: $builders")
+    val mains = sources(new File(root, "graft/tools"))
+      .map(f => f -> "def main\\(".r.findAllIn(text(f)).size).filter(_._2 > 0)
+    assert(mains.map(_._2).sum === 1,
+      s"graft.tools holds one CLI, graft.tools.Probe; add a subcommand there: $mains")
+  }
+}

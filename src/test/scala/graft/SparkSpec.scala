@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (Test / fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.graph.Pipeline.session(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
