@@ -17,10 +17,7 @@ import graft.version.Versions
   *   - a killed run resumes at the first uncommitted stage;
   *   - per-stage lineage/metrics land next to the tables (StageStore).
   *
-  * Stage DAG (reference lifecycle, SURVEY.md §3.1):
-  *   transcripts -> mentions -> resolved -> triples -> edges
-  *                     |            \-> (minted) nodes
-  *                     \-> version_nodes -> version_edges
+  * The stage DAG is declared once, in [[stages]]; `runAll` schedules it.
   */
 object Pipeline {
 
@@ -138,35 +135,63 @@ object Pipeline {
       Versions.versionEdges(versionNodes(spark, sfDir))
     }
 
-  /** Run every stage to completion (idempotent / resumable). The two
-    * branches downstream of `mentions` are independent — the resolve
-    * chain (resolved -> nodes -> triples -> minted -> edges) and the
-    * version chain (version_nodes -> version_edges) — so they run as
-    * concurrent jobs from two driver threads (guide §2.6 "overlap
-    * independent jobs"): the version chain's tasks back-fill executor
-    * cores left idle by the resolve chain's stage tails, instead of
-    * serializing ~3 s of version work after the edge count. Stage
-    * ordering WITHIN each branch is unchanged, so per-stage recorded
-    * walls still cover their own work (modulo shared-host concurrency,
-    * which the lineage rows disclose). Returns the emitted edge count:
-    * the committed edge table's footer row sum (its `output_rows`), so
-    * no count job runs. */
+  /** One pipeline stage: the name of its committed table, the stages its
+    * accessor reads, and the accessor, which commits the stage on its
+    * first call and returns a reader of the committed table. */
+  private[graft] final case class Stage(name: String, inputs: Seq[String],
+      accessor: (SparkSession, String) => DataFrame)
+
+  /** The stage DAG, in dependency order (reference lifecycle, SURVEY.md
+    * §3.1). `inputs` is exact: an accessor commits no stage beyond its
+    * own, given its inputs (PipelineSpec builds each stage from a store
+    * holding only those). */
+  private[graft] val stages: Seq[Stage] = Seq(
+    Stage("mentions", Nil, mentions),
+    Stage("resolved", Seq("mentions"), resolved),
+    Stage("nodes", Seq("mentions"), nodes),
+    Stage("triples", Seq("resolved", "nodes"), triples),
+    Stage("minted_nodes", Seq("resolved", "nodes"), mintedNodes),
+    Stage("edges", Seq("triples", "nodes"), edges),
+    Stage("version_nodes", Seq("mentions"), versionNodes),
+    Stage("version_edges", Seq("version_nodes"), versionEdges))
+
+  /** Run every stage to completion (idempotent / resumable) and return the
+    * emitted edge count: the committed edge table's footer row sum (its
+    * `output_rows`), so no count job runs. */
   def runAll(spark: SparkSession, sfDir: String): Long = {
-    import scala.concurrent.{Await, Future}
+    schedule(spark, sfDir, stages)
+    StageStore.committedRows(spark, sfDir, "edges")
+  }
+
+  /** Commit every stage of `table` as soon as its inputs have committed:
+    * each stage is a `Future` on its inputs' futures, so independent
+    * stages run as concurrent Spark jobs from their own driver threads
+    * and back-fill the cores another stage's task tail leaves idle. The
+    * accessor runs in `blocking`, so a global pool of one or two threads
+    * grows instead of starving. Stage outputs are pure functions of
+    * committed inputs, so the schedule changes no commit.
+    *
+    * A table with an input not declared before its stage is rejected
+    * before any stage starts. Returns once every stage has committed,
+    * failed, or been skipped for a failed input, so no stage commits
+    * after the return; then rethrows the failure of the first failed
+    * stage in table order (a skipped stage carries its input's failure). */
+  private[graft] def schedule(spark: SparkSession, sfDir: String, table: Seq[Stage]): Unit = {
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    mentions(spark, sfDir)
-    val versionBranch = Future {
-      versionNodes(spark, sfDir)
-      versionEdges(spark, sfDir)
+    import scala.util.{Failure, Success}
+    val names = table.map(_.name)
+    table.zipWithIndex.foreach { case (s, k) =>
+      require(s.inputs.forall(names.take(k).contains),
+        s"stage ${s.name}: every input must be declared before it")
     }
-    resolved(spark, sfDir)
-    nodes(spark, sfDir)
-    triples(spark, sfDir)
-    mintedNodes(spark, sfDir)
-    edges(spark, sfDir)
-    Await.result(versionBranch, Duration.Inf)
-    StageStore.committedRows(spark, sfDir, "edges")
+    val done = table.foldLeft(Map.empty[String, Future[Unit]]) { (started, s) =>
+      started + (s.name -> Future.sequence(s.inputs.map(started))
+        .map(_ => blocking { s.accessor(spark, sfDir); () }))
+    }
+    val outcomes = Future.sequence(table.map(s => done(s.name).transform(Success(_))))
+    Await.result(outcomes, Duration.Inf).collectFirst { case Failure(e) => e }.foreach(throw _)
   }
 
   /** spark-submit entry point: `graft.graph.Pipeline <sfDir>`. */

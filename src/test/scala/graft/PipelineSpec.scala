@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{Pipeline, StageStore}
@@ -25,13 +27,93 @@ class PipelineSpec extends SparkSpec {
       assert(n2 === n1, "resumed run must reuse committed stages")
       assert(spark.read.parquet(s"$base/mentions").count() === marker)
       // committed readers carry the schema a parquet read would infer
-      Seq("mentions" -> Pipeline.mentions _, "resolved" -> Pipeline.resolved _,
-        "nodes" -> Pipeline.nodes _, "triples" -> Pipeline.triples _,
-        "minted_nodes" -> Pipeline.mintedNodes _, "edges" -> Pipeline.edges _,
-        "version_nodes" -> Pipeline.versionNodes _,
-        "version_edges" -> Pipeline.versionEdges _).foreach { case (stage, read) =>
-        assert(read(spark, sfDir).schema === spark.read.parquet(s"$base/$stage").schema, stage)
+      Pipeline.stages.foreach { s =>
+        assert(s.accessor(spark, sfDir).schema ===
+          spark.read.parquet(s"$base/${s.name}").schema, s.name)
       }
+    }
+  }
+
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  /** Stages committed (`_SUCCESS` written) in the current stage root. */
+  private def committed(sfDir: String): Set[String] =
+    Option(new java.io.File(StageStore.baseFor(sfDir)).listFiles()).toSeq.flatten
+      .filter(d => new java.io.File(d, "_SUCCESS").exists).map(_.getName).toSet
+
+  /** (rows, order-free sum of row xxhash64) of every declared stage. */
+  private def digests(sfDir: String): Map[String, (Long, Option[BigDecimal])] = {
+    val base = StageStore.baseFor(sfDir)
+    Pipeline.stages.map { s =>
+      val df = spark.read.parquet(s"$base/${s.name}")
+      val r = df.agg(count(lit(1)),
+        sum(xxhash64(df.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
+      s.name -> (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)))
+    }.toMap
+  }
+
+  test("each declared stage builds from its declared inputs alone and commits only itself") {
+    val full = withStageRoot {
+      Pipeline.runAll(spark, sf0001)
+      Paths.get(StageStore.baseFor(sf0001))
+    }
+    Pipeline.stages.foreach { s =>
+      withStageRoot {
+        val base = Paths.get(StageStore.baseFor(sf0001))
+        s.inputs.foreach { i =>
+          val from = full.resolve(i)
+          Using.resource(Files.walk(from)) { _.forEach { p =>
+            val to = base.resolve(i).resolve(from.relativize(p))
+            Files.createDirectories(to.getParent)
+            Files.copy(p, to)
+          } }
+        }
+        assert(committed(sf0001) === s.inputs.toSet)
+        s.accessor(spark, sf0001)
+        assert(committed(sf0001) === s.inputs.toSet + s.name,
+          s"${s.name} must commit itself and no undeclared upstream stage")
+      }
+    }
+  }
+
+  test("the scheduled runAll commits the rows and checksums of the sequential accessor order") {
+    val scheduled = withStageRoot {
+      Pipeline.runAll(spark, sf0001)
+      digests(sf0001)
+    }
+    val sequential = withStageRoot {
+      Seq(Pipeline.mentions _, Pipeline.resolved _, Pipeline.nodes _, Pipeline.triples _,
+        Pipeline.mintedNodes _, Pipeline.edges _, Pipeline.versionNodes _,
+        Pipeline.versionEdges _).foreach(_(spark, sf0001))
+      digests(sf0001)
+    }
+    assert(scheduled.keySet === Pipeline.stages.map(_.name).toSet)
+    assert(scheduled("edges")._1 > 0)
+    assert(scheduled === sequential)
+  }
+
+  test("a failing stage: the scheduler rethrows it after the independent stages finish; a rerun commits the rest") {
+    withStageRoot {
+      val boom = new IllegalStateException("resolve failed")
+      val failing = Pipeline.stages.map(s =>
+        if (s.name == "resolved") s.copy(accessor = (_, _) => throw boom) else s)
+      val thrown = intercept[IllegalStateException](Pipeline.schedule(spark, sf0001, failing))
+      assert(thrown eq boom)
+      // the dependents of resolved never start; every independent stage
+      // has committed by the time the failure is rethrown
+      val independent = Set("mentions", "nodes", "version_nodes", "version_edges")
+      assert(committed(sf0001) === independent)
+      val base = StageStore.baseFor(sf0001)
+      def stamps = independent.map(s => s -> new java.io.File(s"$base/$s/_SUCCESS").lastModified).toMap
+      val before = stamps
+      assert(Pipeline.runAll(spark, sf0001) > 0)
+      assert(committed(sf0001) === Pipeline.stages.map(_.name).toSet)
+      assert(stamps === before, "a rerun must not rebuild a committed stage")
+      val commits = StageStore.metrics(spark, sf0001).filter(col("name") === "output_rows")
+        .groupBy("stage").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(commits === Pipeline.stages.map(_.name -> 1L).toMap)
+      // a table whose input is not declared before it is rejected
+      intercept[IllegalArgumentException](Pipeline.schedule(spark, sf0001, failing.reverse))
     }
   }
 
