@@ -169,32 +169,42 @@ object Pipeline {
     * and back-fill the cores another stage's task tail leaves idle. The
     * accessor runs in `blocking`, so a global pool of one or two threads
     * grows instead of starving. Stage outputs are pure functions of
-    * committed inputs, so the schedule changes no commit. The overlap
-    * pays where stages leave cores idle; when every core is busy
-    * (sf0.1, `local[32]` on 4 cores) it measured no faster, as stages
-    * off the critical path then take its cores.
+    * committed inputs, so the schedule changes no commit.
+    *
+    * The overlap needs idle cores: it only moves work into task slots
+    * the critical path leaves empty, and does the same work. On
+    * perfbench `build` (4 cores) the JVM keeps 0.77 of the cores busy
+    * and `runAll` is faster. At sf0.1 on `local[32]` every slot is
+    * busy, so an overlapped stage slows the stage beside it by about
+    * its own length, and the run is no faster (BENCH_stage_dag_walls).
     *
     * A table with an input not declared before its stage is rejected
     * before any stage starts. Returns once every stage has committed,
     * failed, or been skipped for a failed input, so no stage commits
     * after the return; then rethrows the failure of the first failed
-    * stage in table order (a skipped stage carries its input's failure). */
+    * stage in table order (a skipped stage carries its input's failure).
+    * A stage's future holds its failure instead of failing: a fatal
+    * error (a StackOverflowError from a deep plan, an OutOfMemoryError)
+    * thrown in a `Future` body is rethrown on the pool thread and never
+    * completes the future, which would leave this wait hanging. */
   private[graft] def schedule(spark: SparkSession, sfDir: String, table: Seq[Stage]): Unit = {
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.{Failure, Success}
     val names = table.map(_.name)
     table.zipWithIndex.foreach { case (s, k) =>
       require(s.inputs.forall(names.take(k).contains),
         s"stage ${s.name}: every input must be declared before it")
     }
-    val done = table.foldLeft(Map.empty[String, Future[Unit]]) { (started, s) =>
-      started + (s.name -> Future.sequence(s.inputs.map(started))
-        .map(_ => blocking { s.accessor(spark, sfDir); () }))
+    val failures = table.foldLeft(Map.empty[String, Future[Option[Throwable]]]) { (started, s) =>
+      started + (s.name -> Future.sequence(s.inputs.map(started)).map { in =>
+        in.flatten.headOption.orElse(blocking {
+          try { s.accessor(spark, sfDir); None } catch { case e: Throwable => Some(e) }
+        })
+      })
     }
-    val outcomes = Future.sequence(table.map(s => done(s.name).transform(Success(_))))
-    Await.result(outcomes, Duration.Inf).collectFirst { case Failure(e) => e }.foreach(throw _)
+    Await.result(Future.sequence(table.map(s => failures(s.name))), Duration.Inf)
+      .flatten.headOption.foreach(throw _)
   }
 
   /** spark-submit entry point: `graft.graph.Pipeline <sfDir>`. */

@@ -117,6 +117,27 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("a fatal error in a stage is rethrown by the scheduler, not left hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val deep = new StackOverflowError("deep plan")
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def stage(name: String, inputs: String*)(body: => Unit) =
+      Pipeline.Stage(name, inputs, (s, _) => { body; ran.add(name); s.emptyDataFrame })
+    val table = Seq(
+      stage("a")(throw deep),
+      stage("b", "a")(()),
+      stage("c")(()))
+    // on its own thread with a deadline, so a scheduler that never
+    // completes fails this test instead of hanging the suite
+    val outcome = Future {
+      try { Pipeline.schedule(spark, sf0001, table); None } catch { case e: Throwable => Some(e) }
+    }
+    assert(Await.result(outcome, 60.seconds).exists(_ eq deep))
+    assert(ran.toArray.toSeq === Seq("c"))
+  }
+
   test("append-incremental: a new conv batch unions with committed stages, equals full recompute") {
     // conversation-local stages make appends O(new batch): process the new
     // conversations alone, union with the committed tables, re-run only

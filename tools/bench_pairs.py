@@ -7,15 +7,17 @@ Checks out two commits as git worktrees (by default HEAD~1 as "parent" and
 HEAD as "change") under --workdir, then runs `perfbench/run.py` from each
 checkout once per seed. Seeds run in pairs: on an odd seed the change runs
 first, on an even seed the parent does, so a drift in host load falls on
-both sides alike. Before the pairs, each side runs once at --warmup-seed
-(its first run compiles the checkout); those rows carry round "warmup".
+both sides alike. Before the pairs, each side runs once at seed 99 (its
+first run compiles the checkout); those rows carry round "warmup", the
+pairs round "final". Run length and workload names come from
+BENCHMARK.json.
 
 Every run is appended, as one row, to BENCH_<topic>.json in the current
 directory: a JSON list of {code, workload, seed, trace, round,
 loadavg_before_launch, disclosure, result}, where `disclosure` and
 `result` are the two JSON lines run.py prints. At the end the script
-prints, for each metric of the rows in that file that match the workload,
-trace flag and round, each side's median and quartiles and the number of
+prints, for each metric of the final rows in that file that match the
+workload and trace flag, each side's median and quartiles and the number of
 seeds on which the change is better (direction from BENCHMARK.json).
 Re-running with more seeds adds to the same file. Nothing under perfbench/
 is edited; each checkout keeps its own .bench_build/.
@@ -52,13 +54,16 @@ def loadavg():
     return {"1m": float(one), "5m": float(five)}
 
 
-def run(code, path, args, seed, round_):
+WARMUP_SEED = 99
+
+
+def run(code, path, args, seconds, seed, round_):
     row = {"code": code, "workload": args.workload, "seed": seed,
            "trace": args.trace, "round": round_,
            "loadavg_before_launch": loadavg()}
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", args.workload,
-         "--seed", str(seed), "--seconds", str(args.seconds),
+         "--seed", str(seed), "--seconds", str(seconds),
          "--trace", str(args.trace)],
         cwd=path, capture_output=True, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
@@ -88,13 +93,13 @@ def quartiles(xs):
 
 def summarize(rows, args, better):
     sel = [r for r in rows if r["workload"] == args.workload
-           and r["trace"] == args.trace and r["round"] == args.round]
+           and r["trace"] == args.trace and r["round"] == "final"]
     side = {c: {r["seed"]: r for r in sel if r["code"] == c} for c in ("parent", "change")}
     seeds = sorted(set(side["parent"]) & set(side["change"]))
     if not seeds:
         return
     failed = sum(r["result"]["failed"] for r in sel)
-    print(f"\n{args.workload} trace={args.trace} round={args.round}: "
+    print(f"\n{args.workload} trace={args.trace}: "
           f"{len(seeds)} pairs (seeds {seeds[0]}..{seeds[-1]}), failed ops {failed}")
     metrics = sorted(side["parent"][seeds[0]]["result"]["metrics"])
     for k in metrics:
@@ -113,26 +118,23 @@ def summarize(rows, args, better):
 
 
 def main():
+    repo = git("rev-parse", "--show-toplevel")
+    with open(os.path.join(repo, "BENCHMARK.json")) as f:
+        bench = json.load(f)
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--topic", required=True, help="writes BENCH_<topic>.json")
-    ap.add_argument("--workload", required=True, choices=["build", "serve"])
+    ap.add_argument("--workload", required=True,
+                    choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--parent", default="HEAD~1")
     ap.add_argument("--change", default="HEAD")
-    ap.add_argument("--seconds", type=int, default=5)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--round", default="final", help="label stored in every row")
-    ap.add_argument("--warmup-seed", type=int, default=99)
     ap.add_argument("--workdir", default=".bench_pairs",
                     help="where the two checkouts live")
     ap.add_argument("--summary-only", action="store_true",
                     help="print the summary of BENCH_<topic>.json and run nothing")
     args = ap.parse_args()
-
-    repo = git("rev-parse", "--show-toplevel")
-    with open(os.path.join(repo, "BENCHMARK.json")) as f:
-        bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
     out = f"BENCH_{args.topic}.json"
     rows = []
@@ -145,12 +147,12 @@ def main():
         for c, rev in (("parent", args.parent), ("change", args.change)):
             print(f"{c}: {checkout(repo, paths[c], rev)[:12]} at {paths[c]}", flush=True)
         for c in ("parent", "change"):
-            rows.append(run(c, paths[c], args, args.warmup_seed, "warmup"))
+            rows.append(run(c, paths[c], args, bench["run_seconds"], WARMUP_SEED, "warmup"))
             save(out, rows)
         for seed in range(args.first_seed, args.first_seed + args.pairs):
             order = ("change", "parent") if seed % 2 else ("parent", "change")
             for c in order:
-                rows.append(run(c, paths[c], args, seed, args.round))
+                rows.append(run(c, paths[c], args, bench["run_seconds"], seed, "final"))
                 save(out, rows)
     summarize(rows, args, better)
 
