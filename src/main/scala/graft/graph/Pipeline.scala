@@ -171,12 +171,14 @@ object Pipeline {
     * grows instead of starving. Stage outputs are pure functions of
     * committed inputs, so the schedule changes no commit.
     *
-    * The overlap needs idle cores: it only moves work into task slots
-    * the critical path leaves empty, and does the same work. On
-    * perfbench `build` (4 cores) the JVM keeps 0.77 of the cores busy
-    * and `runAll` is faster. At sf0.1 on `local[32]` every slot is
-    * busy, so an overlapped stage slows the stage beside it by about
-    * its own length, and the run is no faster (BENCH_stage_dag_walls).
+    * The overlap pays only where the host has idle CPU while the
+    * critical path (mentions → resolved → triples → edges) runs: it
+    * adds no work, it moves work off that path. On perfbench `build`
+    * (`local[4]` on 4 cores) the JVM keeps 0.76 of the cores busy at
+    * the sequential order, and `runAll` is faster. At sf0.1 with
+    * `local[32]` on 4 cores (0.91 busy) a free task slot is not a free
+    * core: an overlapped stage takes CPU from the stage beside it, and
+    * over 8 cold pairs `runAll` was no faster (BENCH_stage_dag_walls.json).
     *
     * A table with an input not declared before its stage is rejected
     * before any stage starts. Returns once every stage has committed,
