@@ -29,16 +29,6 @@ object OpsEntry {
         .select(col("doc_id").cast("long").as("doc_id"), col("n_hits"))
     }
 
-  /** Committed single-Lloyd clustering (vec_id, cluster) — the SAME stage
-    * table SparkEntry.nodeClusters commits (identical name + identical
-    * build), so the kg_cluster_* consumers and the emb_* consumers share
-    * one Lloyd chain per corpus instead of re-running assignment + means
-    * + reassignment each. */
-  private def nodeClustersStage(s: SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "node_clusters") {
-      Clustering.lloydStep(emb(s, dir))
-    }
-
   /** Committed two-member ensemble co-assignment: member A is the
     * committed node_clusters table (same seed window 0), member B the
     * seed-8 Lloyd chain — consumed by BOTH emb_cluster_ensemble and
@@ -48,7 +38,7 @@ object OpsEntry {
   private def ensembleStage(s: SparkSession, dir: String): DataFrame =
     graft.graph.StageStore.getOrCreate(s, dir, "ensemble") {
       val k = 8
-      val a = nodeClustersStage(s, dir).withColumnRenamed("cluster", "cluster_a")
+      val a = graft.graph.Pipeline.nodeClusters(s, dir).withColumnRenamed("cluster", "cluster_a")
       val b = Clustering.lloydStep(emb(s, dir), k, seedFrom = k)
         .withColumnRenamed("cluster", "cluster_b")
       a.join(b, Seq("vec_id"))
@@ -129,7 +119,7 @@ object OpsEntry {
 
     // reads the SAME committed Lloyd stage table the kg_cluster_*
     // consumers share (one assignment chain per corpus, identical rows)
-    "emb_clusters" -> ((s, dir) => nodeClustersStage(s, dir)),
+    "emb_clusters" -> ((s, dir) => graft.graph.Pipeline.nodeClusters(s, dir)),
 
     "emb_cluster_ensemble" -> ((s, dir) => ensembleStage(s, dir)),
 

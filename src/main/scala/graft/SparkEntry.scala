@@ -186,8 +186,8 @@ object SparkEntry {
     * its mention list — then remapped to the dense node ID, emitted in
     * BOTH directions so a consumer can navigate entity→segment as well
     * as segment→entity (closes the last disjoint ID space, VERDICT r03
-    * missing #2). The node remap is size-gated + salted (a hot entity is
-    * defined in many segments). */
+    * missing #2). The node remap is size-gated; above the gate AQE splits
+    * the partition of a hot entity (one defined in many segments). */
   private def qSegmentEntityEdges(s: SparkSession, dir: String): DataFrame = {
     val segs = Extract.segmentNodes(transcriptsOf(s, dir))
       .filter(col("kind") === "entity_def")
@@ -200,8 +200,7 @@ object SparkEntry {
     val linked = segs.join(defs, Seq("conv_id", "turn_idx", "seg_idx"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    val withId = graft.canonical.Joins
-      .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
+    val withId = linked.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
     // one pass: a self-union would re-execute the whole join pipeline
     // per direction — the direction label is a 2-element explode instead
     withId.select(
@@ -243,7 +242,7 @@ object SparkEntry {
     val allNodes = qNodes(s, dir).unionByName(qNodesMinted(s, dir))
       .select(col("canonical_name"), col("node_id"))
     // node table scales with the corpus: size-gated remap (broadcast while
-    // small, salted shuffle join above the gate — Joins.remapBoth)
+    // small, shuffle join above the gate — Joins.remapBoth)
     val edges = graft.canonical.Joins.remapBoth(
       corefs, allNodes, "canonical_name", "node_id",
       "subj", "obj", "src", "dst")
@@ -329,9 +328,9 @@ object SparkEntry {
   /** Grouped membership lists (reference import grouping's
     * `import_file_ids: list`, knowledge_graph.py:933-941): per entity, the
     * sorted set of conversations that define it — an ArrayType cell.
-    * Aggregated in two phases through Salt.twoPhaseAgg (partial
-    * collect_set by (key, salt), then merge) so one hot entity's state
-    * never accumulates on a single reducer. The ArrayType cell stays
+    * Spark plans `collect_set` as a partial aggregate below the one
+    * exchange, so a hot entity reaches its reducer as one set per map
+    * task, not one row per definition. The ArrayType cell stays
     * engine-internal; the comparison boundary is the scalar
     * `array_join` form (driver comparator sorts raw cells —
     * CORRECTNESS_r02 err row). */
@@ -339,11 +338,8 @@ object SparkEntry {
     val defs = mentionsOf(s, dir)
       .filter(col("kind") === "entity_def")
       .select(col("subj").as("canonical_name"), col("conv_id"))
-    graft.canonical.Salt.twoPhaseAgg(defs, "canonical_name", s = 8,
-      saltFrom = Seq("conv_id"))(
-      partial = Seq(collect_set(col("conv_id")).as("cs")),
-      merge = Seq(sort_array(array_distinct(flatten(collect_list(col("cs")))))
-        .as("conv_ids")))
+    defs.groupBy(col("canonical_name"))
+      .agg(sort_array(collect_set(col("conv_id"))).as("conv_ids"))
       .select(col("canonical_name"),
         array_join(col("conv_ids"), ",").as("conv_ids_csv"),
         size(col("conv_ids")).cast("long").as("n_convs"))
@@ -455,8 +451,7 @@ object SparkEntry {
     val linked = valid.join(ordered, Seq("conv_id", "turn_idx"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    graft.canonical.Joins
-      .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
+    linked.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
       .select(col("issue_id"), col("state"), col("node_id"), col("canonical_name"))
       .distinct()
   }
@@ -472,13 +467,11 @@ object SparkEntry {
       .select(col("conv_id"), col("subj").as("canonical_name")).distinct()
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    val withNode = graft.canonical.Joins
-      .innerSkewSafe(defs, n, "canonical_name", saltFrom = Seq("conv_id"))
+    val withNode = defs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
     val hier = graft.graph.Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    graft.canonical.Joins
-      .innerSkewSafe(withNode, hier, "name", saltFrom = Seq("canonical_name"))
+    withNode.join(graft.canonical.Joins.dim(hier), Seq("name"))
       .select(lit("contains_entity").as("edge_type"),
         col("hier_id"), col("node_id"), col("conv_id"), col("canonical_name"))
   }
@@ -487,13 +480,8 @@ object SparkEntry {
     * queries (the reference keys embeddings by function id,
     * semantic_clustering.py:37-66): vec_id == node_id. */
   private def nodeClusters(s: SparkSession, dir: String): DataFrame = {
-    // committed stage table: the Lloyd chain runs ONCE per corpus; the
-    // three cluster consumers (cluster nodes/edges, question x cluster)
-    // re-read the two-long (vec_id, cluster) table instead of re-running
-    // assignment + means + reassignment each (VERDICT r03 #6)
-    val clusters = graft.graph.StageStore.getOrCreate(s, dir, "node_clusters") {
-      graft.ops.Clustering.lloydStep(ParquetTableIO.read(s, s"$dir/embeddings.parquet"))
-    }.withColumnRenamed("vec_id", "node_id")
+    val clusters = graft.graph.Pipeline.nodeClusters(s, dir)
+      .withColumnRenamed("vec_id", "node_id")
     // both sides corpus-scaling, both distinct per node_id -> plain equi
     // join; AQE picks broadcast only while the cluster side actually fits
     graft.graph.Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
@@ -536,7 +524,7 @@ object SparkEntry {
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
     // prs is distinct per canonical_name (one PR per supplier): gate the
-    // node-table hint, no salting needed
+    // node-table hint
     prs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
       .select(col("pr_id"), col("node_id"), col("canonical_name"),
         col("merged_by"))
@@ -611,8 +599,8 @@ object SparkEntry {
     * knowledge_graph.py:1282-1307): issue numbers cross-referenced in the
     * turns where a PR's supplier appears, validated against the issues
     * side table, emitted as distinct (issue, pr) id pairs — the
-    * reference's source/target edge shape. Both dims are size-gated; the
-    * per-supplier fan-in join is salted from conv_id. */
+    * reference's source/target edge shape. Every dim is size-gated; above
+    * the gate AQE splits the per-supplier fan-in of a hot supplier. */
   private def qIssuePrEdges(s: SparkSession, dir: String): DataFrame = {
     val valid = issueRefsOf(s, dir).join(
       graft.canonical.Joins.dim(issuesOf(s, dir).select("issue_id")),
@@ -625,8 +613,7 @@ object SparkEntry {
       concat(lit("supplier:"), col("s_name")).as("canonical_name"),
       col("s_suppkey").cast("long").as("pr_id"))
     val linked = valid.join(supplied, Seq("conv_id", "turn_idx"))
-    graft.canonical.Joins
-      .innerSkewSafe(linked, prs, "canonical_name", saltFrom = Seq("conv_id"))
+    linked.join(graft.canonical.Joins.dim(prs), Seq("canonical_name"))
       .select(col("issue_id"), col("pr_id"))
       .distinct()
   }
@@ -694,7 +681,7 @@ object SparkEntry {
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
     val hier = graft.graph.Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    graft.canonical.Joins.innerSkewSafe(t, hier, "name", saltFrom = Seq("conv_id"))
+    t.join(graft.canonical.Joins.dim(hier), Seq("name"))
       .select(col("conv_id"), col("turn_idx"), col("tool"), col("hier_id"),
         octet_length(col("config")).cast("long").as("n_bytes"),
         md5(col("config")).as("config_hash"))
@@ -721,7 +708,7 @@ object SparkEntry {
 
   /** PyG-style typed edge index (reference HeteroData edge_index per
     * (src_type, relation, dst_type) triple): endpoints remapped to the
-    * per-type local indices via skew-safe joins, deduped with a
+    * per-type local indices via size-gated joins, deduped with a
     * multiplicity count (edge_index columns + edge weight). */
   private def qPygEdges(s: SparkSession, dir: String): DataFrame = {
     val loc = pygLocal(s, dir)
@@ -730,10 +717,8 @@ object SparkEntry {
       col("node_type").as("src_type"), col("local_idx").as("src_local"))
     val dst = loc.select(col("canonical_name").as("obj"),
       col("node_type").as("dst_type"), col("local_idx").as("dst_local"))
-    val saltFrom = Seq("conv_id", "turn_idx", "mention_idx")
-    graft.canonical.Joins.innerSkewSafe(
-        graft.canonical.Joins.innerSkewSafe(t, src, "subj", saltFrom),
-        dst, "obj", saltFrom)
+    t.join(graft.canonical.Joins.dim(src), Seq("subj"))
+      .join(graft.canonical.Joins.dim(dst), Seq("obj"))
       .groupBy(col("src_type"), col("pred").as("edge_type"),
         col("dst_type"), col("src_local"), col("dst_local"))
       .agg(count(lit(1)).as("n_multi"))

@@ -115,8 +115,8 @@ object Canonical {
   /** FK remap: triples (subj, pred, obj, ...) -> edge rows with dense IDs,
     * via two size-gated joins against the node table
     * (package/hierarchical_graph.py:334-339): broadcast while the node
-    * table fits, salted shuffle join (hot canonical names spread across
-    * salt reducers) once it outgrows the gate. */
+    * table fits, a shuffle join once it outgrows the gate, where AQE
+    * splits the partitions of hot canonical names at runtime. */
   def edges(triples: DataFrame, nodes: DataFrame): DataFrame = {
     val src = nodes.select(
       col("canonical_name").as("subj"),
@@ -124,9 +124,7 @@ object Canonical {
     val dst = nodes.select(
       col("canonical_name").as("obj"),
       col("node_type").as("dst_type"), col("node_id").as("dst_id"))
-    val saltFrom = Seq("conv_id", "turn_idx", "mention_idx")
-    val withSrc = Joins.innerSkewSafe(triples, src, "subj", saltFrom)
-    Joins.innerSkewSafe(withSrc, dst, "obj", saltFrom)
+    triples.join(Joins.dim(src), Seq("subj")).join(Joins.dim(dst), Seq("obj"))
       .select(
         col("pred").as("edge_type"),
         col("src_type"), col("src_id"),

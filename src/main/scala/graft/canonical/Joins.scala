@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
   * An unconditional `broadcast()` hint overrides AQE's size check, so a
   * table that fits at sf0.1 (a few thousand nodes) OOMs the driver when
   * the entity vocabulary grows 100x. Every join against a table that
-  * scales with the corpus (the node table, the entity vocabulary) goes
-  * through these helpers:
-  *   - below the gate: explicit broadcast (same plan as before);
-  *   - above the gate: a salted shuffle join (Salt) for skew-prone keys,
-  *     or a plain shuffle join (AQE skew handling) when the stream side
-  *     is already distinct-per-key.
+  * scales with the corpus (the node table, the entity vocabulary) hints
+  * through [[dim]]:
+  *   - below the gate: explicit broadcast;
+  *   - above the gate: a plain shuffle join. A hot key (a power-law
+  *     canonical name) does not pin one reducer: AQE's skew-join rule
+  *     splits only the oversized partitions of inner, left-semi and
+  *     left-anti shuffle joins at runtime, from their real sizes.
   *
   * The gate reads Catalyst's own size estimate
   * (`optimizedPlan.stats.sizeInBytes` — exact file size for committed
@@ -34,31 +35,6 @@ object Joins {
   def dim(df: DataFrame): DataFrame =
     if (fitsBroadcast(df)) broadcast(df) else df
 
-  /** Inner equi-join where `left` may be skewed on `key` and `right`
-    * scales with the corpus: broadcast below the gate, salted shuffle
-    * join above it (`saltFrom` = columns that vary within a hot key). */
-  def innerSkewSafe(left: DataFrame, right: DataFrame, key: String,
-      saltFrom: Seq[String], salts: Int = 8): DataFrame =
-    if (fitsBroadcast(right)) left.join(broadcast(right), Seq(key))
-    else Salt.joinSkewed(left, right, key, salts, saltFrom)
-
-  /** left_semi variant (membership filters — the triple-forming L6 join). */
-  def semiSkewSafe(left: DataFrame, right: DataFrame, key: String,
-      saltFrom: Seq[String], salts: Int = 8): DataFrame =
-    if (fitsBroadcast(right)) left.join(broadcast(right), Seq(key), "left_semi")
-    else Salt.semiJoinSkewed(left, right, key, salts, saltFrom)
-
-  /** left_anti for already-distinct left keys (no skew possible — each key
-    * appears once): gate the hint, let AQE plan the big case. */
-  def antiDistinct(left: DataFrame, right: DataFrame, key: String): DataFrame =
-    left.join(dim(right), Seq(key), "left_anti")
-
-  /** left_semi twin of [[antiDistinct]]: membership filter where the left
-    * side is distinct per key, so salting buys nothing — gate the hint,
-    * let AQE (runtime sizes + skew split) plan the over-the-gate case. */
-  def semiDistinct(left: DataFrame, right: DataFrame, key: String): DataFrame =
-    left.join(dim(right), Seq(key), "left_semi")
-
   /** Remap both endpoint-name columns of an edge-pair frame to IDs through
     * two size-gated joins (the shared shape of component/containment/
     * hierarchy edge building). `nodes` must expose (nameCol, idCol);
@@ -66,15 +42,14 @@ object Joins {
     *
     * Note the gate reads plan statistics: node tables derived from
     * localCheckpoint'd inputs have no reliable estimate and conservatively
-    * take the salted shuffle path — correct at every scale, broadcast-fast
-    * only when the committed-table stats prove the side small. */
+    * take the shuffle path — correct at every scale, broadcast-fast only
+    * when the committed-table stats prove the side small. */
   def remapBoth(pairs: DataFrame, nodes: DataFrame,
       nameCol: String, idCol: String,
       srcCol: String, dstCol: String,
-      srcIdCol: String, dstIdCol: String, salts: Int = 8): DataFrame = {
+      srcIdCol: String, dstIdCol: String): DataFrame = {
     val src = nodes.select(col(nameCol).as(srcCol), col(idCol).as(srcIdCol))
     val dst = nodes.select(col(nameCol).as(dstCol), col(idCol).as(dstIdCol))
-    val withSrc = innerSkewSafe(pairs, src, srcCol, saltFrom = Seq(dstCol), salts)
-    innerSkewSafe(withSrc, dst, dstCol, saltFrom = Seq(srcCol), salts)
+    pairs.join(dim(src), Seq(srcCol)).join(dim(dst), Seq(dstCol))
   }
 }

@@ -8,6 +8,7 @@ import graft.extract.Extract
 import graft.link.Resolve
 import graft.triples.Triples
 import graft.canonical.Canonical
+import graft.ops.Clustering
 import graft.version.Versions
 
 /** The staged KG-construction dataflow. Every stage reads the *committed
@@ -56,6 +57,16 @@ object Pipeline {
   def hierNodes(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "hier_nodes") {
       Hierarchy.nodes(transcripts(spark, sfDir))
+    }
+
+  /** Single-Lloyd clustering of the corpus embeddings (vec_id, cluster):
+    * the Lloyd chain runs once per corpus, and its consumers (the
+    * kg_cluster_* queries, emb_clusters and the ensemble stage) re-read the
+    * two-long table instead of re-running assignment + means +
+    * reassignment each (VERDICT r03 #6). */
+  def nodeClusters(spark: SparkSession, sfDir: String): DataFrame =
+    StageStore.getOrCreate(spark, sfDir, "node_clusters") {
+      Clustering.lloydStep(ParquetTableIO.read(spark, s"$sfDir/embeddings.parquet"))
     }
 
   def resolved(spark: SparkSession, sfDir: String): DataFrame =

@@ -62,20 +62,18 @@ object FuzzyLink {
       dictCol: String = "name", minScorePpm: Long = 300000L): DataFrame = {
     // The dictionary is the canonical entity vocabulary — it scales with
     // the corpus, so the exact-match semi/anti joins are size-gated
-    // (Joins): broadcast hint only while the side provably fits; above
-    // the gate AQE plans from runtime sizes. The gated join shape is only
-    // skew-free when each surface appears once, so enforce distinctness
-    // here rather than trusting callers (a duplicated hot surface with an
-    // over-gate dictionary would otherwise hit an unsalted shuffle join
-    // on the hot key — VERDICT r03 advice); for already-distinct inputs
-    // this is one shuffle of the surface VOCABULARY, not the corpus.
+    // (Joins.dim): broadcast hint only while the side provably fits;
+    // above the gate AQE plans from runtime sizes and splits skewed
+    // partitions. The output has one row per surface, so enforce
+    // distinctness here rather than trusting callers; for already-distinct
+    // inputs this is one shuffle of the surface VOCABULARY, not the corpus.
     val surf = surfaces.dropDuplicates(surfaceCol)
-    val dictAsSurface = dict.select(col(dictCol).as(surfaceCol))
-    val exact = graft.canonical.Joins.semiDistinct(surf, dictAsSurface, surfaceCol)
+    val dictAsSurface = graft.canonical.Joins.dim(dict.select(col(dictCol).as(surfaceCol)))
+    val exact = surf.join(dictAsSurface, Seq(surfaceCol), "left_semi")
       .select(col(surfaceCol), col(surfaceCol).as("matched"),
         lit(1000000L).as("score_ppm"), lit("exact").as("method"))
 
-    val misses = graft.canonical.Joins.antiDistinct(surf, dictAsSurface, surfaceCol)
+    val misses = surf.join(dictAsSurface, Seq(surfaceCol), "left_anti")
 
     val sb = nameBuckets(misses, surfaceCol)
       .withColumnRenamed(surfaceCol, "surface_")

@@ -186,7 +186,7 @@ FROM li"""
   /** Deterministic synthetic corpus: `nConvs` conversations, each with
     * `turnsPerConv` turns over a vocabulary of `vocab` entities, with one
     * hot entity appearing in `hotPct`% of relation turns (skew fixture for
-    * the salted linking join / connected components).
+    * the linking joins above the broadcast gate / connected components).
     *
     * All "randomness" is `xxhash64` of the row key — identical output at
     * local[8] and local[32], no RNG state, no collect.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.SparkEntry
-import graft.graph.Pipeline
+import graft.graph.{Pipeline, StageStore}
 
 /** The probe CLI: `runMain graft.tools.Probe <cmd> <args...>`.
   *
@@ -43,7 +43,20 @@ object Probe {
       }
     }
 
-  /** Writes each query's `explain("formatted")` plan to
+  /** `explain("formatted")` text with its per-session counters — expression
+    * IDs (`#123`), exchange `plan_id`s, RDD ids and lambda object names —
+    * and the corpus's stage directory (its name carries a code stamp)
+    * replaced by fixed tokens, so two dumps of one plan are byte-identical,
+    * across commits too, and a diff of two dumps shows only what changed
+    * in the plan. */
+  def normalized(plan: String, stageBase: String): String =
+    plan.replace(stageBase, "<stages>")
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+      .replaceAll("\\$\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$\\$Lambda@x")
+
+  /** Writes each query's normalized formatted plan to
     * `<outDir>/<query>_<suffix>.txt` (every declared query when `names` is
     * empty) and returns the files. Queries whose result is built from
     * driver-side rows (emb_k_sweep, emb_cluster_align) dump the trivial
@@ -53,7 +66,9 @@ object Probe {
     new File(outDir).mkdirs()
     (if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names).map { name =>
       val plan =
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+        try normalized(
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode),
+          StageStore.baseFor(sfDir))
         catch { case NonFatal(e) => s"ERROR: $e" }
       val f = new File(outDir, s"${name}_$suffix.txt")
       val w = new PrintWriter(f, "UTF-8")

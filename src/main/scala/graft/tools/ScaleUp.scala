@@ -10,10 +10,10 @@ import graft.graph.ParquetTableIO
   *
   * This is the deliberate scale-up direction for the KG pipeline: the
   * conversation count (and with it mentions/triples) grows `copies`x but
-  * the entity vocabulary does not, so per-entity fan-in — the skew the
-  * salted joins and size gates exist for — grows `copies`x too. A corpus
-  * where the vocabulary also grew would dilute the hot keys and test
-  * nothing new.
+  * the entity vocabulary does not, so per-entity fan-in — the skew that
+  * the size gates and AQE's skew-join split handle — grows `copies`x
+  * too. A corpus where the vocabulary also grew would dilute the hot keys
+  * and test nothing new.
   *
   * documents/embeddings replicate with density-preserving id shifts
   * (shift = exact table count, so vec_id stays dense from 0 — the seed

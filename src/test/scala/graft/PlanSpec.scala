@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.graph.ParquetTableIO
@@ -71,40 +72,59 @@ class PlanSpec extends SparkSpec {
       s"extraction should stay inside codegen (no UDF barriers):\n${p.take(1200)}")
   }
 
-  test("broadcast gate: salted shuffle path engages above the gate and equals the broadcast path") {
+  test("broadcast gate: a plain shuffle join above the gate equals the broadcast path") {
     import spark.implicits._
     // hot-key fixture: one key carries 90% of the stream
     val stream = (0 until 2000).map { i =>
       (if (i % 10 == 0) s"k$i" else "hot", s"c${i % 7}", i % 13, i)
     }.toDF("obj", "conv_id", "turn_idx", "mention_idx")
-    val dict = (Seq("hot") ++ (0 until 2000 by 20).map(i => s"k$i")).toDF("obj")
+    val dict = (Seq("hot") ++ (0 until 2000 by 20).map(i => s"k$i")).toDF("canonical_name")
+    val nodes = graft.canonical.Canonical.nodes(
+      Seq("t:a", "t:b", "t:c").toDF("canonical_name"))
+    val triples = Seq(("t:a", "uses", "t:b", "c1", 1, 0), ("t:c", "uses", "t:a", "c1", 2, 0))
+      .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "mention_idx")
+    def joins = Seq(graft.triples.Triples.knownOnly(stream, dict),
+      graft.canonical.Canonical.edges(triples, nodes))
+    // Spark's own broadcast off: only the gate's hint may broadcast
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val below = joins
+      below.foreach(df => assert(plan(df).contains("BroadcastExchange"),
+        s"a small side must broadcast:\n${plan(df).take(1500)}"))
+      val key = "graft.broadcast.maxBytes"
+      sys.props(key) = "1" // force the over-the-gate path
+      try {
+        val above = joins
+        for (df <- above) {
+          val p = plan(df)
+          // (Canonical.nodes broadcasts its one-row ID offset; that join is
+          // not gated and keys on neither subj nor obj)
+          val gated = PlanWalk.collect(df.queryExecution.executedPlan) {
+            case j: BroadcastHashJoinExec
+                if j.leftKeys.flatMap(_.references.map(_.name)).exists(Set("subj", "obj")) => j
+          }
+          assert(gated.isEmpty, s"no broadcast above the gate:\n${p.take(1500)}")
+          // no replicated key side: each shuffle join keys on its one
+          // column, with no salt column beside it
+          val shuffled = PlanWalk.collect(df.queryExecution.executedPlan) {
+            case j: SortMergeJoinExec => j.leftKeys.size
+          }
+          assert(shuffled.nonEmpty && shuffled.forall(_ == 1),
+            s"plain one-key shuffle joins above the gate:\n${p.take(1500)}")
+        }
+        below.zip(above).foreach { case (b, a) => assertSameRows(b, a) }
+        assert(above(1).count() === 2L)
+      } finally sys.props.remove(key)
+    }
+  }
 
-    val viaBroadcast = graft.canonical.Joins
-      .semiSkewSafe(stream, dict, "obj", Seq("conv_id", "turn_idx"))
-    assert(plan(viaBroadcast).contains("BroadcastExchange"),
-      "small dictionary must broadcast")
-
-    val key = "graft.broadcast.maxBytes"
-    sys.props(key) = "1" // force the over-the-gate path
-    try {
-      val viaSalt = graft.canonical.Joins
-        .semiSkewSafe(stream, dict, "obj", Seq("conv_id", "turn_idx"))
-      // the salt key in the join condition is the salted path's signature
-      // (xxhash64 itself may be constant-folded into a LocalTableScan)
-      assert(plan(viaSalt).contains("_salt"),
-        s"salted path must engage above the gate:\n${plan(viaSalt).take(1500)}")
-      val a = viaBroadcast.collect().map(_.toSeq).toSet
-      val b = viaSalt.collect().map(_.toSeq).toSet
-      assert(a === b, "salted and broadcast paths must agree")
-      // edge remap takes the salted path too, and stays correct
-      val nodes = graft.canonical.Canonical.nodes(
-        Seq("t:a", "t:b", "t:c").toDF("canonical_name"))
-      val triples = Seq(("t:a", "uses", "t:b", "c1", 1, 0), ("t:c", "uses", "t:a", "c1", 2, 0))
-        .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "mention_idx")
-      val e = graft.canonical.Canonical.edges(triples, nodes)
-      assert(plan(e).contains("_salt"))
-      assert(e.count() === 2L)
-    } finally sys.props.remove(key)
+  test("kg_entity_convs: one exchange, partial collect_set below it") {
+    val df = SparkEntry.queries("kg_entity_convs")(spark, sfDir)
+    val exchanges = PlanWalk.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.size === 1, plan(df).take(2000))
+    assert(exchanges.head.child.toString.contains("partial_collect_set"),
+      s"collect_set must combine map-side:\n${plan(df).take(2000)}")
   }
 
   test("hierarchy turn-0 is a pushed parquet filter on the committed transcripts table") {

@@ -3,8 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-/** One session factory and one probe CLI: a source scan keeps it so. */
-class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
+/** One session factory, one probe CLI and one declaration per stage name:
+  * a source scan keeps it so. Probe's plan dumps diff cleanly. */
+class ProbeSpec extends SparkSpec {
 
   private def sources(dir: File): Seq[File] =
     if (dir.isDirectory) dir.listFiles.toSeq.flatMap(sources)
@@ -12,8 +13,9 @@ class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def text(f: File) = new String(Files.readAllBytes(f.toPath), "UTF-8")
 
+  private val root = new File("src/main/scala")
+
   test("sessions come from Pipeline.session and the tools have one main") {
-    val root = new File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)
     val builders = sources(root)
       .filterNot(f => Seq("graph/Pipeline.scala", "graft/Bench.scala", "graft/Verify.scala")
@@ -25,5 +27,27 @@ class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
       .map(f => f -> "def main\\(".r.findAllIn(text(f)).size).filter(_._2 > 0)
     assert(mains.map(_._2).sum === 1,
       s"graft.tools holds one CLI, graft.tools.Probe; add a subcommand there: $mains")
+  }
+
+  test("each literal stage name is declared at exactly one getOrCreate call site") {
+    // a stage committed from two call sites is built by whichever runs
+    // first, so the two builds would have to be kept identical by hand
+    val call = """getOrCreate\([^,()]+,[^,()]+,\s*"([^"]+)"\)""".r
+    val sites = sources(root).flatMap(f =>
+      call.findAllMatchIn(text(f)).map(m => m.group(1) -> f.getName))
+    assert(sites.size >= 10, s"the scan found too few stage declarations: $sites")
+    val twice = sites.groupBy(_._1).filter(_._2.size > 1)
+    assert(twice.isEmpty, s"stage names declared more than once: $twice")
+  }
+
+  test("two plan dumps of one query in one session are byte-identical") {
+    val sf = "/root/testdata/sf0.001"
+    val dumps = Seq("a", "b").map { suffix =>
+      val out = Files.createTempDirectory("graft_probe_plans").toString
+      val Seq(f) = graft.tools.Probe.plans(spark, sf, out, suffix, Seq("kg_entity_convs"))
+      text(f)
+    }
+    assert(dumps.head.contains("Exchange") && !dumps.head.startsWith("ERROR"), dumps.head)
+    assert(dumps.head === dumps(1))
   }
 }

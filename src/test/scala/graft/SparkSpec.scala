@@ -28,6 +28,17 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `f` with the given session confs set; each is restored (or
+    * unset) afterwards. */
+  def withConf[A](confs: (String, String)*)(f: => A): A = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Jobs started on this thread while `f` runs. */
   def jobsOf(f: => Any): Int = {
     val sc = spark.sparkContext
