@@ -14,7 +14,7 @@ import graft.graph.{Pipeline, StageStore}
   *
   * {{{
   * query   <sfDir> <reps> <query...>             wall time of each rep per query
-  * plans   <sfDir> <outDir> <suffix> [query...]  formatted plans, one file per query
+  * plans   <sfDir> <outDir> <suffix> [query...]  normalized plans, one file per query
   * scaling single <p> <nConvs> <turns>           one pipeline run at local[p]
   * scaling control <p> [rows]                    the host-ceiling reference job
   * scaling pair [nConvs] [turns]                 local[2] vs local[8] efficiency
@@ -49,7 +49,7 @@ object Probe {
     * replaced by fixed tokens, so two dumps of one plan are byte-identical,
     * across commits too, and a diff of two dumps shows only what changed
     * in the plan. */
-  def normalized(plan: String, stageBase: String): String =
+  private def normalized(plan: String, stageBase: String): String =
     plan.replace(stageBase, "<stages>")
       .replaceAll("#\\d+", "#x")
       .replaceAll("plan_id=\\d+", "plan_id=x")

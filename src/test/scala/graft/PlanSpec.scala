@@ -268,6 +268,16 @@ class PlanSpec extends SparkSpec {
       dump.take(1500))
   }
 
+  test("Probe plans: two dumps of one query in one session are byte-identical") {
+    val dumps = Seq("a", "b").map { suffix =>
+      val out = Files.createTempDirectory("graft_probe_plans").toString
+      val Seq(f) = graft.tools.Probe.plans(spark, sfDir, out, suffix, Seq("kg_entity_convs"))
+      new String(Files.readAllBytes(f.toPath), "UTF-8")
+    }
+    assert(dumps.head.contains("Exchange") && !dumps.head.startsWith("ERROR"), dumps.head)
+    assert(dumps.head === dumps(1))
+  }
+
   test("incremental probe: corpus docs are candidate-filtered BEFORE shingling (batch)") {
     import spark.implicits._
     val corpus = Seq(

@@ -4,8 +4,8 @@ import java.io.File
 import java.nio.file.Files
 
 /** One session factory, one probe CLI and one declaration per stage name:
-  * a source scan keeps it so. Probe's plan dumps diff cleanly. */
-class ProbeSpec extends SparkSpec {
+  * a source scan keeps it so. */
+class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def sources(dir: File): Seq[File] =
     if (dir.isDirectory) dir.listFiles.toSeq.flatMap(sources)
@@ -38,16 +38,5 @@ class ProbeSpec extends SparkSpec {
     assert(sites.size >= 10, s"the scan found too few stage declarations: $sites")
     val twice = sites.groupBy(_._1).filter(_._2.size > 1)
     assert(twice.isEmpty, s"stage names declared more than once: $twice")
-  }
-
-  test("two plan dumps of one query in one session are byte-identical") {
-    val sf = "/root/testdata/sf0.001"
-    val dumps = Seq("a", "b").map { suffix =>
-      val out = Files.createTempDirectory("graft_probe_plans").toString
-      val Seq(f) = graft.tools.Probe.plans(spark, sf, out, suffix, Seq("kg_entity_convs"))
-      text(f)
-    }
-    assert(dumps.head.contains("Exchange") && !dumps.head.startsWith("ERROR"), dumps.head)
-    assert(dumps.head === dumps(1))
   }
 }
