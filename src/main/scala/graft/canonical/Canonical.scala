@@ -1,6 +1,6 @@
 package graft.canonical
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,8 @@ object Canonical {
   /** Scalable dense-ID assignment: two-phase with no global sort.
     * Phase 1: deterministic bucket = first `hexChars` hex chars of
     * md5(key) (16^hexChars buckets); per-bucket counts -> prefix offsets
-    * (16^hexChars rows, collected + broadcast). Phase 2: row_number within
-    * bucket (ordered by key) + bucket offset.
+    * on the driver. Phase 2: row_number within bucket (ordered by key) +
+    * bucket offset.
     *
     * IDs are dense, unique, and a pure function of the key set — stable
     * across cluster sizes. The resulting total order is exactly
@@ -52,11 +52,19 @@ object Canonical {
     * needs. Same two-phase shape as [[denseIdsBucketed]], keyed by
     * (group, bucket); NO per-group single-task window (a plain
     * `Window.partitionBy(group)` would funnel each type's billions of
-    * rows through one task at corpus scale). The collected offset table
-    * is |groups| × 16^hexChars rows, so `partCol` must be a BOUNDED
-    * vocabulary (node types), never a corpus-scaling key. Within-group
-    * order is `ORDER BY substr(md5(key),1,hexChars), key` — any SQL
-    * engine reproduces it with one partitioned row_number. */
+    * rows through one task at corpus scale). Within-group order is
+    * `ORDER BY substr(md5(key),1,hexChars), key` — any SQL engine
+    * reproduces it with one partitioned row_number.
+    *
+    * The bucket is the md5 prefix read as an integer (same order as the
+    * hex string). The per-(group, bucket) counts are collected and turned
+    * into exclusive prefix sums on the driver, one array of 16^hexChars
+    * offsets per group, and the ID projection reads its offset from that
+    * literal (group -> array, indexed by bucket): no offset table, no
+    * join, no broadcast job. The literal holds |groups| × 16^hexChars
+    * longs, so `partCol` must be a BOUNDED vocabulary (node types), never
+    * a corpus-scaling key. Rows with a null key or group get no ID and
+    * are dropped. */
   def denseIdsBucketedBy(names: DataFrame, partCol: String,
       keyCol: String = "canonical_name", idCol: String = "local_idx",
       hexChars: Int = 2): DataFrame = {
@@ -64,28 +72,28 @@ object Canonical {
       org.apache.spark.sql.types.StringType,
       s"denseIdsBucketedBy: group column '$partCol' must be StringType " +
         "(a bounded label vocabulary) — cast numeric group keys first")
-    val spark = names.sparkSession
+    val nBuckets = 1 << (4 * hexChars)
     // the bucketed input is consumed twice (count pass + id pass):
     // materialize it once so the upstream plan doesn't execute twice.
     // LAZY checkpoint: the counts collect right below is the first action
     // and scans every partition, so it materializes the cache in the same
     // job instead of paying a separate eager-checkpoint job first.
-    val withB = names.withColumn("_b",
-      substring(md5(col(keyCol)), 1, hexChars))
+    val withB = names
+      .filter(col(partCol).isNotNull && col(keyCol).isNotNull)
+      .withColumn("_b", conv(substring(md5(col(keyCol)), 1, hexChars), 16, 10).cast("int"))
       .localCheckpoint(false)
-    val counts = withB.groupBy(partCol, "_b").count().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val offsets = counts.groupBy(_._1).toSeq.flatMap { case (g, rows) =>
-      val sorted = rows.sortBy(_._2)
-      sorted.map(_._2).zip(sorted.scanLeft(0L)(_ + _._3))
-        .map { case (b, off) => (g, b, off) }
-    }
-    val offsetsDf = spark.createDataFrame(offsets).toDF(partCol, "_b", "_off")
+    val offsets = withB.groupBy(partCol, "_b").count().collect()
+      .groupBy(_.getString(0)).map { case (g, rows) =>
+        val sizes = new Array[Long](nBuckets)
+        rows.foreach(r => sizes(r.getInt(1)) = r.getLong(2))
+        g -> sizes.scanLeft(0L)(_ + _).toSeq.take(nBuckets)
+      }
+    val offsetsOf = typedLit(offsets)
     val w = Window.partitionBy(partCol, "_b").orderBy(keyCol)
     withB
-      .join(broadcast(offsetsDf), Seq(partCol, "_b"))
-      .withColumn(idCol, (row_number().over(w) - 1 + col("_off")).cast("long"))
-      .drop("_b", "_off")
+      .withColumn(idCol, (row_number().over(w) - 1 +
+        element_at(offsetsOf(col(partCol)), col("_b") + 1)).cast("long"))
+      .drop("_b")
   }
 
   /** Node table from canonical names: (node_type, node_id, canonical_name).
@@ -98,19 +106,17 @@ object Canonical {
         col("node_id"),
         col("canonical_name"))
 
-  /** Minted node rows appended after the known vocabulary, IDs continuing
-    * densely (reference package/call_graph.py:283-315: fresh sequential IDs
-    * offset by the existing max). */
-  def mintedNodes(knownNodes: DataFrame, mintedNames: DataFrame): DataFrame = {
-    val offset = knownNodes.agg(
-      coalesce(max(col("node_id")) + 1, lit(0L)).as("_off"))
+  /** Minted node rows appended after `knownCount` known nodes, IDs
+    * continuing densely (reference package/call_graph.py:283-315: fresh
+    * sequential IDs offset by the existing max). Known IDs are dense
+    * 0..n-1, so their count is the offset: the caller reads it from the
+    * committed node table's footers, with no aggregate over the table. */
+  def mintedNodes(knownCount: Long, mintedNames: DataFrame): DataFrame =
     denseIdsBucketed(mintedNames)
-      .crossJoin(broadcast(offset))
       .select(
         split_part(col("canonical_name"), lit(":"), lit(1)).as("node_type"),
-        (col("node_id") + col("_off")).as("node_id"),
+        (col("node_id") + knownCount).as("node_id"),
         col("canonical_name"))
-  }
 
   /** FK remap: triples (subj, pred, obj, ...) -> edge rows with dense IDs,
     * via two size-gated joins against the node table

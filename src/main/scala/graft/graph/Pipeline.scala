@@ -103,7 +103,10 @@ object Pipeline {
     val nm = Extract.mentions(newTranscripts).localCheckpoint()
     val m = committedMentions.unionByName(nm)
     val r = committedResolved.unionByName(Resolve.resolved(nm))
-    (m, r, Triples.knownOnly(r, Triples.entityNames(m)))
+    // the vocabulary without its distinct: a left-semi join needs no
+    // distinct, and above the broadcast gate this side then reaches the
+    // join through its own shuffle stage, which AQE's skew rule needs
+    (m, r, Triples.knownOnly(r, Triples.entityMentions(m)))
   }
 
   def nodes(spark: SparkSession, sfDir: String): DataFrame =
@@ -125,10 +128,9 @@ object Pipeline {
 
   def mintedNodes(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "minted_nodes") {
-      Canonical.mintedNodes(
-        nodes(spark, sfDir),
-        Triples.mintedNames(resolved(spark, sfDir),
-          nodes(spark, sfDir).select("canonical_name")))
+      val known = nodes(spark, sfDir)
+      Canonical.mintedNodes(StageStore.committedRows(spark, sfDir, "nodes"),
+        Triples.mintedNames(resolved(spark, sfDir), known.select("canonical_name")))
     }
 
   def edges(spark: SparkSession, sfDir: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,18 +19,15 @@ import org.apache.spark.sql.functions._
   *   2. `a<k>`  -> most recent alias binding at or before the use site
   *   3. else    -> identity (call_graph.py:748)
   *
-  * Distribution: the reference resolves row-by-row against Python dicts.
-  * Here the as-of alias lookup is a *window*, not a join against collected
-  * state: binding events and use events for the same (conv_id, alias) are
-  * unioned, ordered by (turn_idx, mention_idx), and
-  * `last(target, ignoreNulls)` over an unbounded-preceding frame yields the
-  * latest binding in scope. Everything shuffles on conversation-local keys
-  * (conv_id[, ref]) — uniform, no skew, no driver-side state, and identical
-  * results at any parallelism.
+  * Distribution: the reference resolves row-by-row against Python dicts,
+  * one file at a time. Here one conversation is one unit of work, as in
+  * the streaming `StatefulResolve`: its definitions, bindings and
+  * relations share one hash partition on `conv_id`, and each lookup is a
+  * prefix window over the conversation's ordered event stream
+  * (SparkER's "partition once by block key, resolve each block locally").
+  * No driver-side state, no join, identical results at any parallelism.
   */
 object Resolve {
-
-  private val aliasPat = "^a[0-9]+$"
 
   /** Alias-binding events: (conv_id, ref, turn_idx, mention_idx, target). */
   def bindings(mentions: DataFrame): DataFrame =
@@ -41,103 +38,54 @@ object Resolve {
         col("subj").as("ref"), col("obj").as("target"))
 
   /** Resolve subj/obj of every relation mention. Output:
-    * conv_id, turn_idx, mention_idx, subj, pred, obj, ts (resolved).
+    * conv_id, turn_idx, mention_idx, hop, subj, pred, obj, ts (resolved),
+    * one row per relation mention.
     *
-    * `self` resolves to the FIRST definition at or before the use site
-    * (the enclosing-scope semantics — a def always precedes its uses in
-    * the reference's walk): a per-conversation min aggregate + position
-    * compare, NOT a window. Aliases resolve to the LATEST binding at or
-    * before the use site (shadowing) via the as-of window. A use before
-    * any binding falls back to identity. This matches the streaming
-    * stateful resolver exactly, including out-of-grammar shapes like
-    * self-before-any-def (the first def's position then exceeds the use
-    * position and the compare yields identity). */
+    * One scan of `mentions` projects each event once: a relation keeps
+    * its refs in `subj`/`obj`; a binding carries its alias in both and
+    * its target in `_target`; a definition carries its name in `_def`.
+    * Three prefix windows, each ordered by (turn_idx, mention_idx, hop)
+    * over rows unbounded-preceding to current, then resolve both sides:
+    *   - `first(_def)` per conversation: the first definition at or
+    *     before the use site, for `self` (identity before any def);
+    *   - `last(_target)` per (conversation, subj) and per (conversation,
+    *     obj): the latest binding of that alias in scope (identity when
+    *     unbound). Bindings are `a<k>` by the extraction grammar, so a
+    *     plain name never finds one.
+    * The conversation window is declared first: its
+    * `hashpartitioning(conv_id)` also satisfies the two (conv_id, ref)
+    * windows, so the plan shuffles once and only re-sorts. This matches
+    * the streaming stateful resolver exactly, including out-of-grammar
+    * shapes like self-before-any-def.
+    *
+    * AQE cannot split a window partition: a conversation resolves in one
+    * task (as in `StatefulResolve`), so a mega-conversation is a
+    * straggler (ROADMAP item 5). */
   def resolved(mentions: DataFrame): DataFrame = {
-    val rels = mentions.filter(col("kind") === "relation")
-
-    // hop is part of the natural key: a chain segment fans out to several
-    // relation rows sharing (conv_id, turn_idx, mention_idx) — without hop
-    // in the re-join key the per-side resolutions would cross-match.
-    val uses = rels
+    val kind = col("kind")
+    val (isRel, isBinding, isDef) =
+      (kind === "relation", kind === "alias_binding", kind === "entity_def")
+    val events = mentions
+      .filter(isRel || isBinding || isDef)
       .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
-        lit("s").as("side"), col("subj").as("ref"))
-      .unionByName(rels.select(col("conv_id"), col("turn_idx"),
-        col("mention_idx"), col("hop"), lit("o").as("side"), col("obj").as("ref")))
-
-    // `self` = FIRST definition at or before the use site. "First at or
-    // before" of a per-conversation stream is a per-conversation MIN, not
-    // a window: aggregate the definitions to one (position, target) row
-    // per conversation (map-side combinable min(struct)), join the self
-    // uses against it, and compare positions — the def is in scope iff
-    // (def_turn, def_mention, 0) <= (turn, mention, hop), and def hop is
-    // always 0, so the tuple compare reduces to the two leading fields.
-    // This keeps both the definition events AND the self uses out of the
-    // alias as-of window below — at sf0.1 that halves the windowed event
-    // stream (4.9M -> 2.6M rows through the shuffle+sort; guide §2.3
-    // "aggregate before you shuffle"). Result is identical to the window
-    // form: first(target, ignoreNulls) over the ordered prefix is exactly
-    // the min-position def when that def precedes the use, else null.
-    val firstDef = mentions.filter(col("kind") === "entity_def")
-      .groupBy(col("conv_id"))
-      .agg(min(struct(col("turn_idx"), col("mention_idx"), col("subj")))
-        .as("_fd"))
-      .select(col("conv_id"), col("_fd.turn_idx").as("_dt"),
-        col("_fd.mention_idx").as("_dm"), col("_fd.subj").as("_dtarget"))
-
-    val selfUses = uses.filter(col("ref") === "self")
-    val aliasUses = uses.filter(col("ref").rlike(aliasPat))
-
-    // both sides conv-keyed and bounded per conversation — plain equi
-    // join, AQE picks broadcast while firstDef actually fits
-    val selfResolved = selfUses
-      .join(firstDef, Seq("conv_id"), "left")
-      .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
-        col("side"),
-        coalesce(
-          when(col("_dt") < col("turn_idx") ||
-            (col("_dt") === col("turn_idx") && col("_dm") <= col("mention_idx")),
-            col("_dtarget")),
-          col("ref")).as("resolved_ref"))
-
-    // aliases keep the true as-of window (latest-binding-wins shadowing
-    // is order-dependent state), but the stream now carries ONLY alias
-    // events — binding emissions + alias uses
-    val events = bindings(mentions)
-      .select(col("conv_id"), col("ref"), col("turn_idx"), col("mention_idx"),
-        lit(0).as("hop"), lit(null).cast("string").as("side"), col("target"))
-      .unionByName(aliasUses.select(col("conv_id"), col("ref"), col("turn_idx"),
-        col("mention_idx"), col("hop"), col("side"),
-        lit(null).cast("string").as("target")))
-
-    val w = Window
-      .partitionBy("conv_id", "ref")
+        isRel.as("_rel"),
+        when(!isDef, col("subj")).as("subj"),
+        col("pred"),
+        when(isRel, col("obj")).when(isBinding, col("subj")).as("obj"),
+        col("ts"),
+        when(isBinding, col("obj")).as("_target"),
+        when(isDef, col("subj")).as("_def"))
+    def prefix(keys: String*) = Window.partitionBy(keys.map(col): _*)
       .orderBy("turn_idx", "mention_idx", "hop")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val refResolved = events
-      .withColumn("in_scope", last("target", ignoreNulls = true).over(w))
-      .filter(col("side").isNotNull) // keep use events only
+    def side(ref: String, bound: String) =
+      coalesce(when(col(ref) === "self", col("_fd")), col(bound), col(ref)).as(ref)
+    events
+      .withColumn("_fd", first("_def", ignoreNulls = true).over(prefix("conv_id")))
+      .withColumn("_bs", last("_target", ignoreNulls = true).over(prefix("conv_id", "subj")))
+      .withColumn("_bo", last("_target", ignoreNulls = true).over(prefix("conv_id", "obj")))
+      .filter(col("_rel"))
       .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
-        col("side"), coalesce(col("in_scope"), col("ref")).as("resolved_ref"))
-      .unionByName(selfResolved)
-
-    // pivot both sides into one row per mention key (each (key, side) is
-    // unique, so min() just picks the value): ONE join back to the
-    // relation stream instead of two — one less shuffle+sort of the
-    // mention-key stream
-    val bySide = refResolved
-      .groupBy("conv_id", "turn_idx", "mention_idx", "hop")
-      .agg(
-        min(when(col("side") === "s", col("resolved_ref"))).as("subj_res"),
-        min(when(col("side") === "o", col("resolved_ref"))).as("obj_res"))
-
-    rels
-      .join(bySide, Seq("conv_id", "turn_idx", "mention_idx", "hop"), "left")
-      .select(
-        col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
-        coalesce(col("subj_res"), col("subj")).as("subj"),
-        col("pred"),
-        coalesce(col("obj_res"), col("obj")).as("obj"),
-        col("ts"))
+        side("subj", "_bs"), col("pred"), side("obj", "_bo"), col("ts"))
   }
 }

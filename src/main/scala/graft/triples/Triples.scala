@@ -20,17 +20,21 @@ import graft.canonical.Joins
   */
 object Triples {
 
-  /** Distinct defined entity names. Container entities referenced by an
-    * `extends` clause are part of the vocabulary too (reference: class
-    * nodes exist for every base class, knowledge_graph.py:1122-1197). */
-  def entityNames(mentions: DataFrame): DataFrame =
+  /** Defined entity names, one row per defining mention (repeats kept).
+    * Container entities referenced by an `extends` clause are part of the
+    * vocabulary too (reference: class nodes exist for every base class,
+    * knowledge_graph.py:1122-1197): one scan, each definition exploding
+    * to its name and its non-empty parent. */
+  def entityMentions(mentions: DataFrame): DataFrame =
     mentions
       .filter(col("kind") === "entity_def")
-      .select(col("subj").as("canonical_name"))
-      .unionAll(mentions
-        .filter(col("kind") === "entity_def" && col("parent") =!= "")
-        .select(col("parent").as("canonical_name")))
-      .distinct()
+      .select(explode(
+        when(col("parent") =!= "", array(col("subj"), col("parent")))
+          .otherwise(array(col("subj")))).as("canonical_name"))
+
+  /** Distinct defined entity names: [[entityMentions]] deduplicated. */
+  def entityNames(mentions: DataFrame): DataFrame =
+    entityMentions(mentions).distinct()
 
   /** Keep resolved relations whose object is a defined entity
     * (subjects always resolve to defined entities in this grammar, as in

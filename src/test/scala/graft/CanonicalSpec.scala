@@ -61,13 +61,22 @@ class CanonicalSpec extends SparkSpec {
     assert(t0.toMap === expected)
   }
 
-  test("mintedNodes continue densely after known nodes") {
-    val known = Canonical.nodes(Seq("t:a", "t:b").toDF("canonical_name"))
-    val minted = Canonical.mintedNodes(known, Seq("x:new2", "x:new1").toDF("canonical_name"))
+  test("mintedNodes continue densely after a known node count; a null name is dropped") {
+    val minted = Canonical.mintedNodes(2L,
+      Seq("x:new2", "x:new1", null).toDF("canonical_name"))
     val rows = minted.collect().map(r => (r.getString(2), r.getLong(1))).toMap
-    assert(rows.values.toSet === Set(2L, 3L), "minted IDs continue after known max")
+    assert(rows.values.toSet === Set(2L, 3L), "minted IDs continue after the known count")
     assert(rows.keySet === Set("x:new1", "x:new2"))
     assert(minted.select("node_type").distinct().as[String].collect().toSet === Set("x"))
+  }
+
+  test("denseIdsBucketedBy drops rows with a null key or group") {
+    val names = Seq(("t", "b"), ("t", null), (null, "c"), ("t", "a"))
+      .toDF("node_type", "canonical_name")
+    val ids = Canonical.denseIdsBucketedBy(names, "node_type", hexChars = 1).collect()
+      .map(r => r.getAs[String]("canonical_name") -> r.getAs[Long]("local_idx")).toMap
+    assert(ids.keySet === Set("a", "b"))
+    assert(ids.values.toSeq.sorted === Seq(0L, 1L))
   }
 
   test("edges remap endpoints through the node table") {

@@ -244,6 +244,14 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("committing resolved from a committed mentions runs two jobs") {
+    withStageRoot {
+      Pipeline.mentions(spark, sf0001)
+      assert(jobsOf(Pipeline.resolved(spark, sf0001)) === 2,
+        "one shuffle map stage and the write")
+    }
+  }
+
   test("two threads asking for one stage build it once and read one commit") {
     withStageRoot {
       val input = Files.createTempDirectory("graft_race_input").toString

@@ -5,8 +5,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.graph.ParquetTableIO
@@ -30,6 +33,49 @@ class PlanSpec extends SparkSpec {
     val p = plan(t)
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       s"expected broadcast semi join, got:\n${p.take(2000)}")
+  }
+
+  test("resolved: one FileScan, one hash exchange on conv_id, no broadcast") {
+    withStageRoot {
+      val p = graft.link.Resolve.resolved(graft.graph.Pipeline.mentions(spark, sfDir))
+        .queryExecution.executedPlan
+      val keys = PlanWalk.collect(p) {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+          case other => Seq(other.toString)
+        }
+      }
+      assert(keys === Seq(Seq("conv_id")), p.toString.take(3000))
+      assert(PlanWalk.collect(p) { case s: FileSourceScanExec => s }.size === 1, p.toString.take(3000))
+      assert(PlanWalk.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, p.toString.take(3000))
+    }
+  }
+
+  test("nodes: the entity vocabulary reads mentions with one FileScan") {
+    withStageRoot {
+      val p = graft.graph.Pipeline.entityNames(spark, sfDir).queryExecution.executedPlan
+      val scans = PlanWalk.collect(p) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+      assert(scans.map(_.map(_.getName)) === Seq(Seq("mentions")), p.toString.take(2000))
+    }
+  }
+
+  test("minted_nodes: no aggregate over nodes and no nested-loop join in its commit") {
+    withStageRoot {
+      graft.graph.Pipeline.resolved(spark, sfDir)
+      graft.graph.Pipeline.nodes(spark, sfDir)
+      val nodesDir = new File(graft.graph.StageStore.baseFor(sfDir), "nodes").toURI.toString
+      val ran = plansOf(graft.graph.Pipeline.mintedNodes(spark, sfDir))
+      assert(ran.nonEmpty)
+      for (p <- ran) {
+        assert(PlanWalk.collect(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+          p.toString.take(3000))
+        val aggOverNodes = PlanWalk.collect(p) { case a: BaseAggregateExec => a }.exists(a =>
+          PlanWalk.collect(a) { case s: FileSourceScanExec => s }
+            .exists(_.relation.location.rootPaths.exists(_.toUri.toString.stripSuffix("/") ==
+              nodesDir.stripSuffix("/"))))
+        assert(!aggOverNodes, p.toString.take(3000))
+      }
+    }
   }
 
   test("transcript derivation broadcasts all dimension tables") {

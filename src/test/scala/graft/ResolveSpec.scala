@@ -67,4 +67,34 @@ class ResolveSpec extends SparkSpec {
     // c2 never bound a1 -> identity
     assert(r === Set(Seq("c2", 0, 1, "t:b", "uses", "a1")))
   }
+
+  test("a chain segment resolves an alias on each of its two hops") {
+    val r = resolve(
+      ("c1", 0, "define entity t:a ; define entity t:b ; define entity t:c"),
+      ("c1", 1, "alias a1 => t:a ; alias a2 => t:b"),
+      ("c1", 2, "chain a1 -[calls]-> a2 -[reads]-> t:c"))
+    assert(r === Set(
+      Seq("c1", 2, 0, "t:a", "calls", "t:b"),
+      Seq("c1", 2, 0, "t:b", "reads", "t:c")))
+  }
+
+  test("self as the object resolves to the first definition in scope") {
+    val r = resolve(
+      ("c1", 0, "link t:x -[relates_to]-> self"),
+      ("c1", 1, "define entity t:home ; link t:x -[relates_to]-> self"))
+    assert(r === Set(
+      Seq("c1", 0, 0, "t:x", "relates_to", "self"),
+      Seq("c1", 1, 1, "t:x", "relates_to", "t:home")))
+  }
+
+  test("resolution is identical at 1 and 7 shuffle partitions") {
+    val m = Extract.mentions(graft.sources.Transcripts.synthetic(spark, nConvs = 60,
+      turnsPerConv = 12, vocab = 20, hotPct = 30))
+    def at(n: Int) = withConf("spark.sql.shuffle.partitions" -> n.toString) {
+      rowSet(Resolve.resolved(m))
+    }
+    val one = at(1)
+    assert(one.nonEmpty)
+    assert(at(7) === one)
+  }
 }

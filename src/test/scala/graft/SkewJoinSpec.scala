@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, xxhash64}
 import graft.canonical.Joins
 import graft.extract.Extract
+import graft.graph.Pipeline
 import graft.link.Resolve
 import graft.sources.Transcripts
 import graft.triples.Triples
@@ -73,6 +75,22 @@ class SkewJoinSpec extends SparkSpec {
     val viaBroadcast = known
     assert(viaBroadcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
     val (rows, plan) = aboveGate(known)
+    assertSkewSplit(plan)
+    assert(plan.contains("LeftSemi"), plan.take(2000))
+    assert(rows === rowSet(viaBroadcast))
+    assert(rows.nonEmpty)
+  }
+
+  test("60 % hot append: appendBatch's vocabulary join is split above the gate") {
+    val corpus = Transcripts.synthetic(spark, nConvs = 300, turnsPerConv = 12,
+      vocab = 40, hotPct = 60)
+    val isOld = xxhash64(col("conv_id")) % 2 === 0
+    val mOld = Extract.mentions(corpus.filter(isOld))
+    val rOld = Resolve.resolved(mOld)
+    def appended = Pipeline.appendBatch(mOld, rOld, corpus.filter(!isOld))._3
+    val viaBroadcast = appended
+    assert(viaBroadcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
+    val (rows, plan) = aboveGate(appended)
     assertSkewSplit(plan)
     assert(plan.contains("LeftSemi"), plan.take(2000))
     assert(rows === rowSet(viaBroadcast))

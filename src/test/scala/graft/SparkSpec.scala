@@ -2,11 +2,16 @@ package graft
 
 import java.nio.file.Files
 import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (Test / fork := true). */
@@ -58,6 +63,24 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     n.get
+  }
+
+  /** Executed plans of the queries and writes run while `f` runs. */
+  def plansOf(f: => Any): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try f
+    finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    plans.asScala.toSeq
   }
 
   /** Order-insensitive comparison (the reference's CFG-test style:
