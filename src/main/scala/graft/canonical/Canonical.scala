@@ -124,17 +124,16 @@ object Canonical {
     * table fits, a shuffle join once it outgrows the gate, where AQE
     * splits the partitions of hot canonical names at runtime. */
   def edges(triples: DataFrame, nodes: DataFrame): DataFrame = {
-    val src = nodes.select(
-      col("canonical_name").as("subj"),
-      col("node_type").as("src_type"), col("node_id").as("src_id"))
-    val dst = nodes.select(
-      col("canonical_name").as("obj"),
-      col("node_type").as("dst_type"), col("node_id").as("dst_id"))
-    triples.join(Joins.dim(src), Seq("subj")).join(Joins.dim(dst), Seq("obj"))
+    // one dimension frame for both endpoints: below the gate the two
+    // joins broadcast the same plan, and Spark reuses that exchange
+    val dim = Joins.dim(nodes.select("canonical_name", "node_type", "node_id"))
+    triples
+      .join(dim.as("src"), col("subj") === col("src.canonical_name"))
+      .join(dim.as("dst"), col("obj") === col("dst.canonical_name"))
       .select(
         col("pred").as("edge_type"),
-        col("src_type"), col("src_id"),
-        col("dst_type"), col("dst_id"),
+        col("src.node_type").as("src_type"), col("src.node_id").as("src_id"),
+        col("dst.node_type").as("dst_type"), col("dst.node_id").as("dst_id"),
         col("conv_id"), col("turn_idx"), col("mention_idx"))
   }
 

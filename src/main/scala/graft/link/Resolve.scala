@@ -43,20 +43,19 @@ object Resolve {
     *
     * One scan of `mentions` projects each event once: a relation keeps
     * its refs in `subj`/`obj`; a binding carries its alias in both and
-    * its target in `_target`; a definition carries its name in `_def`.
-    * Three prefix windows, each ordered by (turn_idx, mention_idx, hop)
-    * over rows unbounded-preceding to current, then resolve both sides:
-    *   - `first(_def)` per conversation: the first definition at or
-    *     before the use site, for `self` (identity before any def);
-    *   - `last(_target)` per (conversation, subj) and per (conversation,
-    *     obj): the latest binding of that alias in scope (identity when
-    *     unbound). Bindings are `a<k>` by the extraction grammar, so a
-    *     plain name never finds one.
-    * The conversation window is declared first: its
-    * `hashpartitioning(conv_id)` also satisfies the two (conv_id, ref)
-    * windows, so the plan shuffles once and only re-sorts. This matches
-    * the streaming stateful resolver exactly, including out-of-grammar
-    * shapes like self-before-any-def.
+    * its target in `_target`; a definition carries `self` in both and
+    * its name in `_def`. The events are hash-partitioned on `conv_id`
+    * once; that partitioning satisfies both windows below, so the plan
+    * shuffles once and only re-sorts. Each side of a relation is
+    * resolved by one prefix window over (conv_id, ref), ordered by
+    * (turn_idx, mention_idx, hop), rows unbounded-preceding to current:
+    *   - under `self`, `first(_def)` is the first definition at or
+    *     before the use site (identity before any definition);
+    *   - under an alias, `last(_target)` is its latest binding in scope
+    *     (identity when unbound). Bindings are `a<k>` by the extraction
+    *     grammar, so a plain name finds neither.
+    * This matches the streaming stateful resolver exactly, including
+    * out-of-grammar shapes like self-before-any-def.
     *
     * AQE cannot split a window partition: a conversation resolves in one
     * task (as in `StatefulResolve`), so a mega-conversation is a
@@ -65,27 +64,30 @@ object Resolve {
     val kind = col("kind")
     val (isRel, isBinding, isDef) =
       (kind === "relation", kind === "alias_binding", kind === "entity_def")
+    val self = lit("self")
     val events = mentions
       .filter(isRel || isBinding || isDef)
       .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
         isRel.as("_rel"),
-        when(!isDef, col("subj")).as("subj"),
+        when(isDef, self).otherwise(col("subj")).as("subj"),
         col("pred"),
-        when(isRel, col("obj")).when(isBinding, col("subj")).as("obj"),
+        when(isDef, self).when(isBinding, col("subj")).otherwise(col("obj")).as("obj"),
         col("ts"),
         when(isBinding, col("obj")).as("_target"),
         when(isDef, col("subj")).as("_def"))
-    def prefix(keys: String*) = Window.partitionBy(keys.map(col): _*)
-      .orderBy("turn_idx", "mention_idx", "hop")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def side(ref: String, bound: String) =
-      coalesce(when(col(ref) === "self", col("_fd")), col(bound), col(ref)).as(ref)
+      .repartition(col("conv_id"))
+    def resolve(ref: String) = {
+      val w = Window.partitionBy(col("conv_id"), col(ref))
+        .orderBy("turn_idx", "mention_idx", "hop")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      coalesce(first("_def", ignoreNulls = true).over(w),
+        last("_target", ignoreNulls = true).over(w), col(ref))
+    }
     events
-      .withColumn("_fd", first("_def", ignoreNulls = true).over(prefix("conv_id")))
-      .withColumn("_bs", last("_target", ignoreNulls = true).over(prefix("conv_id", "subj")))
-      .withColumn("_bo", last("_target", ignoreNulls = true).over(prefix("conv_id", "obj")))
+      .withColumn("_s", resolve("subj"))
+      .withColumn("_o", resolve("obj"))
       .filter(col("_rel"))
       .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("hop"),
-        side("subj", "_bs"), col("pred"), side("obj", "_bo"), col("ts"))
+        col("_s").as("subj"), col("pred"), col("_o").as("obj"), col("ts"))
   }
 }

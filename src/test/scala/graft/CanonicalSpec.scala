@@ -61,7 +61,8 @@ class CanonicalSpec extends SparkSpec {
     assert(t0.toMap === expected)
   }
 
-  test("mintedNodes continue densely after a known node count; a null name is dropped") {
+  test("mintedNodes continue densely after known nodes") {
+    // the known count is the offset; a null name gets no ID
     val minted = Canonical.mintedNodes(2L,
       Seq("x:new2", "x:new1", null).toDF("canonical_name"))
     val rows = minted.collect().map(r => (r.getString(2), r.getLong(1))).toMap
