@@ -86,7 +86,7 @@ object Canonical {
       .groupBy(_.getString(0)).map { case (g, rows) =>
         val sizes = new Array[Long](nBuckets)
         rows.foreach(r => sizes(r.getInt(1)) = r.getLong(2))
-        g -> sizes.scanLeft(0L)(_ + _).toSeq.take(nBuckets)
+        g -> sizes.scanLeft(0L)(_ + _).init.toSeq
       }
     val offsetsOf = typedLit(offsets)
     val w = Window.partitionBy(partCol, "_b").orderBy(keyCol)
