@@ -302,7 +302,7 @@ object OpsEntry {
     // (low novelty = boilerplate/template text) at shingle granularity.
     // Strict shingles (docs under 3 words emit nothing, matching the
     // oracle CTE); df per shingle is a map-side-combinable count over
-    // the per-doc-distinct explode, joined back size-gated.
+    // the per-doc-distinct explode, joined back without a hint.
     "doc_ngram_novelty" -> ((s, dir) => {
       val sh = docs(s, dir)
         .select(col("doc_id").cast("long").as("doc_id"),
@@ -312,7 +312,7 @@ object OpsEntry {
           Dedup.shinglesOfWords(col("_w"), col("_t"), 3))).as("_sg"))
         .select(col("doc_id"), md5(col("_sg")).as("sh"))
       val dfq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      sh.join(graft.canonical.Joins.dim(dfq), Seq("sh"))
+      sh.join(dfq, Seq("sh"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shingles"),
           sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_shared"))
@@ -823,7 +823,7 @@ object OpsEntry {
   /** Near-dup cluster oracle (shared: doc_dup_clusters + the dedup-aware
     * sampler + the clean-corpus gate). NOTE: mirrors the FULL-GRAPH
     * chain (pairs among all docs); the engine's exact-dup pre-collapse
-    * provably yields identical clusters (see Dedup.dupClustersWithPairs)
+    * provably yields identical clusters (see Dedup.digestGroups)
     * — at oracle scale no star-collapse cap engages, so the outputs are
     * bit-identical. */
   private lazy val dupClustersOracle: String =

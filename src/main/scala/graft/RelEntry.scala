@@ -29,18 +29,18 @@ object RelEntry {
         count(lit(1)).as("n_rows"))
 
   /** Top-3 parts by revenue per supplier nation: join + window rank.
-    * part/supplier grow with SF -> size-gated broadcast (Joins.dim);
-    * nation is a fixed 25-row vocabulary -> unconditional hint. The fact
-    * table shuffles once on the grouping key. */
+    * part/supplier grow with SF -> no hint, Spark's broadcast threshold
+    * decides; nation is a fixed 25-row vocabulary -> unconditional hint.
+    * The fact table shuffles once on the grouping key. */
   private def qTopParts(s: SparkSession, dir: String): DataFrame = {
     val l = ParquetTableIO.read(s, s"$dir/lineitem.parquet")
     val p = ParquetTableIO.read(s, s"$dir/part.parquet")
     val su = ParquetTableIO.read(s, s"$dir/supplier.parquet")
     val n = ParquetTableIO.read(s, s"$dir/nation.parquet")
     val rev = l
-      .join(graft.canonical.Joins.dim(su), l("l_suppkey") === su("s_suppkey"))
+      .join(su, l("l_suppkey") === su("s_suppkey"))
       .join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
-      .join(graft.canonical.Joins.dim(p), l("l_partkey") === p("p_partkey"))
+      .join(p, l("l_partkey") === p("p_partkey"))
       .groupBy(col("n_name"), col("p_name"))
       .agg(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue_cents"))
     val w = Window.partitionBy("n_name")
@@ -54,7 +54,7 @@ object RelEntry {
   private def qChangedParts(s: SparkSession, dir: String): DataFrame = {
     val l = ParquetTableIO.read(s, s"$dir/lineitem.parquet")
     val p = ParquetTableIO.read(s, s"$dir/part.parquet")
-    val joined = l.join(graft.canonical.Joins.dim(p), l("l_partkey") === p("p_partkey"))
+    val joined = l.join(p, l("l_partkey") === p("p_partkey"))
       .select(regexp_replace(col("p_name"), " ", "_").as("entity"),
         col("l_shipdate"), col("l_quantity"))
     def side(pred: org.apache.spark.sql.Column, name: String) =

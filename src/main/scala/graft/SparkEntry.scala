@@ -186,8 +186,9 @@ object SparkEntry {
     * its mention list — then remapped to the dense node ID, emitted in
     * BOTH directions so a consumer can navigate entity→segment as well
     * as segment→entity (closes the last disjoint ID space, VERDICT r03
-    * missing #2). The node remap is size-gated; above the gate AQE splits
-    * the partition of a hot entity (one defined in many segments). */
+    * missing #2). Above Spark's broadcast threshold the node remap
+    * shuffles, and AQE splits the partition of a hot entity (one defined
+    * in many segments). */
   private def qSegmentEntityEdges(s: SparkSession, dir: String): DataFrame = {
     val segs = Extract.segmentNodes(transcriptsOf(s, dir))
       .filter(col("kind") === "entity_def")
@@ -200,7 +201,7 @@ object SparkEntry {
     val linked = segs.join(defs, Seq("conv_id", "turn_idx", "seg_idx"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    val withId = linked.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
+    val withId = linked.join(n, Seq("canonical_name"))
     // one pass: a self-union would re-execute the whole join pipeline
     // per direction — the direction label is a 2-element explode instead
     withId.select(
@@ -241,8 +242,8 @@ object SparkEntry {
       .distinct()
     val allNodes = qNodes(s, dir).unionByName(qNodesMinted(s, dir))
       .select(col("canonical_name"), col("node_id"))
-    // node table scales with the corpus: size-gated remap (broadcast while
-    // small, shuffle join above the gate — Joins.remapBoth)
+    // the node table scales with the corpus: Spark broadcasts it while it
+    // is under the broadcast threshold and shuffles above it
     val edges = graft.canonical.Joins.remapBoth(
       corefs, allNodes, "canonical_name", "node_id",
       "subj", "obj", "src", "dst")
@@ -250,7 +251,7 @@ object SparkEntry {
     val verts = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
     ConnectedComponents.runWithNodes(verts, edges)
-      .join(graft.canonical.Joins.dim(allNodes), col("id") === col("node_id"))
+      .join(allNodes, col("id") === col("node_id"))
       .select(col("node_id"), col("canonical_name"), col("component"))
   }
 
@@ -348,7 +349,7 @@ object SparkEntry {
   /** Container/inheritance edges (reference class_class_edges
     * 'inherits_from' + the reverse 'contains' direction,
     * knowledge_graph.py:1122-1197): distinct (child, parent) pairs from
-    * `extends` clauses, remapped to dense node IDs with size-gated joins. */
+    * `extends` clauses, remapped to dense node IDs with two joins. */
   private def qContainment(s: SparkSession, dir: String): DataFrame = {
     val pairs = mentionsOf(s, dir)
       .filter(col("kind") === "entity_def" && col("parent") =!= "")
@@ -443,7 +444,7 @@ object SparkEntry {
 
   private def qIssueEdges(s: SparkSession, dir: String): DataFrame = {
     val valid = issueRefsOf(s, dir)
-      .join(graft.canonical.Joins.dim(issuesOf(s, dir)), Seq("issue_id"))
+      .join(issuesOf(s, dir), Seq("issue_id"))
     val ordered = graft.graph.Pipeline.triples(s, dir)
       .filter(col("pred") === "ordered")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
@@ -451,7 +452,7 @@ object SparkEntry {
     val linked = valid.join(ordered, Seq("conv_id", "turn_idx"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    linked.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
+    linked.join(n, Seq("canonical_name"))
       .select(col("issue_id"), col("state"), col("node_id"), col("canonical_name"))
       .distinct()
   }
@@ -461,17 +462,17 @@ object SparkEntry {
     * every entity defined in that conversation — the edge family that lets
     * a consumer navigate from a browse-hierarchy folder into the entity
     * graph (the two ID spaces were disconnected before, VERDICT r02
-    * missing #1). Both remaps are size-gated. */
+    * missing #1). */
   private def qConvEntityEdges(s: SparkSession, dir: String): DataFrame = {
     val defs = mentionsOf(s, dir).filter(col("kind") === "entity_def")
       .select(col("conv_id"), col("subj").as("canonical_name")).distinct()
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    val withNode = defs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
+    val withNode = defs.join(n, Seq("canonical_name"))
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
     val hier = graft.graph.Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    withNode.join(graft.canonical.Joins.dim(hier), Seq("name"))
+    withNode.join(hier, Seq("name"))
       .select(lit("contains_entity").as("edge_type"),
         col("hier_id"), col("node_id"), col("conv_id"), col("canonical_name"))
   }
@@ -523,9 +524,8 @@ object SparkEntry {
         .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
-    // prs is distinct per canonical_name (one PR per supplier): gate the
-    // node-table hint
-    prs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
+    // prs is distinct per canonical_name (one PR per supplier)
+    prs.join(n, Seq("canonical_name"))
       .select(col("pr_id"), col("node_id"), col("canonical_name"),
         col("merged_by"))
   }
@@ -599,12 +599,11 @@ object SparkEntry {
     * knowledge_graph.py:1282-1307): issue numbers cross-referenced in the
     * turns where a PR's supplier appears, validated against the issues
     * side table, emitted as distinct (issue, pr) id pairs — the
-    * reference's source/target edge shape. Every dim is size-gated; above
-    * the gate AQE splits the per-supplier fan-in of a hot supplier. */
+    * reference's source/target edge shape. Above Spark's broadcast
+    * threshold the joins shuffle, and AQE splits the per-supplier fan-in
+    * of a hot supplier. */
   private def qIssuePrEdges(s: SparkSession, dir: String): DataFrame = {
-    val valid = issueRefsOf(s, dir).join(
-      graft.canonical.Joins.dim(issuesOf(s, dir).select("issue_id")),
-      Seq("issue_id"))
+    val valid = issueRefsOf(s, dir).join(issuesOf(s, dir).select("issue_id"), Seq("issue_id"))
     val supplied = graft.graph.Pipeline.triples(s, dir)
       .filter(col("pred") === "supplies")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
@@ -613,7 +612,7 @@ object SparkEntry {
       concat(lit("supplier:"), col("s_name")).as("canonical_name"),
       col("s_suppkey").cast("long").as("pr_id"))
     val linked = valid.join(supplied, Seq("conv_id", "turn_idx"))
-    linked.join(graft.canonical.Joins.dim(prs), Seq("canonical_name"))
+    linked.join(prs, Seq("canonical_name"))
       .select(col("issue_id"), col("pr_id"))
       .distinct()
   }
@@ -633,7 +632,7 @@ object SparkEntry {
   /** PR-author→function edges (reference dev_edges_df — dev_id, func_id,
     * pr_number: the PR→func ⋈ PR→author join,
     * knowledge_graph.py:1407-1417): each PR's linked entity attributed to
-    * the PR author (the supplier's nation). The node side is size-gated. */
+    * the PR author (the supplier's nation). */
   private def qDevEdges(s: SparkSession, dir: String): DataFrame = {
     val prs = ParquetTableIO.read(s, s"$dir/supplier.parquet").select(
       col("s_suppkey").cast("long").as("pr_number"),
@@ -641,7 +640,7 @@ object SparkEntry {
       concat(lit("supplier:"), col("s_name")).as("canonical_name"))
     val n = graft.graph.Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id").as("func_id"))
-    prs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
+    prs.join(n, Seq("canonical_name"))
       .select(col("dev_id"), col("func_id"), col("pr_number"))
   }
 
@@ -681,7 +680,7 @@ object SparkEntry {
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
     val hier = graft.graph.Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    t.join(graft.canonical.Joins.dim(hier), Seq("name"))
+    t.join(hier, Seq("name"))
       .select(col("conv_id"), col("turn_idx"), col("tool"), col("hier_id"),
         octet_length(col("config")).cast("long").as("n_bytes"),
         md5(col("config")).as("config_hash"))
@@ -708,7 +707,7 @@ object SparkEntry {
 
   /** PyG-style typed edge index (reference HeteroData edge_index per
     * (src_type, relation, dst_type) triple): endpoints remapped to the
-    * per-type local indices via size-gated joins, deduped with a
+    * per-type local indices, deduped with a
     * multiplicity count (edge_index columns + edge weight). */
   private def qPygEdges(s: SparkSession, dir: String): DataFrame = {
     val loc = pygLocal(s, dir)
@@ -717,8 +716,8 @@ object SparkEntry {
       col("node_type").as("src_type"), col("local_idx").as("src_local"))
     val dst = loc.select(col("canonical_name").as("obj"),
       col("node_type").as("dst_type"), col("local_idx").as("dst_local"))
-    t.join(graft.canonical.Joins.dim(src), Seq("subj"))
-      .join(graft.canonical.Joins.dim(dst), Seq("obj"))
+    t.join(src, Seq("subj"))
+      .join(dst, Seq("obj"))
       .groupBy(col("src_type"), col("pred").as("edge_type"),
         col("dst_type"), col("src_local"), col("dst_local"))
       .agg(count(lit(1)).as("n_multi"))

@@ -119,14 +119,16 @@ object Canonical {
         col("canonical_name"))
 
   /** FK remap: triples (subj, pred, obj, ...) -> edge rows with dense IDs,
-    * via two size-gated joins against the node table
-    * (package/hierarchical_graph.py:334-339): broadcast while the node
-    * table fits, a shuffle join once it outgrows the gate, where AQE
-    * splits the partitions of hot canonical names at runtime. */
+    * via two joins against the node table
+    * (package/hierarchical_graph.py:334-339): Spark broadcasts the node
+    * table while it is under its broadcast threshold and shuffles once it
+    * outgrows it, where AQE splits the partitions of hot canonical names
+    * at runtime. */
   def edges(triples: DataFrame, nodes: DataFrame): DataFrame = {
-    // one dimension frame for both endpoints: below the gate the two
-    // joins broadcast the same plan, and Spark reuses that exchange
-    val dim = Joins.dim(nodes.select("canonical_name", "node_type", "node_id"))
+    // one dimension frame for both endpoints: when the node table is
+    // broadcast, both joins broadcast the same plan and Spark reuses that
+    // exchange
+    val dim = nodes.select("canonical_name", "node_type", "node_id")
     triples
       .join(dim.as("src"), col("subj") === col("src.canonical_name"))
       .join(dim.as("dst"), col("obj") === col("dst.canonical_name"))

@@ -42,7 +42,7 @@ object Hierarchy {
   }
 
   /** Parent->child `contains` edges with both endpoints remapped to dense
-    * IDs through size-gated joins. */
+    * IDs through two joins. */
   def edges(transcripts: DataFrame, hierNodes: DataFrame): DataFrame =
     edgesFrom(turn0(transcripts).localCheckpoint(), hierNodes)
 

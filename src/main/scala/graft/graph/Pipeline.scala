@@ -104,7 +104,7 @@ object Pipeline {
     val m = committedMentions.unionByName(nm)
     val r = committedResolved.unionByName(Resolve.resolved(nm))
     // the vocabulary without its distinct: a left-semi join needs no
-    // distinct, and above the broadcast gate this side then reaches the
+    // distinct, and above the broadcast threshold this side then reaches the
     // join through its own shuffle stage, which AQE's skew rule needs
     (m, r, Triples.knownOnly(r, Triples.entityMentions(m)))
   }

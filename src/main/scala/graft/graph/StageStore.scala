@@ -144,8 +144,8 @@ object StageStore {
   val io: TableIO = ParquetTableIO
 
   // one lock per stage dir: two threads asking for one stage build it
-  // once, while nested builds of different stages (dup_clusters_* ->
-  // dup_pairs_*) take different locks and cannot deadlock
+  // once, while nested builds of different stages (dup_clusters ->
+  // dup_pairs) take different locks and cannot deadlock
   private val locks = new ConcurrentHashMap[String, AnyRef]()
 
   /** Materialize `build` at `<base>/<stage>` unless already committed;

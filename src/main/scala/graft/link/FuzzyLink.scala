@@ -61,14 +61,14 @@ object FuzzyLink {
   def link(surfaces: DataFrame, dict: DataFrame, surfaceCol: String = "surface",
       dictCol: String = "name", minScorePpm: Long = 300000L): DataFrame = {
     // The dictionary is the canonical entity vocabulary — it scales with
-    // the corpus, so the exact-match semi/anti joins are size-gated
-    // (Joins.dim): broadcast hint only while the side provably fits;
-    // above the gate AQE plans from runtime sizes and splits skewed
+    // the corpus, so the exact-match semi/anti joins carry no broadcast
+    // hint: Spark broadcasts the side while it is under its threshold;
+    // above it AQE plans from runtime sizes and splits skewed
     // partitions. The output has one row per surface, so enforce
     // distinctness here rather than trusting callers; for already-distinct
     // inputs this is one shuffle of the surface VOCABULARY, not the corpus.
     val surf = surfaces.dropDuplicates(surfaceCol)
-    val dictAsSurface = graft.canonical.Joins.dim(dict.select(col(dictCol).as(surfaceCol)))
+    val dictAsSurface = dict.select(col(dictCol).as(surfaceCol))
     val exact = surf.join(dictAsSurface, Seq(surfaceCol), "left_semi")
       .select(col(surfaceCol), col(surfaceCol).as("matched"),
         lit(1000000L).as("score_ppm"), lit("exact").as("method"))

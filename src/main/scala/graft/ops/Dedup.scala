@@ -163,12 +163,10 @@ object Dedup {
     * oracle (3·inter >= |A|+|B|), so engines agree exactly. */
   def dupClusters(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.5): DataFrame =
-    dupClustersWithPairs(docs, null, idCol, textCol, threshold)._2
+    dupClustersFrom(docs, dupPairs(docs, idCol, textCol, threshold), idCol, textCol)
 
-  /** [[dupClusters]] plus the representative-level verified pair frame it
-    * used (exposed so [[dupClustersStaged]] can commit exactly the pairs
-    * the collapse consumed). `stagedPairs` non-null short-circuits the
-    * pair derivation with a committed table.
+  /** Each doc with its exact-dup key `_h`, and the representative
+    * `_rep` of each key: the group's min id.
     *
     * EXACT-DUP PRE-COLLAPSE (measured at sf10, BENCH §1e): identical
     * texts — the dominant duplicate class in a web-scale corpus — first
@@ -197,26 +195,38 @@ object Dedup {
     * key (ADVICE r05: the unconditional md5 grouped identical short
     * docs under a min-id rep with keep = 0 — a latent cross-engine
     * desync only the corpus's >= 10-word convention hid). */
-  private[graft] def dupClustersWithPairs(docs: DataFrame, stagedPairs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 0.5): (DataFrame, DataFrame) = {
+  private def digestGroups(docs: DataFrame, idCol: String,
+      textCol: String): (DataFrame, DataFrame) = {
     val withHash = docs.select(col(idCol), col(textCol),
       when(size(split(col(textCol), " ")) >= 3, md5(col(textCol)))
         .otherwise(concat(lit("short|"), col(idCol).cast("string"))).as("_h"))
-    val reps = withHash.groupBy(col("_h")).agg(min(col(idCol)).as("_rep"))
-    val repDocs = docs.join(
-      reps.select(col("_rep").as(idCol)), Seq(idCol))
-    val pairs = Option(stagedPairs)
-      .getOrElse(verifiedPairs(repDocs, idCol, textCol, threshold))
+    (withHash, withHash.groupBy(col("_h")).agg(min(col(idCol)).as("_rep")))
+  }
+
+  /** The verified near-dup pairs (a, b, jaccard) [[dupClusters]]
+    * collapses: [[verifiedPairs]] over the exact-dup representatives
+    * (see [[digestGroups]]). */
+  private[graft] def dupPairs(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", threshold: Double = 0.5): DataFrame = {
+    val (_, reps) = digestGroups(docs, idCol, textCol)
+    verifiedPairs(docs.join(reps.select(col("_rep").as(idCol)), Seq(idCol)),
+      idCol, textCol, threshold)
+  }
+
+  /** The collapse of [[dupClusters]] given its representative-level
+    * pairs: connected components over the representatives, inherited by
+    * every member of an exact-dup group through the digest join. */
+  private[graft] def dupClustersFrom(docs: DataFrame, pairs: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val (withHash, reps) = digestGroups(docs, idCol, textCol)
     val comp = graft.canonical.ConnectedComponents.runWithNodes(
       reps.select(col("_rep").cast("long").as("id")),
       pairs.select(col("a").cast("long").as("src"),
         col("b").cast("long").as("dst")))
-    val out = withHash.join(reps, Seq("_h"))
+    withHash.join(reps, Seq("_h"))
       .join(comp, col("_rep").cast("long") === col("id"))
       .select(col(idCol), col("component").as("dup_group"),
         (col(idCol).cast("long") === col("component")).cast("long").as("keep"))
-    (pairs, out)
   }
 
   /** The verified near-dup pair set (a, b, jaccard): minhash -> LSH
@@ -253,41 +263,34 @@ object Dedup {
   /** [[dupClusters]] with the verified pair set routed through a
     * committed stage table keyed by the corpus dir (VERDICT r04 #5 —
     * the same move node_clusters made for Lloyd): the
-    * minhash -> candidates -> verify derivation (over exact-dup
-    * representatives — see [[dupClustersWithPairs]]) runs ONCE per
-    * corpus; the CC collapse and any future consumer (a dup-aware
+    * minhash -> candidates -> verify derivation ([[dupPairs]]) runs ONCE
+    * per corpus; the CC collapse and any future consumer (a dup-aware
     * sampler, a pair auditor) re-read the committed (a, b, jaccard)
     * table. Warm invocations pay one small-table read + the digest
-    * joins + CC rounds only. */
-  def dupClustersStaged(s: org.apache.spark.sql.SparkSession, dir: String,
-      threshold: Double = 0.5): DataFrame = {
-    // the threshold is part of the PAIR SEMANTICS, so it must be part of
-    // the stage identity: without the suffix, a 0.7-threshold caller
-    // after a 0.5 run would silently read 0.5-threshold clusters (and a
-    // first 0.7 run would poison the cache for every default caller)
-    val t = s"t${math.round(threshold * 1e6)}"
+    * joins + CC rounds only. Threshold 1/2, the [[dupClusters]] default. */
+  def dupClustersStaged(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     // two committed tables: dup_pairs is the CONSUMER surface (a
     // dup-aware sampler / pair auditor reads verified (a, b, jaccard)
     // rows), dup_clusters the collapse result — warm callers pay ONE
     // table read, no digest re-derivation, no CC rounds
-    graft.graph.StageStore.getOrCreate(s, dir, s"dup_clusters_$t") {
+    graft.graph.StageStore.getOrCreate(s, dir, "dup_clusters") {
       val docs = ParquetTableIO.read(s, s"$dir/documents.parquet")
-      val pairs = graft.graph.StageStore.getOrCreate(s, dir, s"dup_pairs_$t") {
-        dupClustersWithPairs(docs, null, threshold = threshold)._1
+      val pairs = graft.graph.StageStore.getOrCreate(s, dir, "dup_pairs") {
+        dupPairs(docs)
       }
-      dupClustersWithPairs(docs, pairs, threshold = threshold)._2
+      dupClustersFrom(docs, pairs)
     }
-  }
 
   /** Train↔eval decontamination — the n-gram-overlap scrub every LLM
     * training pipeline runs before training (flag training docs sharing
     * any word n-gram with a benchmark/eval set; 8-grams here, the
     * GPT-3/PaLM-style window). Both sides shingle once (explode +
     * distinct, md5 keys); the eval side is a benchmark — tiny by
-    * construction — so the membership join is size-gated (broadcast
-    * below the gate, AQE above); the training corpus streams through
-    * exactly once. Output: one row per CONTAMINATED training doc with
-    * its distinct-hit count (callers left-join to keep clean docs).
+    * construction — so Spark's broadcast threshold broadcasts the
+    * membership join's eval side (AQE decides above it); the training
+    * corpus streams through exactly once. Output: one row per
+    * CONTAMINATED training doc with its distinct-hit count (callers
+    * left-join to keep clean docs).
     *
     * STRICT n-grams: a doc with fewer than `ngram` words has no n-gram
     * and contributes nothing on either side (no whole-text fallback —
@@ -309,7 +312,7 @@ object Dedup {
     // aggregations reject count_distinct; this runs as a stream-static
     // join + stateful count, see StreamingSpec parity test)
     sh(train)
-      .join(graft.canonical.Joins.dim(evalSh), Seq("sh"))
+      .join(evalSh, Seq("sh"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))
   }
@@ -332,7 +335,7 @@ object Dedup {
 
   /** Committed near-dup index of a corpus dir: the minhash band buckets
     * of the corpus's exact-dup representatives (same pre-collapse as
-    * [[dupClustersWithPairs]] — identical texts index once). Index once,
+    * [[dupPairs]] — identical texts index once). Index once,
     * probe incrementally: the production shape for an append-heavy
     * corpus, where re-running the full O(corpus) chain per ingest batch
     * is the thing to avoid. */
@@ -349,13 +352,14 @@ object Dedup {
     * equi-join -> distinct (new, corpus-rep) candidates -> exact
     * integer-ppm Jaccard against the corpus texts. Batch cost is
     * O(new batch + matched candidates), NEVER O(corpus): the corpus
-    * contributes only its committed index (size-gated dim join) and —
+    * contributes only its committed index (a plain join) and —
     * via a left-semi join on the candidate ids BEFORE the shingle
     * projection — the texts of matched candidates only (VERDICT r05 #1:
     * the previous plan computed split + array_distinct for EVERY corpus
     * document and relied on the join to discard non-candidates, which
     * Catalyst cannot push below the projection). The pre-filter engages
-    * above the broadcast size gate: a gate-fitting corpus is cheaper to
+    * when the corpus estimate is above Spark's broadcast threshold (or the
+    * threshold is off): a corpus Spark would broadcast is cheaper to
     * shingle wholesale than to route through the extra semi-join
     * shuffle (measured at sf0.1). `newDocs` may be a
     * STREAMING frame — [[rowBuckets]] is aggregation-free and the joins
@@ -381,8 +385,7 @@ object Dedup {
         wordSig(col("_t"), ngram, k))
     val probe = bandsOf(withSh, Seq("new_id", "_sgn"), k, rowsPerBand)
     val cand0 = probe
-      .join(graft.canonical.Joins.dim(
-        index.select(col(idCol).as("corpus_id"), col("band"), col("bucket"))),
+      .join(index.select(col(idCol).as("corpus_id"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .select(col("new_id"), col("_sgn"), col("corpus_id"))
       .dropDuplicates("new_id", "corpus_id")
@@ -392,19 +395,19 @@ object Dedup {
     // eager localCheckpoint here measured SLOWER: it serializes the
     // candidate job before the main job instead of sharing the exchange)
     val cand = cand0
-    // batch + over-the-gate corpus: only candidate corpus docs are ever
-    // shingled (left_semi on the candidate ids BEFORE the projection —
-    // the candidate set is O(matches)). A corpus small enough to
-    // broadcast is cheaper to shingle wholesale than to pre-filter
-    // through an extra shuffle, so the same size gate every other
-    // corpus-scaling join uses decides here too.
+    // batch + a corpus Spark would not broadcast: only candidate corpus
+    // docs are ever shingled (left_semi on the candidate ids BEFORE the
+    // projection — the candidate set is O(matches)). A corpus small
+    // enough to broadcast is cheaper to shingle wholesale than to
+    // pre-filter through an extra shuffle, so Spark's own threshold
+    // (-1: never broadcast) decides here too.
+    val threshold = corpusDocs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val corpusSrc =
-      if (newDocs.isStreaming || graft.canonical.Joins.fitsBroadcast(corpusDocs))
+      if (newDocs.isStreaming || (threshold >= 0 &&
+          corpusDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold))
         corpusDocs
       else corpusDocs.join(
-        graft.canonical.Joins.dim(
-          cand.select(col("corpus_id").as(idCol)).distinct()),
-        Seq(idCol), "left_semi")
+        cand.select(col("corpus_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
     val corpusSh = corpusSrc.select(col(idCol).as("corpus_id"),
       col(textCol).as("_t"), split(col(textCol), " ").as("_w"))
       .filter(size(col("_w")) >= ngram)

@@ -150,8 +150,8 @@ object TextOps {
     *
     * Scale shape: one shuffle for (doc, term) tf, one for term df; the
     * total-doc count rides as a broadcast scalar (no driver action); the
-    * term-df dictionary scales with the vocabulary, so the join back is
-    * size-gated (broadcast below the gate, AQE above). */
+    * term-df dictionary scales with the vocabulary, so the join back
+    * carries no hint (Spark's broadcast threshold and AQE decide). */
   def tfidfScores(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val tok = docs.select(col(idCol), explode(split(col(textCol), " ")).as("term"))
@@ -159,7 +159,7 @@ object TextOps {
     val dfT = tok.groupBy(col("term"))
       .agg(count_distinct(col(idCol)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
-    tf.join(graft.canonical.Joins.dim(dfT), Seq("term"))
+    tf.join(dfT, Seq("term"))
       .crossJoin(broadcast(total))
       .withColumn("idf", length(bin(expr("n_docs div df"))).cast("long"))
       .select(col(idCol), col("term"), col("tf").cast("long").as("tf"),

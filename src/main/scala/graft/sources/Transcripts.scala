@@ -44,9 +44,9 @@ object Transcripts {
     *                            reference package/call_graph.py:276-315).
     *
     * Scale notes: part/supplier/customer are dimension tables that grow
-    * with SF -> size-gated broadcast (Joins.dim); orders⋈lineitem is the
-    * one big co-keyed join (AQE/SMJ). No UDFs — the whole derivation is
-    * codegen'd column expressions.
+    * with SF -> no hint, Spark's broadcast threshold decides;
+    * orders⋈lineitem is the one big co-keyed join (AQE/SMJ). No UDFs —
+    * the whole derivation is codegen'd column expressions.
     */
   def fromTpch(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -74,12 +74,12 @@ object Transcripts {
     val kS = k.cast("string")
     val qtyS = round($"l_quantity" * 100).cast("long").cast("string")
 
-    // part/supplier/customer grow linearly with scale factor — size-gated
-    // broadcast (Joins.dim): explicit hint only while the committed parquet
-    // stats prove the side fits; above the gate AQE plans from runtime
-    // sizes (an unconditional hint would OOM the driver at large SF).
+    // part/supplier/customer grow linearly with scale factor, so they carry
+    // no broadcast hint: Spark broadcasts them while their parquet size is
+    // under its threshold, and above it AQE plans from runtime sizes (an
+    // unconditional hint would OOM the driver at large SF).
     val turn0 = o
-      .join(graft.canonical.Joins.dim(c), o("o_custkey") === c("c_custkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
       .select(
         concat(lit("c"), $"o_orderkey".cast("string")).as("conv_id"),
         lit(0).as("turn_idx"),
@@ -94,8 +94,8 @@ object Transcripts {
 
     val li = l
       .withColumn("k", row_number().over(wk))
-      .join(graft.canonical.Joins.dim(p), l("l_partkey") === p("p_partkey"))
-      .join(graft.canonical.Joins.dim(s), l("l_suppkey") === s("s_suppkey"))
+      .join(p, l("l_partkey") === p("p_partkey"))
+      .join(s, l("l_suppkey") === s("s_suppkey"))
 
     val textA = concat(
       lit("define entity "), pname, lit(" with qty="), qtyS,
@@ -186,7 +186,7 @@ FROM li"""
   /** Deterministic synthetic corpus: `nConvs` conversations, each with
     * `turnsPerConv` turns over a vocabulary of `vocab` entities, with one
     * hot entity appearing in `hotPct`% of relation turns (skew fixture for
-    * the linking joins above the broadcast gate / connected components).
+    * the linking joins above the broadcast threshold / connected components).
     *
     * All "randomness" is `xxhash64` of the row key — identical output at
     * local[8] and local[32], no RNG state, no collect.

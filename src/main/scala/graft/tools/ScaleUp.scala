@@ -11,7 +11,7 @@ import graft.graph.ParquetTableIO
   * This is the deliberate scale-up direction for the KG pipeline: the
   * conversation count (and with it mentions/triples) grows `copies`x but
   * the entity vocabulary does not, so per-entity fan-in — the skew that
-  * the size gates and AQE's skew-join split handle — grows `copies`x
+  * AQE's broadcast choice and skew-join split handle — grows `copies`x
   * too. A corpus where the vocabulary also grew would dilute the hot keys
   * and test nothing new.
   *

@@ -47,9 +47,9 @@ object Scaling {
       val tmp = java.nio.file.Files
         .createTempDirectory(s"graft_scale_p$parallelism").toString
       // Stage materialization between pipeline stages (parquet, exactly the
-      // StageStore architecture): without it, the resolved plan re-derives
-      // the mentions subtree ~5x (bindings, self map, both use sides,
-      // join-back) and the job stops scaling with cores. localCheckpoint is
+      // StageStore architecture): without it, the triple join runs the
+      // regex extraction twice, once under the resolved side and once
+      // under the entity vocabulary. localCheckpoint is
       // NOT used — it serializes rows one by one (measured 9x slower than
       // a columnar parquet round-trip).
       def mat(df: org.apache.spark.sql.DataFrame, name: String) = {

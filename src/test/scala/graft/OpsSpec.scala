@@ -215,7 +215,7 @@ class OpsSpec extends SparkSpec {
     // and the candidate work shrinks: pairs are generated among
     // DISTINCT-TEXT representatives only (the exact clique contributes
     // zero intra-clique pairs instead of m^2/2 per band)
-    val repPairs = Dedup.dupClustersWithPairs(docs, null)._1.count()
+    val repPairs = Dedup.dupPairs(docs).count()
     val allPairs = Dedup.verifiedPairs(docs).count()
     assert(repPairs < allPairs,
       s"rep-level pairs $repPairs must undercut full-graph pairs $allPairs")
@@ -598,8 +598,7 @@ class OpsSpec extends SparkSpec {
     // expensive minhash->candidates->verify chain ran once; warm calls
     // (and future consumers, e.g. a dup-aware sampler) read it back
     val base = graft.graph.StageStore.baseFor(dir)
-    assert(new java.io.File(s"$base/dup_pairs_t500000").exists,
-      "committed pair table (threshold folded into the stage identity)")
+    assert(new java.io.File(s"$base/dup_pairs").exists, "committed pair table")
     assertSameRows(Dedup.dupClustersStaged(spark, dir), direct)
   }
 

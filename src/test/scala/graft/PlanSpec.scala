@@ -118,7 +118,7 @@ class PlanSpec extends SparkSpec {
       s"extraction should stay inside codegen (no UDF barriers):\n${p.take(1200)}")
   }
 
-  test("broadcast gate: a plain shuffle join above the gate equals the broadcast path") {
+  test("broadcast choice: Spark's threshold alone decides, a shuffle join at -1 equals the broadcast") {
     import spark.implicits._
     // hot-key fixture: one key carries 90% of the stream
     val stream = (0 until 2000).map { i =>
@@ -131,36 +131,69 @@ class PlanSpec extends SparkSpec {
       .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "mention_idx")
     def joins = Seq(graft.triples.Triples.knownOnly(stream, dict),
       graft.canonical.Canonical.edges(triples, nodes))
-    // Spark's own broadcast off: only the gate's hint may broadcast
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val below = joins
-      below.foreach(df => assert(plan(df).contains("BroadcastExchange"),
-        s"a small side must broadcast:\n${plan(df).take(1500)}"))
-      val key = "graft.broadcast.maxBytes"
-      sys.props(key) = "1" // force the over-the-gate path
-      try {
-        val above = joins
-        for (df <- above) {
-          val p = plan(df)
-          // (Canonical.nodes broadcasts its one-row ID offset; that join is
-          // not gated and keys on neither subj nor obj)
-          val gated = PlanWalk.collect(df.queryExecution.executedPlan) {
-            case j: BroadcastHashJoinExec
-                if j.leftKeys.flatMap(_.references.map(_.name)).exists(Set("subj", "obj")) => j
-          }
-          assert(gated.isEmpty, s"no broadcast above the gate:\n${p.take(1500)}")
-          // no replicated key side: each shuffle join keys on its one
-          // column, with no salt column beside it
-          val shuffled = PlanWalk.collect(df.queryExecution.executedPlan) {
-            case j: SortMergeJoinExec => j.leftKeys.size
-          }
-          assert(shuffled.nonEmpty && shuffled.forall(_ == 1),
-            s"plain one-key shuffle joins above the gate:\n${p.take(1500)}")
-        }
-        below.zip(above).foreach { case (b, a) => assertSameRows(b, a) }
-        assert(above(1).count() === 2L)
-      } finally sys.props.remove(key)
+    // a broadcast hash join keyed on subj or obj
+    def keyedBroadcasts(df: DataFrame) = PlanWalk.collect(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec
+          if j.leftKeys.flatMap(_.references.map(_.name)).exists(Set("subj", "obj")) => j
     }
+    // Spark's default threshold broadcasts the small sides
+    val below = joins
+    below.foreach(df => assert(keyedBroadcasts(df).nonEmpty,
+      s"a small side must broadcast:\n${plan(df).take(1500)}"))
+    // Spark's own broadcast off: no graft hint broadcasts either
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val above = joins
+      for (df <- above) {
+        val p = plan(df)
+        assert(keyedBroadcasts(df).isEmpty, s"no broadcast at threshold -1:\n${p.take(1500)}")
+        // no replicated key side: each shuffle join keys on its one
+        // column, with no salt column beside it
+        val shuffled = PlanWalk.collect(df.queryExecution.executedPlan) {
+          case j: SortMergeJoinExec => j.leftKeys.size
+        }
+        assert(shuffled.nonEmpty && shuffled.forall(_ == 1),
+          s"plain one-key shuffle joins at threshold -1:\n${p.take(1500)}")
+      }
+      below.zip(above).foreach { case (b, a) => assertSameRows(b, a) }
+      assert(above(1).count() === 2L)
+    }
+  }
+
+  test("corpus-scaling joins carry no broadcast hint: none at threshold -1") {
+    import spark.implicits._
+    val docs = ParquetTableIO.read(spark, s"$sfDir/documents.parquet")
+    val plans = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Seq(
+        "Transcripts.fromTpch" -> graft.sources.Transcripts.fromTpch(spark, sfDir),
+        "FuzzyLink.link" -> graft.link.FuzzyLink.link(
+          Seq("svc_1_name", "svc_2_nam").toDF("surface"),
+          Seq("svc_1_name", "svc_2_name").toDF("name")),
+        "Dedup.decontaminate" -> graft.ops.Dedup.decontaminate(docs,
+          docs.filter(col("doc_id") % 100 === 0))
+      ).map { case (n, df) => n -> plan(df) }
+    }
+    val hinted = plans.filter(_._2.contains("BroadcastExchange"))
+    assert(hinted.isEmpty, s"broadcast at threshold -1 in: ${hinted.map(_._1).mkString(", ")}\n" +
+      hinted.map(_._2.take(1500)).mkString("\n"))
+  }
+
+  test("a join against a localCheckpointed side returns the same rows at the default threshold and at -1") {
+    import spark.implicits._
+    // a checkpointed side has no size estimate, so the static planner
+    // never broadcasts it; AQE may still convert the join at runtime
+    val facts = (0 until 500).map(i => (s"k${i % 40}", i.toLong)).toDF("k", "v")
+    def join = facts.join(
+      (0 until 40 by 3).map(i => (s"k$i", i.toLong)).toDF("k", "w").localCheckpoint(), Seq("k"))
+    val atDefault = join
+    val rows = rowSet(atDefault)
+    val off = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = join
+      val r = rowSet(df)
+      assert(!plan(df).contains("BroadcastExchange"), plan(df).take(1500))
+      r
+    }
+    assert(rows === off)
+    assert(rows.size === (0 until 500).count(i => i % 40 % 3 == 0))
   }
 
   test("kg_entity_convs: one exchange, partial collect_set below it") {
@@ -332,17 +365,16 @@ class PlanSpec extends SparkSpec {
     val index = graft.ops.Dedup.minhashBuckets(corpus)
     val incoming = Seq((100L, "alpha beta gamma delta epsilon zeta eta iota"))
       .toDF("doc_id", "text")
-    // a gate-fitting corpus keeps the wholesale-shingle plan (cheaper
-    // below the gate than the extra semi-join shuffle)
+    // a corpus under Spark's broadcast threshold keeps the
+    // wholesale-shingle plan (cheaper than the extra semi-join shuffle)
     val small = graft.ops.Dedup.checkAgainstIndex(incoming, index, corpus)
     assert(!small.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
     val want = small.collect().map(_.toSeq).toSet
-    // VERDICT r05 #1 regression gate: above the gate the verify side must
-    // semi-join the corpus on the candidate ids BEFORE any shingle
-    // projection (the previous plan shingled EVERY corpus doc per batch)
-    val key = "graft.broadcast.maxBytes"
-    sys.props(key) = "1"
-    try {
+    // VERDICT r05 #1 regression gate: with Spark's broadcast off the
+    // verify side must semi-join the corpus on the candidate ids BEFORE
+    // any shingle projection (the previous plan shingled EVERY corpus doc
+    // per batch)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val probe = graft.ops.Dedup.checkAgainstIndex(incoming, index, corpus)
       val p = probe.queryExecution.optimizedPlan.toString
       assert(p.contains("LeftSemi"),
@@ -350,7 +382,7 @@ class PlanSpec extends SparkSpec {
       assert(probe.collect().map(_.toSeq).toSet === want,
         "probe result unchanged by the pre-filter")
       assert(probe.collect().map(_.getLong(1)).toSet === Set(1L))
-    } finally sys.props.remove(key)
+    }
   }
 
   /** Interpreted higher-order functions in the executed (AQE-final) plan

@@ -3,8 +3,8 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-/** One session factory, one probe CLI and one declaration per stage name:
-  * a source scan keeps it so. */
+/** One session factory, one probe CLI, one declaration per stage name and
+  * a declared set of options: a source scan keeps it so. */
 class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def sources(dir: File): Seq[File] =
@@ -38,5 +38,22 @@ class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(sites.size >= 10, s"the scan found too few stage declarations: $sites")
     val twice = sites.groupBy(_._1).filter(_._2.size > 1)
     assert(twice.isEmpty, s"stage names declared more than once: $twice")
+  }
+
+  test("src/main reads exactly the declared environment variables and system properties") {
+    // every option is a knob an operator must know about: a new one is
+    // added here on purpose, and a deleted one leaves this list
+    val options = Set("SPARK_GRAFT_CPUS", "SPARK_MASTER", "graft.stage.dir",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_LOAD_GATE", "SPARK_GRAFT_LOAD_WAIT")
+    val jvmOwn = Set("java.io.tmpdir") // the JVM's property, not one of ours
+    val read = """(sys\.(props|env)|System\.(getenv|getProperty))\b""".r
+    val keyed = """(?:sys\.(?:props|env)(?:\.(?:get|getOrElse|contains|apply))?|System\.(?:getenv|getProperty))\(\s*"([^"]+)"""".r
+    val texts = sources(root).map(text)
+    val keys = texts.flatMap(keyed.findAllMatchIn(_).map(_.group(1))).toSet
+    // a read through a computed key would hide an option from the scan
+    assert(texts.map(read.findAllIn(_).size).sum === texts.map(keyed.findAllIn(_).size).sum,
+      "read options through literal keys")
+    assert(keys === options ++ jvmOwn,
+      s"undeclared: ${keys -- options -- jvmOwn}; declared but not read: ${options ++ jvmOwn -- keys}")
   }
 }

@@ -4,26 +4,23 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, xxhash64}
-import graft.canonical.Joins
 import graft.extract.Extract
 import graft.graph.Pipeline
 import graft.link.Resolve
 import graft.sources.Transcripts
 import graft.triples.Triples
 
-/** Above the broadcast gate a hot key is AQE's to split: the plain
-  * shuffle join plans SortMergeJoin(skew=true) over the hot partition and
-  * returns exactly the broadcast path's rows. */
+/** Above Spark's broadcast threshold a hot key is AQE's to split: the
+  * plain shuffle join plans SortMergeJoin(skew=true) over the hot
+  * partition and returns exactly the broadcast path's rows. */
 class SkewJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Builds and runs `join` above the gate, with Spark's own broadcast
-    * off and AQE's skew thresholds lowered to these fixtures' scale (a
-    * few KB per partition); returns the rows and the executed plan. */
-  private def aboveGate(join: => DataFrame): (Set[Seq[Any]], String) = {
-    val key = "graft.broadcast.maxBytes"
-    sys.props(key) = "1"
-    try withConf(
+  /** Builds and runs `join` with Spark's broadcast off and AQE's skew
+    * thresholds lowered to these fixtures' scale (a few KB per
+    * partition); returns the rows and the executed plan. */
+  private def broadcastOff(join: => DataFrame): (Set[Seq[Any]], String) =
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "16",
       // coalesce upstream reads to the advisory size, not to one partition,
@@ -36,8 +33,7 @@ class SkewJoinSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2") {
       val df = join
       (rowSet(df), df.queryExecution.executedPlan.toString)
-    } finally sys.props.remove(key)
-  }
+    }
 
   private def assertSkewSplit(plan: String): Unit = {
     assert(plan.contains("SortMergeJoin(skew=true)"),
@@ -52,10 +48,10 @@ class SkewJoinSpec extends SparkSpec {
     }.toDF("k", "v").repartition(8)
     val right = (Seq("HOT") ++ (0 until 2000 by 10).map(i => s"k$i"))
       .map(k => (k, k.length.toLong)).toDF("k", "w")
-    def join = left.join(Joins.dim(right), Seq("k"))
+    def join = left.join(right, Seq("k"))
     val viaBroadcast = join
     assert(viaBroadcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
-    val (rows, plan) = aboveGate(join)
+    val (rows, plan) = broadcastOff(join)
     assertSkewSplit(plan)
     assert(rows === rowSet(viaBroadcast))
     assert(rows.size === 2000)
@@ -74,7 +70,7 @@ class SkewJoinSpec extends SparkSpec {
     def known = Triples.knownOnly(Resolve.resolved(m), spark.read.parquet(vocab))
     val viaBroadcast = known
     assert(viaBroadcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
-    val (rows, plan) = aboveGate(known)
+    val (rows, plan) = broadcastOff(known)
     assertSkewSplit(plan)
     assert(plan.contains("LeftSemi"), plan.take(2000))
     assert(rows === rowSet(viaBroadcast))
@@ -90,7 +86,7 @@ class SkewJoinSpec extends SparkSpec {
     def appended = Pipeline.appendBatch(mOld, rOld, corpus.filter(!isOld))._3
     val viaBroadcast = appended
     assert(viaBroadcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
-    val (rows, plan) = aboveGate(appended)
+    val (rows, plan) = broadcastOff(appended)
     assertSkewSplit(plan)
     assert(plan.contains("LeftSemi"), plan.take(2000))
     assert(rows === rowSet(viaBroadcast))
