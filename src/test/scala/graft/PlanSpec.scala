@@ -179,8 +179,8 @@ class PlanSpec extends SparkSpec {
 
   test("a join against a localCheckpointed side returns the same rows at the default threshold and at -1") {
     import spark.implicits._
-    // a checkpointed side has no size estimate, so the static planner
-    // never broadcasts it; AQE may still convert the join at runtime
+    // a checkpointed side's pre-AQE estimate is no file size: whichever
+    // way Spark and AQE plan the join from it, the rows must not change
     val facts = (0 until 500).map(i => (s"k${i % 40}", i.toLong)).toDF("k", "v")
     def join = facts.join(
       (0 until 40 by 3).map(i => (s"k$i", i.toLong)).toDF("k", "w").localCheckpoint(), Seq("k"))
