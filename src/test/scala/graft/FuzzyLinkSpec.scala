@@ -36,7 +36,7 @@ class FuzzyLinkSpec extends SparkSpec {
     assert(tg.toSet === Set("^aa", "aaa", "aa$"))
   }
 
-  test("dictionary joins carry no broadcast hint: at threshold -1 they shuffle and agree") {
+  test("dictionary joins carry no broadcast hint: at threshold -1 they shuffle, agree") {
     // The dictionary scales with the corpus — the exact semi/anti joins
     // must NOT carry a forced broadcast hint (an unconditional hint
     // overrides AQE's size check and OOMs the driver at 100x), so with

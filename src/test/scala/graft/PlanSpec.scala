@@ -118,7 +118,7 @@ class PlanSpec extends SparkSpec {
       s"extraction should stay inside codegen (no UDF barriers):\n${p.take(1200)}")
   }
 
-  test("broadcast choice: Spark's threshold alone decides, a shuffle join at -1 equals the broadcast") {
+  test("broadcast choice: Spark's threshold alone decides; a shuffle join at -1 equals it") {
     import spark.implicits._
     // hot-key fixture: one key carries 90% of the stream
     val stream = (0 until 2000).map { i =>
