@@ -1,19 +1,23 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.regex.{Matcher, Pattern}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Mention extraction: turn text -> typed mention rows.
   *
   * Reference analog: the recursive AST walk emitting 4 mention kinds
   * (package/call_graph.py:388-435, package/ast_processor.py:85-122). The
   * reference appends one-row pandas frames inside a Python walk (O(n^2));
-  * here the whole frontend is `posexplode(split(...))` + regex column
-  * expressions — fully codegen'd, no UDF, no per-row driver work, and the
-  * scan only needs (conv_id, turn_idx, text, ts) thanks to column pruning.
+  * here the whole frontend is one compiled row kernel per turn, `inline`d
+  * inside whole-stage codegen: no per-row driver work, and the scan only
+  * needs (conv_id, turn_idx, text, ts) thanks to column pruning.
   *
-  * One turn -> N mention rows (the Generator/UDTF shape) via posexplode;
-  * `mention_idx` is the segment position inside the turn, making
+  * One turn -> N mention rows (the Generator/UDTF shape); `mention_idx` is
+  * the segment position inside the turn, making
   * (conv_id, turn_idx, mention_idx) a stable natural key (replaces the
   * reference's global walk-order counters, call_graph.py:44-48).
   */
@@ -36,80 +40,113 @@ object Extract {
     val segmentSep = " ; "
   }
 
-  /** Extract all mentions. Output: conv_id, turn_idx, mention_idx, kind,
-    * subj, pred, obj, attr, parent, ts (absent fields are "", never null).
-    *
-    * A segment expands to an ARRAY of mention structs which is then
-    * inline-exploded (the 0..n Generator shape): def/alias/link segments
-    * yield one row, a two-hop `chain` segment yields TWO relation rows
-    * sharing the segment's mention_idx — the chained-call flatMap (L4)
-    * expressed as array<struct> + explode, no UDF. */
-  def mentions(transcripts: DataFrame): DataFrame = {
-    import Grammar._
-    val segs = transcripts.select(
-      col("conv_id"), col("turn_idx"), col("ts"),
-      posexplode(split(col("text"), segmentSep)).as(Seq("mention_idx", "seg")))
-
-    // cheap prefix dispatch short-circuits the anchored regex for the
-    // 3 of 4 productions that can't match (every production has a fixed
-    // leading keyword); the full regex still validates the match
-    val isDef = col("seg").startsWith("define entity ") && col("seg").rlike(defRe)
-    val isAlias = col("seg").startsWith("alias ") && col("seg").rlike(aliasRe)
-    val isLink = col("seg").startsWith("link ") && col("seg").rlike(linkRe)
-    val isChain = col("seg").startsWith("chain ") && col("seg").rlike(chainRe)
-
-    def m(kind: String, subj: Column, pred: Column, obj: Column,
-        attr: Column, parent: Column) =
-      struct(lit(kind).as("kind"), subj.as("subj"), pred.as("pred"),
-        obj.as("obj"), attr.as("attr"), parent.as("parent"))
-    def g(re: String, i: Int) = regexp_extract(col("seg"), re, i)
-    val e = lit("")
-
-    val expanded = when(isDef, array(
-        m("entity_def", g(defRe, 1), e, e, g(defRe, 2), g(defRe, 3))))
-      .when(isAlias, array(
-        m("alias_binding", g(aliasRe, 1), e, g(aliasRe, 2), e, e)))
-      .when(isLink, array(
-        m("relation", g(linkRe, 1), g(linkRe, 2), g(linkRe, 3), e, e)))
-      .when(isChain, array(
-        m("relation", g(chainRe, 1), g(chainRe, 2), g(chainRe, 3), e, e),
-        m("relation", g(chainRe, 3), g(chainRe, 4), g(chainRe, 5), e, e)))
-
-    segs
-      // project the expansion ONCE as a bound attribute: Spark shares no
-      // subexpressions between Filter and Generate, so filtering on the
-      // raw expression and then exploding it would run every regex +
-      // struct build twice per segment
-      .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("ts"),
-        expanded.as("_ms"))
-      .filter(col("_ms").isNotNull) // narration -> no mention rows
-      .select(col("conv_id"), col("turn_idx"), col("mention_idx"), col("ts"),
-        posexplode(col("_ms")).as(Seq("hop", "m")))
-      .select(col("conv_id"), col("turn_idx"), col("mention_idx"),
-        col("m.kind").as("kind"), col("m.subj").as("subj"),
-        col("m.pred").as("pred"), col("m.obj").as("obj"),
-        col("m.attr").as("attr"), col("m.parent").as("parent"),
-        // hop disambiguates the 0..n rows a chain segment fans out to:
-        // (conv_id, turn_idx, mention_idx, hop) stays a natural key
-        col("hop").cast("int").as("hop"),
-        col("ts"))
+  /** The grammar's patterns, compiled once per JVM. */
+  private object Compiled {
+    val sep: Pattern = Pattern.compile(Grammar.segmentSep)
+    val define: Pattern = Pattern.compile(Grammar.defRe)
+    val alias: Pattern = Pattern.compile(Grammar.aliasRe)
+    val link: Pattern = Pattern.compile(Grammar.linkRe)
+    val chain: Pattern = Pattern.compile(Grammar.chainRe)
   }
+
+  /** The segments of a turn's text, as Spark's `split(text, segmentSep, -1)`
+    * cuts them: trailing empty segments kept, an empty text one segment. */
+  private def segments(text: String): Array[String] = Compiled.sep.split(text, -1)
+
+  /** The grammar dispatch: the production named by the segment's leading
+    * keyword runs one `Matcher.find()`, as `rlike` and `regexp_extract` do
+    * (so `$` also matches before a final line terminator). Returns that
+    * matcher on its match, or null for narration. Every pattern starts
+    * with its anchored keyword, so no other production could match. */
+  private def matched(seg: String): Matcher = {
+    import Compiled._
+    val p =
+      if (seg.startsWith("define entity ")) define
+      else if (seg.startsWith("alias ")) alias
+      else if (seg.startsWith("link ")) link
+      else if (seg.startsWith("chain ")) chain
+      else return null
+    val m = p.matcher(seg)
+    if (m.find()) m else null
+  }
+
+  private val mentionType = ArrayType(StructType(
+    Seq("mention_idx", "hop").map(StructField(_, IntegerType, nullable = false)) ++
+      Seq("kind", "subj", "pred", "obj", "attr", "parent")
+        .map(StructField(_, StringType, nullable = false))),
+    containsNull = false)
+
+  /** Per turn: one struct per mention, in segment order. A def/alias/link
+    * segment gives one row with hop 0, a two-hop chain gives hop 0 and
+    * hop 1 under the same `mention_idx`; narration and a null text give
+    * none. A group that did not take part in the match is "", as in
+    * `regexp_extract`. */
+  private final class MentionRows extends UDF1[String, Seq[Row]] {
+    def call(text: String): Seq[Row] = {
+      if (text == null) return Nil
+      val segs = segments(text)
+      val out = Seq.newBuilder[Row]
+      var i = 0
+      while (i < segs.length) {
+        val m = matched(segs(i))
+        if (m != null) {
+          def g(k: Int): String = { val s = m.group(k); if (s == null) "" else s }
+          m.pattern match {
+            case Compiled.define => out += Row(i, 0, "entity_def", g(1), "", "", g(2), g(3))
+            case Compiled.alias => out += Row(i, 0, "alias_binding", g(1), "", g(2), "", "")
+            case Compiled.link => out += Row(i, 0, "relation", g(1), g(2), g(3), "", "")
+            case _ =>
+              out += Row(i, 0, "relation", g(1), g(2), g(3), "", "")
+              out += Row(i, 1, "relation", g(3), g(4), g(5), "", "")
+          }
+        }
+        i += 1
+      }
+      out.result()
+    }
+  }
+
+  /** Per turn: the grammar label of every segment, narration included;
+    * a two-hop chain is labeled `chain`. Null for a null text. */
+  private final class SegmentKinds extends UDF1[String, Seq[String]] {
+    def call(text: String): Seq[String] =
+      if (text == null) null
+      else segments(text).toSeq.map { seg =>
+        val m = matched(seg)
+        if (m == null) "narration"
+        else m.pattern match {
+          case Compiled.define => "entity_def"
+          case Compiled.alias => "alias_binding"
+          case Compiled.link => "relation"
+          case _ => "chain"
+        }
+      }
+  }
+
+  private val mentionRows =
+    udf(new MentionRows, mentionType).asNonNullable()
+  private val segmentKinds =
+    udf(new SegmentKinds, ArrayType(StringType, containsNull = false))
+
+  /** Extract all mentions. Output: conv_id, turn_idx, mention_idx, kind,
+    * subj, pred, obj, attr, parent, hop, ts (absent fields are "", never
+    * null). `hop` disambiguates the rows a chain segment fans out to:
+    * (conv_id, turn_idx, mention_idx, hop) is a natural key. */
+  def mentions(transcripts: DataFrame): DataFrame =
+    transcripts
+      .select(col("conv_id"), col("turn_idx"), col("ts"),
+        inline(mentionRows(col("text"))))
+      .select("conv_id", "turn_idx", "mention_idx", "kind", "subj", "pred",
+        "obj", "attr", "parent", "hop", "ts")
 
   /** Per-turn segment subgraph nodes (reference subgraph_nodes,
     * function_graph.py:99-148): every segment of every turn — including
     * narration — becomes a node keyed by the composite
-    * (conv_id, turn_idx, seg_idx), labeled with its grammar kind. */
-  def segmentNodes(transcripts: DataFrame): DataFrame = {
-    import Grammar._
+    * (conv_id, turn_idx, seg_idx), labeled with its grammar kind by the
+    * same dispatch as [[mentions]]. */
+  def segmentNodes(transcripts: DataFrame): DataFrame =
     transcripts.select(col("conv_id"), col("turn_idx"),
-      posexplode(split(col("text"), segmentSep)).as(Seq("seg_idx", "seg")))
-      .select(col("conv_id"), col("turn_idx"), col("seg_idx"),
-        when(col("seg").startsWith("define entity ") && col("seg").rlike(defRe), "entity_def")
-          .when(col("seg").startsWith("alias ") && col("seg").rlike(aliasRe), "alias_binding")
-          .when(col("seg").startsWith("link ") && col("seg").rlike(linkRe), "relation")
-          .when(col("seg").startsWith("chain ") && col("seg").rlike(chainRe), "chain")
-          .otherwise("narration").as("kind"))
-  }
+      posexplode(segmentKinds(col("text"))).as(Seq("seg_idx", "kind")))
 
   /** Per-turn segment subgraph edges: consecutive-segment `lead` edges
     * (function_graph.py:61-68). The destination's label rides the SAME

@@ -7,6 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
@@ -41,22 +42,36 @@ object StageStore {
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  /** Newest modification time across all compiled graft classes (classes
-    * dir) or the containing jar's mtime (spark-submit). Any recompile
+  /** Build stamp of the graft code the JVM loaded: for a classes
+    * directory the newest modification time under its `graft/` tree, for
+    * a jar (spark-submit, `sbt runMain`) the [[jarStamp]]. Any recompile
     * invalidates the cache key below, so stale stage checkpoints cannot
     * survive code changes to ANY stage's logic — not just the grammar.
     * Resume still works across JVM runs of the same build. */
   private def codeStamp: String = try {
-    val src = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-    val root = new java.io.File(src)
+    val root = new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
     if (root.isDirectory) {
       def newest(f: java.io.File): Long =
         if (f.isDirectory) (0L +: f.listFiles().toSeq.map(newest)).max
         else f.lastModified
       val graftDir = new java.io.File(root, "graft")
       newest(if (graftDir.exists) graftDir else root).toString
-    } else root.lastModified.toString // packaged jar
+    } else jarStamp(root)
   } catch { case _: Throwable => "unknown" }
+
+  /** Hash of the name, CRC-32 and size of every `graft/` entry of a jar,
+    * read from its central directory without decompressing anything. Not
+    * the jar's mtime: `sbt runMain` writes the same jar afresh under
+    * `target/bg-jobs/` for every JVM, which would key every run to a new
+    * stage base. */
+  private[graft] def jarStamp(jar: java.io.File): String = {
+    val zip = new java.util.zip.ZipFile(jar)
+    try {
+      val entries = zip.entries().asScala.filter(_.getName.startsWith("graft/"))
+        .map(e => s"${e.getName}:${e.getCrc}:${e.getSize}").toSeq.sorted
+      md5hex(entries.mkString(","))
+    } finally zip.close()
+  }
 
   /** Logic fingerprint for the stage-cache key: grammar + derivation text
     * (semantic identity) plus the build stamp (catches changes those

@@ -277,4 +277,28 @@ class PipelineSpec extends SparkSpec {
       } finally pool.shutdown()
     }
   }
+
+  /** A jar holding `classes` (entry name -> bytes). */
+  private def jar(dir: java.nio.file.Path, name: String, classes: Map[String, String]): java.io.File = {
+    val f = dir.resolve(name).toFile
+    Using.resource(new java.util.jar.JarOutputStream(new java.io.FileOutputStream(f))) { out =>
+      classes.toSeq.sortBy(_._1).foreach { case (n, body) =>
+        out.putNextEntry(new java.util.jar.JarEntry(n))
+        out.write(body.getBytes("UTF-8"))
+        out.closeEntry()
+      }
+    }
+    f
+  }
+
+  test("a jar's code stamp is its graft entries, not its mtime") {
+    val dir = Files.createTempDirectory("graft_jar_stamp")
+    val classes = Map("graft/A.class" -> "a-bytes", "graft/b/B.class" -> "b-bytes")
+    val one = jar(dir, "one.jar", classes)
+    val two = Files.copy(one.toPath, dir.resolve("two.jar")).toFile
+    assert(one.setLastModified(1000000000000L) && two.setLastModified(1700000000000L))
+    assert(StageStore.jarStamp(one) === StageStore.jarStamp(two))
+    val changed = jar(dir, "changed.jar", classes + ("graft/b/B.class" -> "b-bytez"))
+    assert(StageStore.jarStamp(changed) !== StageStore.jarStamp(one))
+  }
 }

@@ -5,14 +5,15 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
   SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
-import graft.graph.ParquetTableIO
+import graft.graph.{ParquetTableIO, Pipeline}
 import graft.ops.TextOps
 
 /** Physical-plan quality gates: the properties that matter at 100 TB,
@@ -115,7 +116,26 @@ class PlanSpec extends SparkSpec {
     val p = plan(m)
     assert(p.contains("isFinalPlan=true"))
     assert(p.contains("*("),
-      s"extraction should stay inside codegen (no UDF barriers):\n${p.take(1200)}")
+      s"extraction should stay inside whole-stage codegen:\n${p.take(1200)}")
+  }
+
+  test("every pipeline stage build compiles each generated method under the 8,000-byte JIT limit") {
+    // HotSpot never JIT-compiles a method above 8,000 bytes of bytecode
+    // (-XX:-DontCompileHugeMethods is off by default): such a generated
+    // method runs in the bytecode interpreter for every row of its stage
+    withStageRoot {
+      val sizes = Pipeline.stages.flatMap { s =>
+        plansOf(s.accessor(spark, sfDir)).flatMap(p =>
+          PlanWalk.collect(p) { case w: WholeStageCodegenExec => w }).map { w =>
+          val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+          (s.name, w.codegenStageId, stats.maxMethodCodeSize)
+        }
+      }
+      assert(sizes.map(_._1).contains("mentions"), sizes.toString)
+      val huge = sizes.filter(_._3 > 8000)
+      assert(huge.isEmpty, s"generated methods over 8,000 bytes (stage, codegen id, bytes): " +
+        huge.mkString(", "))
+    }
   }
 
   test("broadcast choice: Spark's threshold alone decides; a shuffle join at -1 equals it") {
