@@ -40,34 +40,34 @@ object Extract {
     val segmentSep = " ; "
   }
 
-  /** The grammar's patterns, compiled once per JVM. */
-  private object Compiled {
-    val sep: Pattern = Pattern.compile(Grammar.segmentSep)
-    val define: Pattern = Pattern.compile(Grammar.defRe)
-    val alias: Pattern = Pattern.compile(Grammar.aliasRe)
-    val link: Pattern = Pattern.compile(Grammar.linkRe)
-    val chain: Pattern = Pattern.compile(Grammar.chainRe)
-  }
+  // the grammar's patterns, compiled once per JVM
+  private val segmentSplit = Pattern.compile(Grammar.segmentSep)
+  private val definePattern = Pattern.compile(Grammar.defRe)
+  private val aliasPattern = Pattern.compile(Grammar.aliasRe)
+  private val linkPattern = Pattern.compile(Grammar.linkRe)
+  private val chainPattern = Pattern.compile(Grammar.chainRe)
 
   /** The segments of a turn's text, as Spark's `split(text, segmentSep, -1)`
     * cuts them: trailing empty segments kept, an empty text one segment. */
-  private def segments(text: String): Array[String] = Compiled.sep.split(text, -1)
+  private def segments(text: String): Array[String] = segmentSplit.split(text, -1)
+
+  private val narration: (String, Matcher) = ("narration", null)
 
   /** The grammar dispatch: the production named by the segment's leading
     * keyword runs one `Matcher.find()`, as `rlike` and `regexp_extract` do
-    * (so `$` also matches before a final line terminator). Returns that
-    * matcher on its match, or null for narration. Every pattern starts
-    * with its anchored keyword, so no other production could match. */
-  private def matched(seg: String): Matcher = {
-    import Compiled._
-    val p =
-      if (seg.startsWith("define entity ")) define
-      else if (seg.startsWith("alias ")) alias
-      else if (seg.startsWith("link ")) link
-      else if (seg.startsWith("chain ")) chain
-      else return null
+    * (so `$` also matches before a final line terminator). Returns the
+    * segment's label and that matcher on its match, or `narration` and
+    * null. Every pattern starts with its anchored keyword, so no other
+    * production could match. */
+  private def parse(seg: String): (String, Matcher) = {
+    val (label, p) =
+      if (seg.startsWith("define entity ")) ("entity_def", definePattern)
+      else if (seg.startsWith("alias ")) ("alias_binding", aliasPattern)
+      else if (seg.startsWith("link ")) ("relation", linkPattern)
+      else if (seg.startsWith("chain ")) ("chain", chainPattern)
+      else return narration
     val m = p.matcher(seg)
-    if (m.find()) m else null
+    if (m.find()) (label, m) else narration
   }
 
   private val mentionType = ArrayType(StructType(
@@ -77,10 +77,10 @@ object Extract {
     containsNull = false)
 
   /** Per turn: one struct per mention, in segment order. A def/alias/link
-    * segment gives one row with hop 0, a two-hop chain gives hop 0 and
-    * hop 1 under the same `mention_idx`; narration and a null text give
-    * none. A group that did not take part in the match is "", as in
-    * `regexp_extract`. */
+    * segment gives one row with hop 0, a two-hop chain gives two relation
+    * rows, hop 0 and hop 1, under the same `mention_idx`; narration and a
+    * null text give none. A group that did not take part in the match is
+    * "", as in `regexp_extract`. */
   private final class MentionRows extends UDF1[String, Seq[Row]] {
     def call(text: String): Seq[Row] = {
       if (text == null) return Nil
@@ -88,17 +88,16 @@ object Extract {
       val out = Seq.newBuilder[Row]
       var i = 0
       while (i < segs.length) {
-        val m = matched(segs(i))
-        if (m != null) {
-          def g(k: Int): String = { val s = m.group(k); if (s == null) "" else s }
-          m.pattern match {
-            case Compiled.define => out += Row(i, 0, "entity_def", g(1), "", "", g(2), g(3))
-            case Compiled.alias => out += Row(i, 0, "alias_binding", g(1), "", g(2), "", "")
-            case Compiled.link => out += Row(i, 0, "relation", g(1), g(2), g(3), "", "")
-            case _ =>
-              out += Row(i, 0, "relation", g(1), g(2), g(3), "", "")
-              out += Row(i, 1, "relation", g(3), g(4), g(5), "", "")
-          }
+        val (label, m) = parse(segs(i))
+        def g(k: Int): String = { val s = m.group(k); if (s == null) "" else s }
+        label match {
+          case "entity_def" => out += Row(i, 0, label, g(1), "", "", g(2), g(3))
+          case "alias_binding" => out += Row(i, 0, label, g(1), "", g(2), "", "")
+          case "relation" => out += Row(i, 0, label, g(1), g(2), g(3), "", "")
+          case "chain" =>
+            out += Row(i, 0, "relation", g(1), g(2), g(3), "", "")
+            out += Row(i, 1, "relation", g(3), g(4), g(5), "", "")
+          case _ =>
         }
         i += 1
       }
@@ -110,17 +109,7 @@ object Extract {
     * a two-hop chain is labeled `chain`. Null for a null text. */
   private final class SegmentKinds extends UDF1[String, Seq[String]] {
     def call(text: String): Seq[String] =
-      if (text == null) null
-      else segments(text).toSeq.map { seg =>
-        val m = matched(seg)
-        if (m == null) "narration"
-        else m.pattern match {
-          case Compiled.define => "entity_def"
-          case Compiled.alias => "alias_binding"
-          case Compiled.link => "relation"
-          case _ => "chain"
-        }
-      }
+      if (text == null) null else segments(text).toSeq.map(parse(_)._1)
   }
 
   private val mentionRows =
