@@ -70,6 +70,8 @@ object Extract {
     if (m.find()) (label, m) else narration
   }
 
+  // declared, not inferred from a Scala type: an inferred String field is
+  // nullable, which would turn the committed columns REQUIRED -> OPTIONAL
   private val mentionType = ArrayType(StructType(
     Seq("mention_idx", "hop").map(StructField(_, IntegerType, nullable = false)) ++
       Seq("kind", "subj", "pred", "obj", "attr", "parent")

@@ -31,11 +31,12 @@ object Pipeline {
     * re-derivation.
     *
     * NOT in the mentions critical path and NOT part of runAll: the
-    * extraction keeps the fused derivation+regex plan (one codegen pass,
-    * text never materialized). Measured at sf0.1: the text write+read
-    * roundtrip costs ~30s (transcripts 11-23s + parquet-read mentions
-    * 10-19s) where the fused stage costs ~11s — committing here would
-    * halve pipeline throughput for zero query benefit. In a real
+    * extraction keeps the fused derivation+extraction plan (text never
+    * materialized). Measured at sf0.1 (r02): the text write+read
+    * roundtrip cost ~30 s (transcripts 11-23 s + parquet-read mentions
+    * 10-19 s); the fused `mentions` stage takes 21.8-22.7 s cold with
+    * `local[4]` (BENCH_extract_kernel_sf01.json), so committing here
+    * would lengthen the critical path for zero query benefit. In a real
     * deployment transcripts ARE the input table; this stage exists only
     * because the sandbox derives them. */
   def transcripts(spark: SparkSession, sfDir: String): DataFrame =

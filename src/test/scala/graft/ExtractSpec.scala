@@ -180,7 +180,7 @@ class ExtractSpec extends SparkSpec {
       s"${got.length} rows vs ${want.length}; first differences: ${bad.take(5).mkString("; ")}")
   }
 
-  test("kernel segment labels equal the startsWith && rlike chain, narration and chain included") {
+  test("kernel segment labels equal the startsWith && rlike chain, narration included") {
     val want = refSegmentNodes(parityTurns).collect().toSeq
     val got = Extract.segmentNodes(parityTurns).collect().toSeq
     assert(want.map(_.getString(3)).distinct.sorted ===
