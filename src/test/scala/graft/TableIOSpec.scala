@@ -1,16 +1,25 @@
 package graft
 
 import java.io.{File, FileNotFoundException}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.graph.{ParquetTableIO, StageStore}
 
 /** Parquet reads take their schema from a data file's footer on the
   * driver: the reader has the schema Spark would infer, without the
   * inference job. The footer schema itself keeps the file's
   * nullability; a file-source reader makes every field nullable, as
-  * inference does. */
+  * inference does. A table is resolved once per session and footer
+  * settings while its data files keep their names, lengths and mtimes. */
 class TableIOSpec extends SparkSpec {
 
   private val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -25,6 +34,20 @@ class TableIOSpec extends SparkSpec {
     timestamp_seconds(col("id") + 1700000000L).as("ts"),
     lit(java.sql.Date.valueOf("1995-01-01")).as("d"),
     array(col("id").cast("float"), lit(1.5f)).as("embedding"))
+
+  private def relationOf(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }.get
+
+  private def tempTable(name: String) =
+    Files.createTempDirectory("graft_tableio").resolve(name).toString
+
+  /** `df` as a single-file table at `file`. */
+  private def writeFile(df: DataFrame, file: String): Unit = {
+    val dir = tempTable("single")
+    df.coalesce(1).write.parquet(dir)
+    val part = new File(dir).listFiles.filter(_.getName.startsWith("part-")).head
+    Files.copy(part.toPath, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
+  }
 
   test("footer schema equals the inferred schema for every input table") {
     for (sf <- sfDirs) {
@@ -97,5 +120,86 @@ class TableIOSpec extends SparkSpec {
       .filter(f => new String(Files.readAllBytes(f.toPath), "UTF-8").contains("read.parquet("))
     assert(offenders.isEmpty,
       s"read parquet through graft.graph.ParquetTableIO, not spark.read.parquet: $offenders")
+  }
+
+  test("a second read of an unchanged table reuses its relation; no read runs a job") {
+    val dir = tempTable("t")
+    sample(100, 2).write.parquet(dir)
+    var first, second: DataFrame = null
+    assert(jobsOf { first = ParquetTableIO.read(spark, dir) } === 0)
+    assert(jobsOf { second = ParquetTableIO.read(spark, dir) } === 0)
+    assert(relationOf(first) eq relationOf(second))
+    assert(second.count() === 100)
+  }
+
+  test("a table rewritten at its path reads with its new rows and schema") {
+    val dir = tempTable("t")
+    sample(100, 2).write.parquet(dir)
+    assert(ParquetTableIO.read(spark, dir).count() === 100)
+    val wider = sample(40, 3).withColumn("extra", col("i") * 2)
+    ParquetTableIO.overwrite(wider, dir)
+    assertSameRows(ParquetTableIO.read(spark, dir), wider)
+    assert(ParquetTableIO.read(spark, dir).columns.last === "extra")
+
+    val file = tempTable("t.parquet")
+    writeFile(sample(100, 1), file)
+    val before = new File(file).length
+    assert(ParquetTableIO.read(spark, file).count() === 100)
+    writeFile(wider, file)
+    assert(new File(file).length !== before)
+    assertSameRows(ParquetTableIO.read(spark, file), wider)
+  }
+
+  test("two reads of one table join on id with fresh attributes") {
+    val dir = tempTable("t")
+    sample(100, 2).write.parquet(dir)
+    val (a, b) = (ParquetTableIO.read(spark, dir), ParquetTableIO.read(spark, dir))
+    val joined = a.join(b, a("id") === b("id")).select(a("id"), b("text"))
+    assert(joined.count() === 100)
+    assert(joined.filter(concat(lit("t"), col("id")) =!= col("text")).count() === 0)
+    // not a trivially true `id = id`, which Dataset.join would re-resolve
+    val shifted = a.join(b, a("id") === b("id") + 1).select(a("id"), b("id").as("prev"))
+    assert(shifted.count() === 99)
+    assert(shifted.filter(col("prev") =!= col("id") - 1).count() === 0)
+  }
+
+  test("footer settings and sessions key the relation: binaryAsString, newSession") {
+    // parquet-hadoop's writer records no Spark schema in the footer, so
+    // the footer conversion (and binaryAsString) decides the column type
+    val file = tempTable("bin.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary b; }")
+    val writer = ExampleParquetWriter.builder(new Path(file)).withConf(new Configuration)
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (0 until 3).foreach(i => writer.write(rows.newGroup().append("id", i.toLong).append("b", s"v$i")))
+    finally writer.close()
+    def typeOf(s: org.apache.spark.sql.SparkSession) =
+      ParquetTableIO.read(s, file).schema("b").dataType
+    assert(typeOf(spark) === BinaryType)
+    withConf("spark.sql.parquet.binaryAsString" -> "true") {
+      assert(typeOf(spark) === StringType)
+      assert(ParquetTableIO.read(spark, file).filter(col("b") === "v2").count() === 1)
+    }
+    assert(typeOf(spark) === BinaryType)
+    val other = spark.newSession()
+    val mine = relationOf(ParquetTableIO.read(spark, file))
+    val theirs = relationOf(ParquetTableIO.read(other, file))
+    assert(!(theirs eq mine))
+    assert(relationOf(ParquetTableIO.read(other, file)) eq theirs)
+    assert(relationOf(ParquetTableIO.read(spark, file)) eq mine)
+  }
+
+  test("past the cache bound the least recently read relations are dropped") {
+    val src = tempTable("src.parquet")
+    writeFile(sample(10, 1), src)
+    val tables = (0 to ParquetTableIO.maxRelations).map { i =>
+      val t = tempTable(s"t$i.parquet")
+      Files.copy(Paths.get(src), Paths.get(t))
+      t
+    }
+    val relations = tables.map(t => relationOf(ParquetTableIO.read(spark, t)))
+    assert(relationOf(ParquetTableIO.read(spark, tables.last)) eq relations.last)
+    assert(!(relationOf(ParquetTableIO.read(spark, tables.head)) eq relations.head))
   }
 }

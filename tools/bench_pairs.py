@@ -14,11 +14,15 @@ BENCHMARK.json.
 
 Every run is appended, as one row, to BENCH_<topic>.json in the current
 directory: a JSON list of {code, workload, seed, trace, round,
-loadavg_before_launch, disclosure, result}, where `disclosure` and
-`result` are the two JSON lines run.py prints. At the end the script
+loadavg_before_launch, disclosure, result, ops}, where `disclosure` and
+`result` are the two JSON lines run.py prints and `ops` is the run's
+per-operation list (name, seconds, cpu_s, stolen_s, rows, ok) copied from
+the checkout's .bench_build/results/runs.jsonl. At the end the script
 prints, for each metric of the final rows in that file that match the
 workload and trace flag, each side's median and quartiles and the number of
-seeds on which the change is better (direction from BENCHMARK.json).
+seeds on which the change is better (direction from BENCHMARK.json), then
+each side's median seconds per operation name, stolen CPU time removed as
+run.py does for `op_s`.
 Re-running with more seeds adds to the same file. Nothing under perfbench/
 is edited; each checkout keeps its own .bench_build/.
 """
@@ -71,11 +75,28 @@ def run(code, path, args, seconds, seed, round_):
         sys.stderr.write(out.stderr[-3000:])
         sys.exit(f"{code} seed {seed}: run.py exited with {out.returncode}")
     row["disclosure"], row["result"] = json.loads(lines[-2]), json.loads(lines[-1])
+    row["ops"] = last_run_ops(path, args, seed)
     m = row["result"]["metrics"]
     print(f"{round_} seed {seed} {code}: load {row['loadavg_before_launch']['1m']} "
           + " ".join(f"{k}={v['value']:.6g}" for k, v in m.items())
           + f" failed={row['result']['failed']}", flush=True)
     return row
+
+
+def last_run_ops(path, args, seed):
+    """The per-operation list of the run run.py recorded last."""
+    with open(os.path.join(path, ".bench_build", "results", "runs.jsonl")) as f:
+        rec = json.loads(f.readlines()[-1])
+    if (rec["workload"], rec["seed"], rec["trace"]) != (args.workload, seed, args.trace):
+        sys.exit(f"{path}: the last recorded run is not {args.workload} seed {seed}")
+    return [{k: o[k] for k in ("name", "seconds", "cpu_s", "stolen_s", "rows", "ok")}
+            for o in rec["ops"]]
+
+
+def unshared(op):
+    """An operation's seconds times cpu / (cpu + stolen), as in run.py."""
+    busy = op["cpu_s"] + op["stolen_s"]
+    return op["seconds"] * op["cpu_s"] / busy if busy > 0 else op["seconds"]
 
 
 def save(out, rows):
@@ -115,6 +136,18 @@ def summarize(rows, args, better):
               f"[{c1:.6g}, {c3:.6g}]  {delta:+.1f} %  better in {wins}/{len(seeds)}"
               + (f" ({ties} ties)" if ties else "")
               + f"  |diff| {'>' if abs(cm - pm) > p3 - p1 else '<='} parent IQR {p3 - p1:.6g}")
+    per_op = {c: {} for c in side}
+    for c in side:
+        for s in seeds:
+            for o in side[c][s].get("ops", []):
+                per_op[c].setdefault(o["name"], []).append(unshared(o))
+    names = sorted(set(per_op["parent"]) & set(per_op["change"]))
+    if names:
+        print("  median seconds per op (all ops of the pairs' runs):")
+    for n in names:
+        pm, cm = (statistics.median(per_op[c][n]) for c in ("parent", "change"))
+        print(f"    {n:28s} parent {pm:.4g} ({len(per_op['parent'][n])})  "
+              f"change {cm:.4g} ({len(per_op['change'][n])})  {(cm - pm) / pm * 100:+.1f} %")
 
 
 def main():
