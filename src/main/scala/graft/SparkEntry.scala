@@ -75,7 +75,7 @@ object SparkEntry {
       col("subj"), col("pred"), col("obj"))
   }
 
-  /** Per-conversation KG telemetry off the committed triples table: the
+  /** Per-conversation KG telemetry off the triples view: the
     * graph-side analog of the corpus curation stats (which conversations
     * are triple-dense / entity-diverse — the per-document fact table a
     * KG-quality dashboard reads). The three distinct counts are

@@ -118,12 +118,16 @@ object Canonical {
         (col("node_id") + knownCount).as("node_id"),
         col("canonical_name"))
 
-  /** FK remap: triples (subj, pred, obj, ...) -> edge rows with dense IDs,
-    * via two joins against the node table
+  /** FK remap: relations (subj, pred, obj, ...) -> edge rows with dense
+    * IDs, via two inner joins against the node table
     * (package/hierarchical_graph.py:334-339): Spark broadcasts the node
     * table while it is under its broadcast threshold and shuffles once it
     * outgrows it, where AQE splits the partitions of hot canonical names
-    * at runtime. */
+    * at runtime. The inner join on `obj` keeps exactly the relations whose
+    * object is a node, so over resolved relations and a node table with
+    * one row per name this equals the remap of
+    * `Triples.knownOnly(resolved, vocabulary)`: the pipeline passes
+    * `resolved` and runs no separate semi join. */
   def edges(triples: DataFrame, nodes: DataFrame): DataFrame = {
     // one dimension frame for both endpoints: when the node table is
     // broadcast, both joins broadcast the same plan and Spark reuses that

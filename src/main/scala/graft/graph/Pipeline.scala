@@ -19,6 +19,11 @@ import graft.version.Versions
   *   - per-stage lineage/metrics land next to the tables (StageStore).
   *
   * The stage DAG is declared once, in [[stages]]; `runAll` schedules it.
+  * A table is committed only when its commit pays for itself (the S/C
+  * rule: derivation cost × (consumers − 1) above commit cost). [[triples]]
+  * and [[versionEdges]] fail it: each is a filter of one committed table
+  * that its consumers re-plan in milliseconds, so they are views over
+  * committed tables, not stages.
   */
 object Pipeline {
 
@@ -115,17 +120,20 @@ object Pipeline {
       Canonical.nodes(entityNames(spark, sfDir))
     }
 
-  /** The entity vocabulary for the triple-forming joins is read from the
-    * COMMITTED nodes table (one row per name by construction), not
-    * re-derived: entityNames is a distinct over the full entity_def
-    * mention stream — one corpus-sized shuffle — and deriving it again
-    * here and in mintedNodes would run that shuffle three times per
-    * pipeline instead of once (inside the nodes stage). */
+  /** Resolved relations whose object is a defined entity: a view, not a
+    * stage. It is `resolved` less the relations with an unknown object
+    * (90.8 of 99.3 KB on the perfbench corpus), reached by one broadcast
+    * semi join, so committing it cost a write and a re-read of nearly
+    * `resolved` again; its query consumers plan the join instead, and
+    * [[edges]] needs no such filter. Built over committed `resolved` and
+    * `nodes`, it runs no Spark job once those have committed.
+    *
+    * The entity vocabulary is read from the COMMITTED nodes table (one
+    * row per name by construction), not re-derived: entityNames is a
+    * distinct over the full entity_def mention stream — one corpus-sized
+    * shuffle — that runs once, inside the nodes stage. */
   def triples(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "triples") {
-      Triples.knownOnly(resolved(spark, sfDir),
-        nodes(spark, sfDir).select("canonical_name"))
-    }
+    Triples.knownOnly(resolved(spark, sfDir), nodes(spark, sfDir).select("canonical_name"))
 
   def mintedNodes(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "minted_nodes") {
@@ -134,9 +142,12 @@ object Pipeline {
         Triples.mintedNames(resolved(spark, sfDir), known.select("canonical_name")))
     }
 
+  /** Built from `resolved`, not [[triples]]: `Canonical.edges` inner-joins
+    * each object against `nodes`, which drops an unknown object just as
+    * the triples' semi join does. */
   def edges(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "edges") {
-      Canonical.edges(triples(spark, sfDir), nodes(spark, sfDir))
+      Canonical.edges(resolved(spark, sfDir), nodes(spark, sfDir))
     }
 
   def versionNodes(spark: SparkSession, sfDir: String): DataFrame =
@@ -144,10 +155,11 @@ object Pipeline {
       Versions.versionNodes(mentions(spark, sfDir))
     }
 
+  /** A view, not a stage: a filter and projection of the committed
+    * `version_nodes` with one query consumer, so a commit would only add a
+    * write job. Runs no Spark job once `version_nodes` has committed. */
   def versionEdges(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "version_edges") {
-      Versions.versionEdges(versionNodes(spark, sfDir))
-    }
+    Versions.versionEdges(versionNodes(spark, sfDir))
 
   /** One pipeline stage: the name of its committed table, the stages its
     * accessor reads, and the accessor, which commits the stage on its
@@ -163,11 +175,9 @@ object Pipeline {
     Stage("mentions", Nil, mentions),
     Stage("resolved", Seq("mentions"), resolved),
     Stage("nodes", Seq("mentions"), nodes),
-    Stage("triples", Seq("resolved", "nodes"), triples),
     Stage("minted_nodes", Seq("resolved", "nodes"), mintedNodes),
-    Stage("edges", Seq("triples", "nodes"), edges),
-    Stage("version_nodes", Seq("mentions"), versionNodes),
-    Stage("version_edges", Seq("version_nodes"), versionEdges))
+    Stage("edges", Seq("resolved", "nodes"), edges),
+    Stage("version_nodes", Seq("mentions"), versionNodes))
 
   /** Run every stage to completion (idempotent / resumable) and return the
     * emitted edge count: the committed edge table's footer row sum (its
@@ -186,8 +196,8 @@ object Pipeline {
     * committed inputs, so the schedule changes no commit.
     *
     * The overlap pays only where the host has idle CPU while the
-    * critical path (mentions → resolved → triples → edges) runs: it
-    * adds no work, it moves work off that path. On perfbench `build`
+    * critical path (mentions → resolved → edges, with minted_nodes beside
+    * edges) runs: it adds no work, it moves work off that path. On perfbench `build`
     * (`local[4]` on 4 cores) the JVM keeps 0.76 of the cores busy at
     * the sequential order, and `runAll` is faster. At sf0.1 with
     * `local[32]` on 4 cores (0.91 busy) a free task slot is not a free
@@ -241,17 +251,25 @@ object Pipeline {
     spark.stop()
   }
 
+  /** Size of Spark's cache of Janino-compiled classes (a static conf,
+    * default 100). A cold `runAll` generates about 100 classes and the 92
+    * driver queries about 1,200, so at the default a second run in one JVM
+    * recompiles much of what the first compiled. */
+  private[graft] val codegenCacheEntries = 4096
+
   /** `SPARK_GRAFT_CPUS`, the local core count of every entry point. */
   def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
 
   /** The one session factory: `local[cpus]` (or `master`), one shuffle
-    * partition per core, UTC session time zone (the oracle's), UI off. */
+    * partition per core, UTC session time zone (the oracle's), UI off, and
+    * room for [[codegenCacheEntries]] compiled classes. */
   def session(cpus: Int, master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
       .master(master.getOrElse(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

@@ -4,11 +4,23 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.{Pipeline, StageStore}
+import graft.canonical.Canonical
+import graft.extract.Extract
+import graft.graph.{ParquetTableIO, Pipeline, StageStore}
+import graft.link.Resolve
+import graft.sources.Transcripts
+import graft.triples.Triples
+import graft.version.Versions
 
 /** Checkpoint/resume semantics of the staged pipeline (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics"). */
@@ -41,15 +53,17 @@ class PipelineSpec extends SparkSpec {
     Option(new java.io.File(StageStore.baseFor(sfDir)).listFiles()).toSeq.flatten
       .filter(d => new java.io.File(d, "_SUCCESS").exists).map(_.getName).toSet
 
-  /** (rows, order-free sum of row xxhash64) of every declared stage. */
+  /** (rows, order-free sum of row xxhash64) of a table. */
+  private def digest(df: DataFrame): (Long, Option[BigDecimal]) = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
+    (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)))
+  }
+
+  /** [[digest]] of every declared stage. */
   private def digests(sfDir: String): Map[String, (Long, Option[BigDecimal])] = {
     val base = StageStore.baseFor(sfDir)
-    Pipeline.stages.map { s =>
-      val df = spark.read.parquet(s"$base/${s.name}")
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(df.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
-      s.name -> (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)))
-    }.toMap
+    Pipeline.stages.map(s => s.name -> digest(spark.read.parquet(s"$base/${s.name}"))).toMap
   }
 
   test("each declared stage builds from its declared inputs alone and commits only itself") {
@@ -82,14 +96,89 @@ class PipelineSpec extends SparkSpec {
       digests(sf0001)
     }
     val sequential = withStageRoot {
-      Seq(Pipeline.mentions _, Pipeline.resolved _, Pipeline.nodes _, Pipeline.triples _,
-        Pipeline.mintedNodes _, Pipeline.edges _, Pipeline.versionNodes _,
-        Pipeline.versionEdges _).foreach(_(spark, sf0001))
+      Seq(Pipeline.mentions _, Pipeline.resolved _, Pipeline.nodes _, Pipeline.mintedNodes _,
+        Pipeline.edges _, Pipeline.versionNodes _).foreach(_(spark, sf0001))
       digests(sf0001)
     }
     assert(scheduled.keySet === Pipeline.stages.map(_.name).toSet)
     assert(scheduled("edges")._1 > 0)
     assert(scheduled === sequential)
+  }
+
+  test("runAll commits exactly the six declared stages as zstd part files; the two views run no job") {
+    withStageRoot {
+      Pipeline.runAll(spark, sf0001)
+      val six = Set("mentions", "resolved", "nodes", "minted_nodes", "edges", "version_nodes")
+      assert(Pipeline.stages.map(_.name).toSet === six)
+      val base = StageStore.baseFor(sf0001)
+      val dirs = new java.io.File(base).listFiles().filterNot(_.getName.startsWith("_"))
+      assert(dirs.map(_.getName).toSet === six, "stage directories")
+      assert(committed(sf0001) === six)
+      val conf = spark.sparkContext.hadoopConfiguration
+      dirs.foreach { d =>
+        val data = d.listFiles().filterNot(_.getName.matches("[_.].*"))
+        assert(data.nonEmpty, d.getName)
+        data.foreach { f =>
+          assert(f.getName.matches("""part-\d{5}-.+\.zstd\.parquet"""), f.getName)
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+          val codecs = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+            .map(_.getCodec).toSet finally reader.close()
+          assert(codecs === Set(CompressionCodecName.ZSTD), f.getName)
+        }
+        val rows = spark.read.parquet(d.getPath).count()
+        assert(ParquetTableIO.partRows(spark, d.getPath).map(_._2).sum === rows, d.getName)
+        assert(StageStore.committedRows(spark, sf0001, d.getName) === rows, d.getName)
+      }
+      assert(jobsOf(Pipeline.triples(spark, sf0001)) === 0)
+      assert(jobsOf(Pipeline.versionEdges(spark, sf0001)) === 0)
+      assert(committed(sf0001) === six, "a view must commit nothing")
+    }
+  }
+
+  test("edges from resolved equal edges from the known-only triples; the views equal their committed forms") {
+    def sameTable(a: DataFrame, b: DataFrame, what: String): Unit = {
+      assert(a.schema === b.schema, what)
+      val (da, db) = (digest(a), digest(b))
+      assert(da === db, what)
+      assert(da._1 > 0, what)
+    }
+    def edgesBothWays(resolved: DataFrame, nodes: DataFrame, what: String): Unit = {
+      val vocab = nodes.select("canonical_name")
+      assert(resolved.join(vocab.withColumnRenamed("canonical_name", "obj"), Seq("obj"),
+        "left_anti").count() > 0, s"$what: the corpus must hold unknown objects")
+      sameTable(Canonical.edges(resolved, nodes),
+        Canonical.edges(Triples.knownOnly(resolved, vocab), nodes), what)
+    }
+    withStageRoot {
+      edgesBothWays(Pipeline.resolved(spark, sf0001), Pipeline.nodes(spark, sf0001), "sf0.001")
+      // the forms the two tables had as committed stages, committed here
+      // from the expressions their stages built
+      val triples = StageStore.getOrCreate(spark, sf0001, "triples") {
+        Triples.knownOnly(Pipeline.resolved(spark, sf0001),
+          Pipeline.nodes(spark, sf0001).select("canonical_name"))
+      }
+      val versionEdges = StageStore.getOrCreate(spark, sf0001, "version_edges") {
+        Versions.versionEdges(Pipeline.versionNodes(spark, sf0001))
+      }
+      sameTable(Pipeline.triples(spark, sf0001), triples, "triples")
+      sameTable(Pipeline.versionEdges(spark, sf0001), versionEdges, "version_edges")
+    }
+    // a hot object on 60 % of relations, and objects nothing defines
+    val m = Extract.mentions(Transcripts.synthetic(spark, 300, 12, vocab = 500, hotPct = 60))
+      .localCheckpoint()
+    edgesBothWays(Resolve.resolved(m).localCheckpoint(),
+      Canonical.nodes(Triples.entityNames(m)).localCheckpoint(), "hot-entity corpus")
+  }
+
+  test("a second runAll on the shared session compiles no class") {
+    def compiled(f: => Any): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    withStageRoot(Pipeline.runAll(spark, sf0001))
+    assert(withStageRoot(compiled(Pipeline.runAll(spark, sf0001))) === 0,
+      "a second build of the same plans must find every class in the codegen cache")
   }
 
   test("a failing stage: the scheduler rethrows it after the independent stages finish; a rerun commits the rest") {
@@ -101,7 +190,7 @@ class PipelineSpec extends SparkSpec {
       assert(thrown eq boom)
       // the dependents of resolved never start; every independent stage
       // has committed by the time the failure is rethrown
-      val independent = Set("mentions", "nodes", "version_nodes", "version_edges")
+      val independent = Set("mentions", "nodes", "version_nodes")
       assert(committed(sf0001) === independent)
       val base = StageStore.baseFor(sf0001)
       def stamps = independent.map(s => s -> new java.io.File(s"$base/$s/_SUCCESS").lastModified).toMap
@@ -144,15 +233,14 @@ class PipelineSpec extends SparkSpec {
     // the vocabulary semi-join. Must be row-identical to rebuilding the
     // whole corpus (including cross-batch links: a new conv defining an
     // entity an OLD conv referenced flips that old relation into a triple).
-    val full = graft.sources.Transcripts.synthetic(spark, 30, 8)
+    val full = Transcripts.synthetic(spark, 30, 8)
     val old = full.filter(xxhash64(col("conv_id")) % 2 === 0)
     val neu = full.filter(xxhash64(col("conv_id")) % 2 =!= 0)
-    val mOld = graft.extract.Extract.mentions(old)
-    val (m, r, t) = Pipeline.appendBatch(mOld, graft.link.Resolve.resolved(mOld), neu)
-    val mFull = graft.extract.Extract.mentions(full)
-    val rFull = graft.link.Resolve.resolved(mFull)
-    val tFull = graft.triples.Triples.knownOnly(
-      rFull, graft.triples.Triples.entityNames(mFull))
+    val mOld = Extract.mentions(old)
+    val (m, r, t) = Pipeline.appendBatch(mOld, Resolve.resolved(mOld), neu)
+    val mFull = Extract.mentions(full)
+    val rFull = Resolve.resolved(mFull)
+    val tFull = Triples.knownOnly(rFull, Triples.entityNames(mFull))
     assert(rowSet(m) === rowSet(mFull), "mention stage must be append-exact")
     assert(rowSet(r) === rowSet(rFull), "resolution must be conversation-local (append-exact)")
     assert(rowSet(t) === rowSet(tFull), "incremental triples must equal full recompute")
@@ -181,8 +269,7 @@ class PipelineSpec extends SparkSpec {
         Set("stage", "partition_id", "output_rows", "wall_ms"))
       val stages = lin.select("stage").distinct()
         .collect().map(_.getString(0)).toSet
-      assert(Set("mentions", "resolved", "triples", "nodes", "edges",
-        "version_nodes", "version_edges").subsetOf(stages))
+      assert(stages === Pipeline.stages.map(_.name).toSet)
       // per-partition: at least one stage has multiple partition rows
       val maxParts = lin.groupBy("stage").count()
         .agg(max("count")).collect()(0).getLong(0)

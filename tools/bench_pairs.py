@@ -22,7 +22,11 @@ prints, for each metric of the final rows in that file that match the
 workload and trace flag, each side's median and quartiles and the number of
 seeds on which the change is better (direction from BENCHMARK.json), then
 each side's median seconds per operation name, stolen CPU time removed as
-run.py does for `op_s`.
+run.py does for `op_s`. Each metric with a `bound` in BENCHMARK.json also
+gets a bound check: is the change's median worse than the parent's by more
+than that fraction? Each metric named by --claim gets a claim check: is
+the change better on at least nine of every ten pairs, and is its median
+better than the parent's by more than the parent's interquartile range?
 Re-running with more seeds adds to the same file. Nothing under perfbench/
 is edited; each checkout keeps its own .bench_build/.
 """
@@ -112,7 +116,26 @@ def quartiles(xs):
     return med, q1, q3
 
 
-def summarize(rows, args, better):
+def bound_check(pm, cm, lower, bound):
+    """The bound check line: the change's median worse than the parent's by
+    more than `bound` (a fraction of the parent's median) fails."""
+    worse = ((cm - pm) if lower else (pm - cm)) / pm if pm else float("nan")
+    verdict = "EXCEEDED" if worse > bound else "ok"
+    return f"bound: change worse by {worse * 100:+.1f} % of parent, bound {bound * 100:.0f} %: {verdict}"
+
+
+def claim_check(pm, cm, p1, p3, lower, wins, pairs):
+    """The claim check line: better in >= 9/10 of the pairs, and a median
+    better by more than the parent's interquartile range."""
+    gain = (pm - cm) if lower else (cm - pm)
+    by_wins = wins * 10 >= 9 * pairs
+    by_iqr = gain > p3 - p1
+    verdict = "MET" if by_wins and by_iqr else "NOT MET"
+    return (f"claim: better in {wins}/{pairs} (needs 9/10): {'yes' if by_wins else 'no'}; "
+            f"median gain {gain:.6g} > parent IQR {p3 - p1:.6g}: {'yes' if by_iqr else 'no'}: {verdict}")
+
+
+def summarize(rows, args, better, bounds):
     sel = [r for r in rows if r["workload"] == args.workload
            and r["trace"] == args.trace and r["round"] == "final"]
     side = {c: {r["seed"]: r for r in sel if r["code"] == c} for c in ("parent", "change")}
@@ -136,6 +159,10 @@ def summarize(rows, args, better):
               f"[{c1:.6g}, {c3:.6g}]  {delta:+.1f} %  better in {wins}/{len(seeds)}"
               + (f" ({ties} ties)" if ties else "")
               + f"  |diff| {'>' if abs(cm - pm) > p3 - p1 else '<='} parent IQR {p3 - p1:.6g}")
+        if k in bounds:
+            print(f"  {'':24s} {bound_check(pm, cm, lower, bounds[k])}")
+        if k in args.claim:
+            print(f"  {'':24s} {claim_check(pm, cm, p1, p3, lower, wins, len(seeds))}")
     per_op = {c: {} for c in side}
     for c in side:
         for s in seeds:
@@ -167,8 +194,13 @@ def main():
                     help="where the two checkouts live")
     ap.add_argument("--summary-only", action="store_true",
                     help="print the summary of BENCH_<topic>.json and run nothing")
+    metrics = bench["end_to_end"] + bench["per_layer"]
+    ap.add_argument("--claim", action="append", default=[],
+                    choices=[m["name"] for m in metrics], metavar="METRIC",
+                    help="a metric the change claims to improve (repeatable)")
     args = ap.parse_args()
-    better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    better = {m["name"]: m["better"] for m in metrics}
+    bounds = {m["name"]: m["bound"] for m in metrics if "bound" in m}
     out = f"BENCH_{args.topic}.json"
     rows = []
     if os.path.exists(out):
@@ -187,7 +219,7 @@ def main():
             for c in order:
                 rows.append(run(c, paths[c], args, bench["run_seconds"], seed, "final"))
                 save(out, rows)
-    summarize(rows, args, better)
+    summarize(rows, args, better, bounds)
 
 
 if __name__ == "__main__":
