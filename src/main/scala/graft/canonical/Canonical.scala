@@ -128,12 +128,12 @@ object Canonical {
     * one row per name this equals the remap of
     * `Triples.knownOnly(resolved, vocabulary)`: the pipeline passes
     * `resolved` and runs no separate semi join. */
-  def edges(triples: DataFrame, nodes: DataFrame): DataFrame = {
+  def edges(relations: DataFrame, nodes: DataFrame): DataFrame = {
     // one dimension frame for both endpoints: when the node table is
     // broadcast, both joins broadcast the same plan and Spark reuses that
     // exchange
     val dim = nodes.select("canonical_name", "node_type", "node_id")
-    triples
+    relations
       .join(dim.as("src"), col("subj") === col("src.canonical_name"))
       .join(dim.as("dst"), col("obj") === col("dst.canonical_name"))
       .select(

@@ -21,9 +21,9 @@ import graft.version.Versions
   * The stage DAG is declared once, in [[stages]]; `runAll` schedules it.
   * A table is committed only when its commit pays for itself (the S/C
   * rule: derivation cost × (consumers − 1) above commit cost). [[triples]]
-  * and [[versionEdges]] fail it: each is a filter of one committed table
-  * that its consumers re-plan in milliseconds, so they are views over
-  * committed tables, not stages.
+  * and [[versionEdges]] fail it: each is a filter of committed tables
+  * that its consumers plan in milliseconds, so they are views, not
+  * stages.
   */
 object Pipeline {
 
@@ -122,9 +122,9 @@ object Pipeline {
 
   /** Resolved relations whose object is a defined entity: a view, not a
     * stage. It is `resolved` less the relations with an unknown object
-    * (90.8 of 99.3 KB on the perfbench corpus), reached by one broadcast
-    * semi join, so committing it cost a write and a re-read of nearly
-    * `resolved` again; its query consumers plan the join instead, and
+    * (at sf0.1 1.41 M of 1.51 M rows, 9.6 of 10.5 MB), reached by one
+    * broadcast semi join, so committing it cost a write and a re-read of
+    * nearly `resolved` again; its query consumers plan the join instead, and
     * [[edges]] needs no such filter. Built over committed `resolved` and
     * `nodes`, it runs no Spark job once those have committed.
     *
@@ -197,9 +197,9 @@ object Pipeline {
     *
     * The overlap pays only where the host has idle CPU while the
     * critical path (mentions → resolved → edges, with minted_nodes beside
-    * edges) runs: it adds no work, it moves work off that path. On perfbench `build`
-    * (`local[4]` on 4 cores) the JVM keeps 0.76 of the cores busy at
-    * the sequential order, and `runAll` is faster. At sf0.1 with
+    * edges) runs: it adds no work, it moves work off that path. On
+    * perfbench `build` (`local[4]` on 4 cores) the JVM keeps 0.76 of the
+    * cores busy at the sequential order, and `runAll` is faster. At sf0.1 with
     * `local[32]` on 4 cores (0.91 busy) a free task slot is not a free
     * core: an overlapped stage takes CPU from the stage beside it, and
     * over 8 cold pairs `runAll` was no faster (BENCH_stage_dag_walls.json).
@@ -255,7 +255,7 @@ object Pipeline {
     * default 100). A cold `runAll` generates about 100 classes and the 92
     * driver queries about 1,200, so at the default a second run in one JVM
     * recompiles much of what the first compiled. */
-  private[graft] val codegenCacheEntries = 4096
+  private val codegenCacheEntries = 4096
 
   /** `SPARK_GRAFT_CPUS`, the local core count of every entry point. */
   def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)

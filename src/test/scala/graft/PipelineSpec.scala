@@ -105,7 +105,7 @@ class PipelineSpec extends SparkSpec {
     assert(scheduled === sequential)
   }
 
-  test("runAll commits exactly the six declared stages as zstd part files; the two views run no job") {
+  test("runAll commits only the 6 declared stages, as zstd part files; views run no job") {
     withStageRoot {
       Pipeline.runAll(spark, sf0001)
       val six = Set("mentions", "resolved", "nodes", "minted_nodes", "edges", "version_nodes")
@@ -135,7 +135,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("edges from resolved equal edges from the known-only triples; the views equal their committed forms") {
+  test("edges from resolved = edges from known-only triples; views = committed forms") {
     def sameTable(a: DataFrame, b: DataFrame, what: String): Unit = {
       assert(a.schema === b.schema, what)
       val (da, db) = (digest(a), digest(b))
