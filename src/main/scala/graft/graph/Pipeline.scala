@@ -85,9 +85,10 @@ object Pipeline {
 
   /** Append-only incremental build over a NEW batch of conversations.
     *
-    * Extraction and resolution are conversation-local (every window and
-    * join keys on conv_id), so the new batch is processed ALONE and
-    * unioned with the committed stage tables — the existing corpus is
+    * Extraction and resolution are conversation-local (the resolver's
+    * groups and every window and join key on conv_id), so the new batch
+    * is processed ALONE and unioned with the committed stage tables, whose
+    * schemas its own tables share — the existing corpus is
     * never re-derived. The only whole-corpus step is the vocabulary
     * semi-join (a relation in an old conversation may name an entity the
     * new batch just defined), which re-runs as ONE hash semi-join over

@@ -46,15 +46,19 @@ case class Mention(
 
 /** A relation mention with both endpoints resolved to canonical names
   * (the output of the precedence-chain resolver, reference
-  * package/call_graph.py:703-749). */
+  * package/call_graph.py:703-749): one row of the committed `resolved`
+  * table, from the batch and the streaming resolver alike. `hop` keeps
+  * the two relations of a chain segment apart, so
+  * (conv_id, turn_idx, mention_idx, hop) is its key. It carries no `ts`:
+  * no consumer of `resolved` reads one. */
 case class ResolvedRelation(
     conv_id: String,
     turn_idx: Int,
     mention_idx: Int,
+    hop: Int,
     subj: String,
     pred: String,
-    obj: String,
-    ts: Timestamp)
+    obj: String)
 
 /** Unified node row — the Neo4j materialization shape
   * (package/knowledge_graph.py:542,561-589: global_id = "{LABEL}:{id}"). */

@@ -3,34 +3,31 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.link.Resolve.{ConvState, Event, Resolver}
 import graft.schema.{Mention, ResolvedRelation}
 
 /** Streaming-native entity linking: the precedence-chain resolver as a
   * stateful streaming operator (`flatMapGroupsWithState` keyed by
   * conversation), for incremental ingestion of live transcripts.
   *
-  * The batch resolver (link/Resolve) expresses the conversation-scoped
-  * binding map as windows; a stream cannot window over unbounded history,
-  * so here the binding map IS the group state: per conv_id we hold the
-  * alias map + the conversation principal, update them as turns arrive,
-  * and emit resolved relations incrementally. Same precedence chain
-  * (self -> first def in scope, alias -> latest binding, else identity),
-  * same results as the batch path when events arrive in turn order —
-  * including self-before-any-def (asserted by StatefulResolveSpec).
+  * The batch resolver (link/Resolve) walks each conversation's sorted
+  * events once through a `Resolver`. A stream cannot hold a conversation's
+  * whole history, so here the resolver's state (the alias map and the
+  * first definition) IS the group state: each micro-batch restores a
+  * `Resolver` from it, feeds it the batch's mentions in turn order and
+  * stores what the resolver holds afterwards. Same resolution function,
+  * same output row as the batch path, so the results are the same when
+  * events arrive in turn order, self-before-any-def included (asserted by
+  * StatefulResolveSpec).
   *
   * Works on both streaming and batch Datasets (Spark executes
   * flatMapGroupsWithState with batch semantics on a static Dataset).
   */
 object StatefulResolve {
 
-  case class ConvState(aliases: Map[String, String], self: Option[String])
-
-  private val aliasPat = "^a[0-9]+$"
-
   private def step(convId: String, rows: Iterator[Mention],
       state: GroupState[ConvState]): Iterator[ResolvedRelation] = {
-    var st = state.getOption.getOrElse(ConvState(Map.empty, None))
-    val out = scala.collection.mutable.ListBuffer[ResolvedRelation]()
+    val r = state.getOption.fold(new Resolver)(new Resolver(_))
     // intra-batch arrival order is arbitrary -> restore turn order
     // (hop last: chain fan-out rows share (turn_idx, mention_idx)).
     // CONTRACT: this buffers ONE conversation's mentions OF ONE
@@ -39,23 +36,9 @@ object StatefulResolve {
     // path has no such per-group materialization). A source that can
     // deliver unbounded single-conversation batches must cap its batch
     // size (maxOffsetsPerTrigger or equivalent) before this operator.
-    rows.toSeq.sortBy(m => (m.turn_idx, m.mention_idx, m.hop)).foreach { m =>
-      m.kind match {
-        case "entity_def" =>
-          if (st.self.isEmpty) st = st.copy(self = Some(m.subj))
-        case "alias_binding" =>
-          st = st.copy(aliases = st.aliases + (m.subj -> m.obj))
-        case "relation" =>
-          def res(r: String): String =
-            if (r == "self") st.self.getOrElse(r)
-            else if (r.matches(aliasPat)) st.aliases.getOrElse(r, r)
-            else r
-          out += ResolvedRelation(m.conv_id, m.turn_idx, m.mention_idx,
-            res(m.subj), m.pred, res(m.obj), m.ts)
-        case _ => ()
-      }
-    }
-    state.update(st)
+    val out = rows.toSeq.sortBy(m => (m.turn_idx, m.mention_idx, m.hop)).flatMap(m =>
+      r(Event(m.conv_id, m.turn_idx, m.mention_idx, m.hop, m.kind, m.subj, m.pred, m.obj)))
+    state.update(r.state)
     out.iterator
   }
 

@@ -2,8 +2,12 @@ package graft.tools
 
 import java.io.{File, PrintWriter}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -15,6 +19,7 @@ import graft.graph.{Pipeline, StageStore}
   * {{{
   * query   <sfDir> <reps> <query...>             wall time of each rep per query
   * plans   <sfDir> <outDir> <suffix> [query...]  normalized plans, one file per query
+  * columns <sfDir>                               per-column bytes of each committed stage
   * scaling single <p> <nConvs> <turns>           one pipeline run at local[p]
   * scaling control <p> [rows]                    the host-ceiling reference job
   * scaling pair [nConvs] [turns]                 local[2] vs local[8] efficiency
@@ -77,8 +82,40 @@ object Probe {
     }
   }
 
+  /** One committed stage table as its part-file footers describe it:
+    * rows, data files, bytes on disk, and each column's compressed bytes
+    * (its column chunks' total size, in schema order). */
+  final case class TableColumns(stage: String, rows: Long, files: Int, bytes: Long,
+      columns: Seq[(String, Long)])
+
+  /** Every committed stage table under `sfDir`'s stage base, by name, from
+    * the footers of its data files: read on the driver, no Spark job.
+    * A directory without a commit marker is not a committed table. */
+  def columns(spark: SparkSession, sfDir: String): Seq[TableColumns] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = new Path(StageStore.baseFor(sfDir))
+    val fs = base.getFileSystem(conf)
+    val hidden = "[_.].*"
+    val tables = if (!fs.exists(base)) Nil else fs.listStatus(base).toSeq
+      .filter(st => st.isDirectory && !st.getPath.getName.matches(hidden) &&
+        StageStore.io.exists(spark, st.getPath.toString))
+    tables.sortBy(_.getPath.getName).map { dir =>
+      val files = fs.listStatus(dir.getPath).toSeq
+        .filter(st => st.isFile && !st.getPath.getName.matches(hidden))
+      val blocks = files.flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+      }
+      val chunks = blocks.flatMap(_.getColumns.asScala).map(c => c.getPath.toDotString -> c.getTotalSize)
+      val order = chunks.map(_._1).distinct
+      val bytes = chunks.groupMapReduce(_._1)(_._2)(_ + _)
+      TableColumns(dir.getPath.getName, blocks.map(_.getRowCount).sum, files.size,
+        files.map(_.getLen).sum, order.map(c => c -> bytes(c)))
+    }
+  }
+
   private val usage =
-    "usage: graft.tools.Probe query|plans|scaling|scaleup|viz <args...> (see Probe.scala)"
+    "usage: graft.tools.Probe query|plans|columns|scaling|scaleup|viz <args...> (see Probe.scala)"
 
   def main(args: Array[String]): Unit = {
     def on[A](cpus: Int)(f: SparkSession => A): A = {
@@ -94,6 +131,13 @@ object Probe {
       case "plans" :: sfDir :: outDir :: suffix :: names =>
         on(cpus)(plans(_, sfDir, outDir, suffix, names))
           .foreach(f => println(s"[plans] $f (${f.length} bytes)"))
+      case "columns" :: sfDir :: Nil =>
+        on(cpus)(columns(_, sfDir)).foreach { t =>
+          println(s"[columns] ${t.stage} rows=${t.rows} files=${t.files} bytes=${t.bytes}")
+          t.columns.foreach { case (c, b) =>
+            println(f"[columns]   $c%-24s $b%10d  ${100.0 * b / math.max(t.bytes, 1)}%5.1f %%")
+          }
+        }
       // run each parallelism level in its own JVM to keep JIT, GC and
       // block-manager state of one run out of the other
       case "scaling" :: "single" :: p :: nConvs :: turns :: Nil =>

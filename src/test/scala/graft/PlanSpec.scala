@@ -6,7 +6,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec,
+  FileSourceScanExec, SortExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
@@ -49,6 +50,14 @@ class PlanSpec extends SparkSpec {
       assert(keys === Seq(Seq("conv_id")), p.toString.take(3000))
       assert(PlanWalk.collect(p) { case s: FileSourceScanExec => s }.size === 1, p.toString.take(3000))
       assert(PlanWalk.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, p.toString.take(3000))
+      // one sorted walk per conversation: one sort, no window, and the
+      // grouping key is the conv_id column, not a key appended to each row
+      assert(PlanWalk.collect(p) { case s: SortExec => s }.size === 1, p.toString.take(3000))
+      assert(PlanWalk.collect(p) { case w: WindowExec => w }.isEmpty, p.toString.take(3000))
+      assert(PlanWalk.collect(p) {
+        case a: AppendColumnsExec => a
+        case a: AppendColumnsWithObjectExec => a
+      }.isEmpty, p.toString.take(3000))
     }
   }
 

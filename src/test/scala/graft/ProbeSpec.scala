@@ -3,9 +3,12 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import graft.graph.{Pipeline, StageStore}
+import graft.tools.Probe
+
 /** One session factory, one probe CLI, one declaration per stage name and
   * a declared set of options: a source scan keeps it so. */
-class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
+class ProbeSpec extends SparkSpec {
 
   private def sources(dir: File): Seq[File] =
     if (dir.isDirectory) dir.listFiles.toSeq.flatMap(sources)
@@ -55,5 +58,22 @@ class ProbeSpec extends org.scalatest.funsuite.AnyFunSuite {
       "read options through literal keys")
     assert(keys === options ++ jvmOwn,
       s"undeclared: ${keys -- options -- jvmOwn}; declared but not read: ${options ++ jvmOwn -- keys}")
+  }
+
+  test("Probe columns reads the committed stages' footers and runs no job") {
+    withStageRoot {
+      val sfDir = "/root/testdata/sf0.001"
+      Pipeline.runAll(spark, sfDir)
+      var tables: Seq[Probe.TableColumns] = Nil
+      assert(jobsOf { tables = Probe.columns(spark, sfDir) } === 0)
+      assert(tables.map(_.stage) === Pipeline.stages.map(_.name).sorted)
+      for (t <- tables) {
+        assert(t.rows === StageStore.committedRows(spark, sfDir, t.stage), t)
+        assert(t.files > 0 && t.columns.nonEmpty, t)
+        assert(t.columns.map(_._2).sum <= t.bytes, t)
+      }
+      assert(tables.find(_.stage == "resolved").get.columns.map(_._1) ===
+        Seq("conv_id", "turn_idx", "mention_idx", "hop", "subj", "pred", "obj"))
+    }
   }
 }
