@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Clustering, Curation, Dedup, Multimodal, Similarity, TextOps}
-import graft.graph.ParquetTableIO
+import graft.graph.{ParquetTableIO, Pipeline}
 
 /** Driver-contract queries for the training-data pipeline operators
   * (dedup / similarity / text analysis / multimodal) over the `documents`
@@ -15,36 +15,6 @@ object OpsEntry {
     ParquetTableIO.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
     ParquetTableIO.read(s, s"$dir/embeddings.parquet")
-
-  /** Committed 8-gram decontamination hit table (doc_id, n_hits) for the
-    * standard benchmark split (doc_id % 100 == 0): THREE queries consume
-    * this identical derivation (doc_decontam, doc_source_stats,
-    * doc_clean_corpus) and each used to re-shingle the full training
-    * corpus — two redundant corpus scans per pipeline run at 100 TB
-    * (VERDICT r05 #4; the dup_pairs/node_clusters StageStore move). */
-  private def decontamHits(s: SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "decontam_hits") {
-      val d = docs(s, dir)
-      Dedup.decontaminate(d, d.filter(col("doc_id") % 100 === 0))
-        .select(col("doc_id").cast("long").as("doc_id"), col("n_hits"))
-    }
-
-  /** Committed two-member ensemble co-assignment: member A is the
-    * committed node_clusters table (same seed window 0), member B the
-    * seed-8 Lloyd chain — consumed by BOTH emb_cluster_ensemble and
-    * emb_cluster_align, which each re-ran two full Lloyd chains before.
-    * Joined per vector exactly as Clustering.ensemble (both sides
-    * distinct per vec_id). */
-  private def ensembleStage(s: SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "ensemble") {
-      val k = 8
-      val a = graft.graph.Pipeline.nodeClusters(s, dir).withColumnRenamed("cluster", "cluster_a")
-      val b = Clustering.lloydStep(emb(s, dir), k, seedFrom = k)
-        .withColumnRenamed("cluster", "cluster_b")
-      a.join(b, Seq("vec_id"))
-        .select(col("vec_id"), col("cluster_a"), col("cluster_b"),
-          (col("cluster_a") * k + col("cluster_b")).as("consensus_key"))
-    }
 
   /** Brute-force cosine ground truth (emb_ann_topk + the recall
     * evaluation). Deliberately NOT a committed stage table: measured at
@@ -119,9 +89,9 @@ object OpsEntry {
 
     // reads the SAME committed Lloyd stage table the kg_cluster_*
     // consumers share (one assignment chain per corpus, identical rows)
-    "emb_clusters" -> ((s, dir) => graft.graph.Pipeline.nodeClusters(s, dir)),
+    "emb_clusters" -> ((s, dir) => Pipeline.nodeClusters(s, dir)),
 
-    "emb_cluster_ensemble" -> ((s, dir) => ensembleStage(s, dir)),
+    "emb_cluster_ensemble" -> ((s, dir) => Pipeline.ensemble(s, dir)),
 
     // k-selection sweep: Lloyd + integer SSE + simplified-silhouette
     // components per k; chosen = silhouette argmax (the reference rule).
@@ -153,7 +123,7 @@ object OpsEntry {
     // collapse re-ran BOTH Lloyd chains per invocation before)
     "emb_cluster_align" -> ((s, dir) => {
       import s.implicits._
-      Clustering.alignEnsemble(ensembleStage(s, dir))
+      Clustering.alignEnsemble(Pipeline.ensemble(s, dir))
         .toDF("cluster_b", "aligned_a", "n_overlap")
     }),
 
@@ -180,12 +150,12 @@ object OpsEntry {
     // The verified pair set is a committed stage table (one
     // minhash->candidates->verify derivation per corpus; warm calls pay
     // the pair-table read + CC rounds only)
-    "doc_dup_clusters" -> ((s, dir) => Dedup.dupClustersStaged(s, dir)),
+    "doc_dup_clusters" -> ((s, dir) => Pipeline.dupClusters(s, dir)),
 
     // train<->eval 8-gram decontamination; benchmark = doc_id % 100 == 0
     // (the committed hit table — shared with doc_source_stats and
     // doc_clean_corpus, one shingle derivation per corpus)
-    "doc_decontam" -> ((s, dir) => decontamHits(s, dir)),
+    "doc_decontam" -> ((s, dir) => Pipeline.decontamHits(s, dir)),
 
     // normalization-aware decontamination: case/comment/whitespace-
     // insensitive 8-gram matching (normalizeForHash composed in front
@@ -226,7 +196,7 @@ object OpsEntry {
     // (read through the committed dup_pairs stage table) are stratified
     // by predicted language and hash-threshold sampled.
     "doc_sample_dedup" -> ((s, dir) => {
-      val keep = Dedup.dupClustersStaged(s, dir)
+      val keep = Pipeline.dupClusters(s, dir)
         .filter(col("keep") === 1).select(col("doc_id"))
       val lang = TextOps.langId(docs(s, dir))
         .select(col("doc_id").cast("long").as("doc_id"), col("pred_lang"))
@@ -245,9 +215,9 @@ object OpsEntry {
       val ids = d.select(col("doc_id").cast("long").as("doc_id"))
       val exk = Dedup.exact(d)
         .select(col("keep_id").as("doc_id"), lit(1L).as("exact_keep"))
-      val near = Dedup.dupClustersStaged(s, dir)
+      val near = Pipeline.dupClusters(s, dir)
         .select(col("doc_id"), col("keep").as("neardup_keep"))
-      val dec = decontamHits(s, dir)
+      val dec = Pipeline.decontamHits(s, dir)
         .select(col("doc_id"), lit(1L).as("contaminated"))
       val rep = TextOps.repetition(d)
         .select(col("doc_id").cast("long").as("doc_id"),
@@ -288,11 +258,7 @@ object OpsEntry {
       val d = docs(s, dir)
       val corpus = d.filter(col("doc_id") % 10 =!= 7)
       val incoming = d.filter(col("doc_id") % 10 === 7)
-      val reps = corpus.select(col("doc_id"), md5(col("text")).as("_h"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      val index = Dedup.minhashBuckets(corpus.join(reps, Seq("doc_id")))
-      Dedup.checkAgainstIndex(incoming, index, corpus)
+      Dedup.checkAgainstIndex(incoming, Dedup.dupIndex(corpus), corpus)
         .select(col("new_id").cast("long").as("new_id"),
           col("corpus_id").cast("long").as("corpus_id"), col("jaccard_ppm"))
     }),
@@ -333,7 +299,7 @@ object OpsEntry {
         size(split(col("text"), " ")).cast("long").as("ws_tokens"))
       val qual = TextOps.qualityScore(d)
         .select(col("doc_id").cast("long").as("doc_id"), col("quality_ppm"))
-      val dec = decontamHits(s, dir)
+      val dec = Pipeline.decontamHits(s, dir)
         .select(col("doc_id"), lit(1L).as("cont"))
       base.join(qual, Seq("doc_id")).join(dec, Seq("doc_id"), "left")
         .groupBy(col("source"))

@@ -8,7 +8,7 @@ import graft.extract.Extract
 import graft.link.Resolve
 import graft.canonical.{Canonical, ConnectedComponents}
 import graft.version.Versions
-import graft.graph.ParquetTableIO
+import graft.graph.{ParquetTableIO, Pipeline}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -28,49 +28,36 @@ object SparkEntry {
 
   // ---- pipeline stages wired over the sfDir-derived transcripts ----
 
-  /** Every query reads the checkpointed stage tables (graph.Pipeline):
-    * the mentions/resolved stages are the shared upstream of all 13
-    * queries and each plan would otherwise re-derive them several times
-    * (entity vocabulary, bindings, relations, self map). Stage tables are
-    * computed exactly once per corpus — the same property that makes the
-    * pipeline resumable (north rule). */
-  private def mentionsOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.mentions(s, dir)
-
-  /** Committed transcripts stage table (computed once per corpus); the
-    * 7 transcript-consuming queries read it instead of re-deriving the
-    * orders⋈lineitem join + per-order window each (VERDICT r02 #3). */
-  private def transcriptsOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.transcripts(s, dir)
-
-  private def resolvedOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.resolved(s, dir)
+  // Every query reads the committed stage tables of graph.Pipeline: the
+  // mentions/resolved stages are the shared upstream of most queries, and
+  // each plan would otherwise re-derive them several times (entity
+  // vocabulary, bindings, relations, self map).
 
   private def long(c: String) = col(c).cast("long").as(c)
 
   private def qTranscripts(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
+    Pipeline.transcripts(s, dir).select(
       col("conv_id"), long("turn_idx"), col("role"), col("text"), col("tool"),
       date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
 
   private def qMentions(s: SparkSession, dir: String): DataFrame =
-    mentionsOf(s, dir).select(
+    Pipeline.mentions(s, dir).select(
       col("conv_id"), long("turn_idx"), long("mention_idx"),
       col("kind"), col("subj"), col("pred"), col("obj"), col("attr"),
       col("parent"), long("hop"))
 
   private def qBindings(s: SparkSession, dir: String): DataFrame =
-    Resolve.bindings(mentionsOf(s, dir)).select(
+    Resolve.bindings(Pipeline.mentions(s, dir)).select(
       col("conv_id"), long("turn_idx"), long("mention_idx"),
       col("ref"), col("target"))
 
   private def qResolved(s: SparkSession, dir: String): DataFrame =
-    resolvedOf(s, dir).select(
+    Pipeline.resolved(s, dir).select(
       col("conv_id"), long("turn_idx"), long("mention_idx"),
       col("subj"), col("pred"), col("obj"))
 
   private def qTriples(s: SparkSession, dir: String): DataFrame = {
-    graft.graph.Pipeline.triples(s, dir).select(
+    Pipeline.triples(s, dir).select(
       col("conv_id"), long("turn_idx"), long("mention_idx"),
       col("subj"), col("pred"), col("obj"))
   }
@@ -86,7 +73,7 @@ object SparkEntry {
     * per-conversation fan-in, which is turns-per-conv — skew-free at any
     * corpus size). */
   private def qConvStats(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.triples(s, dir)
+    Pipeline.triples(s, dir)
       .groupBy(col("conv_id"))
       .agg(count(lit(1)).as("n_triples"),
         size(collect_set(col("pred"))).cast("long").as("n_preds"),
@@ -95,20 +82,20 @@ object SparkEntry {
         max(col("turn_idx")).cast("long").as("max_turn"))
 
   private def qNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.nodes(s, dir)
+    Pipeline.nodes(s, dir)
 
   private def qNodesMinted(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.mintedNodes(s, dir)
+    Pipeline.mintedNodes(s, dir)
 
   private def qEdges(s: SparkSession, dir: String): DataFrame = {
-    graft.graph.Pipeline.edges(s, dir).select(
+    Pipeline.edges(s, dir).select(
       col("edge_type"), col("src_type"), col("src_id"),
       col("dst_type"), col("dst_id"),
       col("conv_id"), long("turn_idx"), long("mention_idx"))
   }
 
   private def qAliasGroups(s: SparkSession, dir: String): DataFrame =
-    Canonical.aliasGroups(mentionsOf(s, dir))
+    Canonical.aliasGroups(Pipeline.mentions(s, dir))
 
   /** Node property richness (reference nodes carry code/docstring/location
     * properties, call_graph.py:492-540): nodes with a struct-typed props
@@ -118,12 +105,12 @@ object SparkEntry {
     * scalar (the driver's comparator sorts raw cells, which a struct/array
     * cell can never satisfy — CORRECTNESS_r02 err rows). */
   private def qNodesRich(s: SparkSession, dir: String): DataFrame = {
-    val stats = mentionsOf(s, dir).filter(col("kind") === "entity_def")
+    val stats = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
       .groupBy(col("subj").as("canonical_name"))
       .agg(count(lit(1)).cast("long").as("n_defs"),
         min(col("conv_id")).as("first_conv"),
         max(col("attr")).as("max_attr"))
-    graft.graph.Pipeline.nodes(s, dir)
+    Pipeline.nodes(s, dir)
       .join(stats, Seq("canonical_name"), "left")
       .select(col("node_id"), col("canonical_name"), col("node_type"),
         struct(
@@ -139,7 +126,7 @@ object SparkEntry {
   /** Turn classifier (S2: the config-file classifier analog) — a pure
     * when-chain over tool/text content, no UDF. */
   private def qTurnRoles(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
+    Pipeline.transcripts(s, dir).select(
       col("conv_id"), long("turn_idx"),
       when(col("tool") =!= "", "tool_call")
         .when(col("text").startsWith("define entity"), "definition")
@@ -153,28 +140,28 @@ object SparkEntry {
     * set on a single window task (VERDICT r05 #7). */
   private def qNameWords(s: SparkSession, dir: String): DataFrame =
     graft.canonical.TopK.perGroup(
-      graft.graph.Pipeline.nodes(s, dir)
+      Pipeline.nodes(s, dir)
         .select(col("node_type"),
           explode(graft.ops.TextOps.identifierWords(col("canonical_name"))).as("word"))
         .groupBy("node_type", "word").agg(count(lit(1)).as("n")),
       Seq("node_type"), Seq(col("n").desc, col("word")), 5, "rk")
 
   private def qHierarchyNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.hierNodes(s, dir)
+    Pipeline.hierNodes(s, dir)
 
   private def qHierarchyEdges(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Hierarchy.edges(transcriptsOf(s, dir),
-      graft.graph.Pipeline.hierNodes(s, dir))
+    graft.graph.Hierarchy.edges(Pipeline.transcripts(s, dir),
+      Pipeline.hierNodes(s, dir))
 
   private def qSegmentNodes(s: SparkSession, dir: String): DataFrame =
-    Extract.segmentNodes(transcriptsOf(s, dir)).select(
+    Extract.segmentNodes(Pipeline.transcripts(s, dir)).select(
       col("conv_id"), long("turn_idx"), long("seg_idx"), col("kind"))
 
   private def qSegmentEdges(s: SparkSession, dir: String): DataFrame =
     // single derivation: segmentEdges now fetches the destination label
     // via lead(kind) on the same window, so there is no second consumer
     // of the posexplode (and nothing to checkpoint)
-    Extract.segmentEdges(Extract.segmentNodes(transcriptsOf(s, dir)))
+    Extract.segmentEdges(Extract.segmentNodes(Pipeline.transcripts(s, dir)))
       .select(col("conv_id"), long("turn_idx"), long("src_seg"),
         long("dst_seg"), col("src_kind"), col("dst_kind"))
 
@@ -190,16 +177,16 @@ object SparkEntry {
     * shuffles, and AQE splits the partition of a hot entity (one defined
     * in many segments). */
   private def qSegmentEntityEdges(s: SparkSession, dir: String): DataFrame = {
-    val segs = Extract.segmentNodes(transcriptsOf(s, dir))
+    val segs = Extract.segmentNodes(Pipeline.transcripts(s, dir))
       .filter(col("kind") === "entity_def")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("seg_idx").cast("long").as("seg_idx"))
-    val defs = mentionsOf(s, dir).filter(col("kind") === "entity_def")
+    val defs = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("mention_idx").cast("long").as("seg_idx"),
         col("subj").as("canonical_name"))
     val linked = segs.join(defs, Seq("conv_id", "turn_idx", "seg_idx"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val n = Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
     val withId = linked.join(n, Seq("canonical_name"))
     // one pass: a self-union would re-execute the whole join pipeline
@@ -212,21 +199,21 @@ object SparkEntry {
   }
 
   private def qTurnEdges(s: SparkSession, dir: String): DataFrame =
-    Extract.turnOrderEdges(transcriptsOf(s, dir)).select(
+    Extract.turnOrderEdges(Pipeline.transcripts(s, dir)).select(
       col("conv_id"), long("turn_idx"), long("next_turn_idx"))
 
   private def qVersionNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.versionNodes(s, dir).select(
+    Pipeline.versionNodes(s, dir).select(
       col("entity"), col("version_seq"), col("ts_s"), col("body_hash"),
       col("state"), col("conv_id"), long("turn_idx"))
 
   private def qVersionEdges(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.versionEdges(s, dir).select(
+    Pipeline.versionEdges(s, dir).select(
       col("entity"), col("src_seq"), col("dst_seq"),
       col("conv_id"), long("turn_idx"), col("body_hash"))
 
   private def qVersionLatest(s: SparkSession, dir: String): DataFrame =
-    Versions.latestVersions(graft.graph.Pipeline.versionNodes(s, dir))
+    Versions.latestVersions(Pipeline.versionNodes(s, dir))
 
   /** Cross-conversation entity resolution: customers co-referenced through
     * shared unknown items (the minted entities) form one canonical group —
@@ -235,7 +222,7 @@ object SparkEntry {
     * graph sparse enough that component structure is non-trivial. */
   private def qComponents(s: SparkSession, dir: String): DataFrame = {
     val itemPk = regexp_extract(col("obj"), "^item:unknown_([0-9]+)$", 1)
-    val corefs = resolvedOf(s, dir)
+    val corefs = Pipeline.resolved(s, dir)
       .filter(col("pred") === "mentions" &&
         itemPk =!= "" && itemPk.cast("long") % 20 === 0)
       .select(col("subj"), col("obj"))
@@ -259,8 +246,8 @@ object SparkEntry {
     * the first analytic a KG consumer runs; also exercises the unified
     * edges table as a source). */
   private def qDegrees(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.graph.Pipeline.edges(s, dir)
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val e = Pipeline.edges(s, dir)
+    val n = Pipeline.nodes(s, dir)
     val outD = e.groupBy(col("src_id").as("node_id"))
       .agg(count(lit(1)).as("out_deg"))
     val inD = e.groupBy(col("dst_id").as("node_id"))
@@ -278,8 +265,8 @@ object SparkEntry {
     * iterations, multi-edges count, deterministic at any partitioning
     * (graph/Analytics.pageRank — long sums + floor division only). */
   private def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    val pr = graft.graph.Analytics.pageRank(graft.graph.Pipeline.edges(s, dir))
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val pr = graft.graph.Analytics.pageRank(Pipeline.edges(s, dir))
+    val n = Pipeline.nodes(s, dir)
       .select(col("node_id"), col("canonical_name"))
     // both sides node-cardinality and distinct per key: plain equi join
     pr.join(n, Seq("node_id"))
@@ -294,7 +281,7 @@ object SparkEntry {
     import s.implicits._
     val questions = Seq((0L, "what"), (1L, "how"), (2L, "when"), (3L, "where"))
       .toDF("q_id", "q_kind")
-    val types = graft.graph.Pipeline.nodes(s, dir).select("node_type").distinct()
+    val types = Pipeline.nodes(s, dir).select("node_type").distinct()
     questions.crossJoin(types)
   }
 
@@ -336,7 +323,7 @@ object SparkEntry {
     * `array_join` form (driver comparator sorts raw cells —
     * CORRECTNESS_r02 err row). */
   private def qEntityConvs(s: SparkSession, dir: String): DataFrame = {
-    val defs = mentionsOf(s, dir)
+    val defs = Pipeline.mentions(s, dir)
       .filter(col("kind") === "entity_def")
       .select(col("subj").as("canonical_name"), col("conv_id"))
     defs.groupBy(col("canonical_name"))
@@ -351,12 +338,12 @@ object SparkEntry {
     * knowledge_graph.py:1122-1197): distinct (child, parent) pairs from
     * `extends` clauses, remapped to dense node IDs with two joins. */
   private def qContainment(s: SparkSession, dir: String): DataFrame = {
-    val pairs = mentionsOf(s, dir)
+    val pairs = Pipeline.mentions(s, dir)
       .filter(col("kind") === "entity_def" && col("parent") =!= "")
       .select(col("subj").as("child"), col("parent"))
       .distinct()
     val both = graft.canonical.Joins.remapBoth(pairs,
-      graft.graph.Pipeline.nodes(s, dir), "canonical_name", "node_id",
+      Pipeline.nodes(s, dir), "canonical_name", "node_id",
       "child", "parent", "child_id", "parent_id")
     // one pass for both directions (a self-union re-executes the remap
     // joins per direction — same fix as qSegmentEntityEdges)
@@ -382,7 +369,7 @@ object SparkEntry {
     * issue→PR); keep it single-sourced so the ref grammar can never
     * desynchronize between them. */
   private def issueRefsOf(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
+    Pipeline.transcripts(s, dir).select(
       col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
       explode(regexp_extract_all(col("text"), lit("ref #([0-9]+)"), lit(1))).as("r"))
       .select(col("conv_id"), col("turn_idx"), col("r").cast("long").as("issue_id"))
@@ -445,12 +432,12 @@ object SparkEntry {
   private def qIssueEdges(s: SparkSession, dir: String): DataFrame = {
     val valid = issueRefsOf(s, dir)
       .join(issuesOf(s, dir), Seq("issue_id"))
-    val ordered = graft.graph.Pipeline.triples(s, dir)
+    val ordered = Pipeline.triples(s, dir)
       .filter(col("pred") === "ordered")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("obj").as("canonical_name"))
     val linked = valid.join(ordered, Seq("conv_id", "turn_idx"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val n = Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
     linked.join(n, Seq("canonical_name"))
       .select(col("issue_id"), col("state"), col("node_id"), col("canonical_name"))
@@ -464,13 +451,13 @@ object SparkEntry {
     * graph (the two ID spaces were disconnected before, VERDICT r02
     * missing #1). */
   private def qConvEntityEdges(s: SparkSession, dir: String): DataFrame = {
-    val defs = mentionsOf(s, dir).filter(col("kind") === "entity_def")
+    val defs = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
       .select(col("conv_id"), col("subj").as("canonical_name")).distinct()
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val n = Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
     val withNode = defs.join(n, Seq("canonical_name"))
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
-    val hier = graft.graph.Pipeline.hierNodes(s, dir)
+    val hier = Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
     withNode.join(hier, Seq("name"))
       .select(lit("contains_entity").as("edge_type"),
@@ -481,11 +468,11 @@ object SparkEntry {
     * queries (the reference keys embeddings by function id,
     * semantic_clustering.py:37-66): vec_id == node_id. */
   private def nodeClusters(s: SparkSession, dir: String): DataFrame = {
-    val clusters = graft.graph.Pipeline.nodeClusters(s, dir)
+    val clusters = Pipeline.nodeClusters(s, dir)
       .withColumnRenamed("vec_id", "node_id")
     // both sides corpus-scaling, both distinct per node_id -> plain equi
     // join; AQE picks broadcast only while the cluster side actually fits
-    graft.graph.Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
+    Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
   }
 
   /** Cluster nodes (reference cluster_nodes, knowledge_graph.py:1201-1209):
@@ -522,7 +509,7 @@ object SparkEntry {
       concat(lit("supplier:"), col("s_name")).as("canonical_name"),
       when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
         .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val n = Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id"))
     // prs is distinct per canonical_name (one PR per supplier)
     prs.join(n, Seq("canonical_name"))
@@ -586,7 +573,7 @@ object SparkEntry {
   private def qNodesVec(s: SparkSession, dir: String): DataFrame = {
     val e = ParquetTableIO.read(s, s"$dir/embeddings.parquet").select(
       col("vec_id").cast("long").as("node_id"), col("embedding"))
-    graft.graph.Pipeline.nodes(s, dir)
+    Pipeline.nodes(s, dir)
       .join(e, Seq("node_id"), "left")
       .select(col("node_id"), col("canonical_name"),
         coalesce(size(col("embedding")), lit(0)).cast("long").as("emb_dim"),
@@ -604,7 +591,7 @@ object SparkEntry {
     * of a hot supplier. */
   private def qIssuePrEdges(s: SparkSession, dir: String): DataFrame = {
     val valid = issueRefsOf(s, dir).join(issuesOf(s, dir).select("issue_id"), Seq("issue_id"))
-    val supplied = graft.graph.Pipeline.triples(s, dir)
+    val supplied = Pipeline.triples(s, dir)
       .filter(col("pred") === "supplies")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("subj").as("canonical_name"))
@@ -638,7 +625,7 @@ object SparkEntry {
       col("s_suppkey").cast("long").as("pr_number"),
       col("s_nationkey").cast("long").as("dev_id"),
       concat(lit("supplier:"), col("s_name")).as("canonical_name"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
+    val n = Pipeline.nodes(s, dir)
       .select(col("canonical_name"), col("node_id").as("func_id"))
     prs.join(n, Seq("canonical_name"))
       .select(col("dev_id"), col("func_id"), col("pr_number"))
@@ -674,11 +661,11 @@ object SparkEntry {
     * hierarchy leaf exactly like file_config_edges links configs into the
     * folder tree. */
   private def qConfigNodes(s: SparkSession, dir: String): DataFrame = {
-    val t = transcriptsOf(s, dir).filter(col("tool") =!= "")
+    val t = Pipeline.transcripts(s, dir).filter(col("tool") =!= "")
       .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
         col("tool"), encode(col("text"), "UTF-8").as("config"))
       .withColumn("name", concat(lit("conv:"), col("conv_id")))
-    val hier = graft.graph.Pipeline.hierNodes(s, dir)
+    val hier = Pipeline.hierNodes(s, dir)
       .filter(!col("is_folder")).select(col("name"), col("hier_id"))
     t.join(hier, Seq("name"))
       .select(col("conv_id"), col("turn_idx"), col("tool"), col("hier_id"),
@@ -686,23 +673,13 @@ object SparkEntry {
         md5(col("config")).as("config_hash"))
   }
 
-  /** Per-type contiguous local index shared by the PyG export pair —
-    * committed as a stage table so the eager two-phase assignment
-    * (checkpoint + count-collect + window) runs once, not once per
-    * consuming query. */
-  private def pygLocal(s: SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "pyg_local") {
-      graft.canonical.Canonical.denseIdsBucketedBy(
-        graft.graph.Pipeline.nodes(s, dir), "node_type")
-    }
-
   /** PyG-style HeteroData node export (reference S11,
     * hierarchical_graph.py:398-427): per-type CONTIGUOUS local indices —
     * the tensor row index — assigned by the per-group bucketed assigner
     * (no global or per-type single-task window), plus the global id for
     * joining back. */
   private def qPygNodes(s: SparkSession, dir: String): DataFrame =
-    pygLocal(s, dir).select(col("node_type"), col("local_idx"),
+    Pipeline.pygLocal(s, dir).select(col("node_type"), col("local_idx"),
       col("node_id"), col("canonical_name"))
 
   /** PyG-style typed edge index (reference HeteroData edge_index per
@@ -710,8 +687,8 @@ object SparkEntry {
     * per-type local indices, deduped with a
     * multiplicity count (edge_index columns + edge weight). */
   private def qPygEdges(s: SparkSession, dir: String): DataFrame = {
-    val loc = pygLocal(s, dir)
-    val t = graft.graph.Pipeline.triples(s, dir)
+    val loc = Pipeline.pygLocal(s, dir)
+    val t = Pipeline.triples(s, dir)
     val src = loc.select(col("canonical_name").as("subj"),
       col("node_type").as("src_type"), col("local_idx").as("src_local"))
     val dst = loc.select(col("canonical_name").as("obj"),

@@ -15,15 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Canonical {
 
-  /** Dense 0..n-1 IDs ordered by the key column via one global window.
-    * Test/debug helper ONLY — a no-partition window funnels the whole
-    * vocabulary through a single task; the pipeline uses
-    * [[denseIdsBucketed]]. */
-  def denseIds(names: DataFrame, keyCol: String = "canonical_name",
-      idCol: String = "node_id"): DataFrame =
-    names.withColumn(idCol,
-      (row_number().over(Window.orderBy(col(keyCol))) - 1).cast("long"))
-
   /** Scalable dense-ID assignment: two-phase with no global sort.
     * Phase 1: deterministic bucket = first `hexChars` hex chars of
     * md5(key) (16^hexChars buckets); per-bucket counts -> prefix offsets

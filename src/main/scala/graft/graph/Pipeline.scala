@@ -1,14 +1,14 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{count, lit, sum}
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 import graft.sources.Transcripts
 import graft.extract.Extract
 import graft.link.Resolve
 import graft.triples.Triples
 import graft.canonical.Canonical
-import graft.ops.Clustering
+import graft.ops.{Clustering, Dedup}
 import graft.version.Versions
 
 /** The staged KG-construction dataflow. Every stage reads the *committed
@@ -18,70 +18,145 @@ import graft.version.Versions
   *   - a killed run resumes at the first uncommitted stage;
   *   - per-stage lineage/metrics land next to the tables (StageStore).
   *
-  * The stage DAG is declared once, in [[stages]]; `runAll` schedules it.
-  * A table is committed only when its commit pays for itself (the S/C
-  * rule: derivation cost × (consumers − 1) above commit cost). [[triples]]
-  * and [[versionEdges]] fail it: each is a filter of committed tables
-  * that its consumers plan in milliseconds, so they are views, not
-  * stages.
+  * Every committed table is declared once, here, as a [[Stage]]: its name,
+  * its inputs and its build, which reads only those inputs. [[stages]] are
+  * the ones `runAll` schedules; [[hosted]] ones are committed by their
+  * first consuming query. A table is committed only when its commit pays
+  * for itself (the S/C rule: derivation cost × (consumers − 1) above
+  * commit cost). [[triples]] and [[versionEdges]] fail it: each is a
+  * filter of committed tables that its consumers plan in milliseconds, so
+  * they are views, not stages.
   */
 object Pipeline {
 
-  /** Committed stage table for the 7 transcript-consuming QUERIES (turn
-    * roles, hierarchy x2, segments x2, turn edges, transcript dump),
-    * which would otherwise each re-run the orders⋈lineitem join +
-    * per-order window — measured ~31s of the 84s query total at sf0.1
-    * (VERDICT r02 #3). Consumers filtering turn_idx (Hierarchy) get
-    * parquet pushdown off the committed table instead of a full
-    * re-derivation.
-    *
-    * NOT in the mentions critical path and NOT part of runAll: the
-    * extraction keeps the fused derivation+extraction plan (text never
-    * materialized). Measured at sf0.1 (r02): the text write+read
-    * roundtrip cost ~30 s (transcripts 11-23 s + parquet-read mentions
-    * 10-19 s); the fused `mentions` stage takes 21.8-22.7 s cold with
-    * `local[4]` (BENCH_extract_kernel_sf01.json), so committing here
-    * would lengthen the critical path for zero query benefit. In a real
-    * deployment transcripts ARE the input table; this stage exists only
-    * because the sandbox derives them. */
-  def transcripts(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "transcripts") {
-      Transcripts.fromTpch(spark, sfDir)
-    }
+  /** One committed table: its name, the stages its build reads, and the
+    * build, which receives exactly those stages through [[Inputs]]. */
+  private[graft] final case class Stage(name: String, inputs: Seq[String],
+      build: Inputs => DataFrame)
 
-  def mentions(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "mentions") {
-      Extract.mentions(Transcripts.fromTpch(spark, sfDir))
+  /** What a build may read: the session and corpus dir, its declared
+    * stages (`in("nodes")`, committed first if they are not), their
+    * committed row counts (`in.rows("nodes")`) and raw corpus tables
+    * (`in.file("embeddings")`). Reading a stage the entry does not declare
+    * throws IllegalArgumentException before the build writes anything. */
+  private[graft] final class Inputs(val spark: SparkSession, val sfDir: String, of: Stage) {
+    private def declared(name: String): Stage = {
+      require(of.inputs.contains(name), s"stage ${of.name} reads undeclared input $name")
+      registry(name)
     }
+    def apply(name: String): DataFrame = run(spark, sfDir, declared(name))
+    def rows(name: String): Long = { apply(name); StageStore.committedRows(spark, sfDir, name) }
+    def file(table: String): DataFrame = ParquetTableIO.read(spark, s"$sfDir/$table.parquet")
+  }
 
-  /** Hierarchy node table (corpus/month/conv leaves with dense bucketed
-    * IDs): four query consumers (hierarchy nodes + edges, the
-    * conv→entity bridge, config rows) would otherwise each re-run the
-    * turn-0 projection and both bucketed-ID passes. A tiny table (one
-    * row per conversation + folders), so the stage write is cheap and
-    * every consumer after the first reads parquet. */
-  def hierNodes(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "hier_nodes") {
-      Hierarchy.nodes(transcripts(spark, sfDir))
-    }
+  /** The stage DAG `runAll` schedules, in dependency order (reference
+    * lifecycle, SURVEY.md §3.1). */
+  private[graft] val stages: Seq[Stage] = Seq(
+    Stage("mentions", Nil, in => Extract.mentions(Transcripts.fromTpch(in.spark, in.sfDir))),
+    Stage("resolved", Seq("mentions"), in => Resolve.resolved(in("mentions"))),
+    // the entity vocabulary (a distinct over the entity_def mention stream,
+    // one corpus-sized shuffle) runs once, here; consumers read `nodes`
+    Stage("nodes", Seq("mentions"), in => Canonical.nodes(Triples.entityNames(in("mentions")))),
+    Stage("minted_nodes", Seq("resolved", "nodes"), in => {
+      val known = in("nodes")
+      Canonical.mintedNodes(in.rows("nodes"),
+        Triples.mintedNames(in("resolved"), known.select("canonical_name")))
+    }),
+    // built from `resolved`, not `triples`: `Canonical.edges` inner-joins
+    // each object against `nodes`, which drops an unknown object just as
+    // the triples' semi join does
+    Stage("edges", Seq("resolved", "nodes"), in => Canonical.edges(in("resolved"), in("nodes"))),
+    Stage("version_nodes", Seq("mentions"), in => Versions.versionNodes(in("mentions"))))
 
-  /** Single-Lloyd clustering of the corpus embeddings (vec_id, cluster):
-    * the Lloyd chain runs once per corpus, and its consumers (the
-    * kg_cluster_* queries, emb_clusters and the ensemble stage) re-read the
-    * two-long table instead of re-running assignment + means +
-    * reassignment each (VERDICT r03 #6). */
-  def nodeClusters(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "node_clusters") {
-      Clustering.lloydStep(ParquetTableIO.read(spark, s"$sfDir/embeddings.parquet"))
-    }
+  /** The stages a query commits on first use, in dependency order. */
+  private[graft] val hosted: Seq[Stage] = Seq(
+    // the 7 transcript-consuming queries would otherwise each re-run the
+    // orders⋈lineitem join + per-order window (~31 s of the 84 s query
+    // total at sf0.1, VERDICT r02 #3). Not an input of `mentions`, which
+    // keeps the fused derivation+extraction plan: at sf0.1 (r02) the text
+    // write+read roundtrip cost ~30 s against 21.8-22.7 s for the whole
+    // fused stage (BENCH_extract_kernel_sf01.json). In a real deployment
+    // transcripts ARE the input table.
+    Stage("transcripts", Nil, in => Transcripts.fromTpch(in.spark, in.sfDir)),
+    // corpus/month/conv leaves with dense bucketed IDs, shared by four
+    // queries (hierarchy nodes + edges, the conv→entity bridge, config rows)
+    Stage("hier_nodes", Seq("transcripts"), in => Hierarchy.nodes(in("transcripts"))),
+    // single-Lloyd clustering (vec_id, cluster), read by the kg_cluster_*
+    // queries, emb_clusters and `ensemble` (VERDICT r03 #6)
+    Stage("node_clusters", Nil, in => Clustering.lloydStep(in.file("embeddings"))),
+    // per-type contiguous local index shared by the PyG export pair
+    Stage("pyg_local", Seq("nodes"), in => Canonical.denseIdsBucketedBy(in("nodes"), "node_type")),
+    // 8-gram decontamination hits (doc_id, n_hits) of the benchmark split
+    // (doc_id % 100 == 0), read by doc_decontam, doc_source_stats and
+    // doc_clean_corpus (VERDICT r05 #4)
+    Stage("decontam_hits", Nil, in => {
+      val d = in.file("documents")
+      Dedup.decontaminate(d, d.filter(col("doc_id") % 100 === 0))
+        .select(col("doc_id").cast("long").as("doc_id"), col("n_hits"))
+    }),
+    // two-member co-assignment read by emb_cluster_ensemble and
+    // emb_cluster_align: member A is `node_clusters`
+    Stage("ensemble", Seq("node_clusters"), in =>
+      Clustering.ensemble(in("node_clusters"), in.file("embeddings"))),
+    // the verified near-dup pairs (a, b, jaccard) of the exact-dup
+    // representatives: minhash -> candidates -> verify once per corpus
+    // (VERDICT r04 #5)
+    Stage("dup_pairs", Nil, in => Dedup.dupPairs(in.file("documents"))),
+    Stage("dup_clusters", Seq("dup_pairs"), in =>
+      Dedup.dupClustersFrom(in.file("documents"), in("dup_pairs"))),
+    // index once, probe incrementally (Dedup.checkAgainstIndex)
+    Stage("dup_index", Nil, in => Dedup.dupIndex(in.file("documents"))))
 
-  def resolved(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "resolved") {
-      Resolve.resolved(mentions(spark, sfDir))
-    }
+  /** Every committed table, pipeline and hosted. */
+  private[graft] def registered: Seq[Stage] = stages ++ hosted
 
-  def entityNames(spark: SparkSession, sfDir: String): DataFrame =
-    Triples.entityNames(mentions(spark, sfDir))
+  private lazy val registry: Map[String, Stage] = {
+    val byName = registered.groupBy(_.name)
+    require(byName.forall(_._2.size == 1), s"stage names declared twice: ${registered.map(_.name)}")
+    byName.map { case (n, s) => n -> s.head }
+  }
+
+  /** Commit `s` unless committed and return a reader of its table. Its
+    * inputs resolve inside the build, so reading a committed stage touches
+    * none of them. */
+  private def run(spark: SparkSession, sfDir: String, s: Stage): DataFrame =
+    StageStore.getOrCreate(spark, sfDir, s.name)(s.build(new Inputs(spark, sfDir, s)))
+
+  /** The committed table of the registered stage `name`. */
+  private[graft] def stage(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    run(spark, sfDir, registry(name))
+
+  def mentions(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "mentions")
+  def resolved(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "resolved")
+  def nodes(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "nodes")
+  def mintedNodes(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "minted_nodes")
+  def edges(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "edges")
+  def versionNodes(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "version_nodes")
+  def transcripts(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "transcripts")
+  def hierNodes(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "hier_nodes")
+  def nodeClusters(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "node_clusters")
+  def pygLocal(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "pyg_local")
+  def decontamHits(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "decontam_hits")
+  def ensemble(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "ensemble")
+  def dupClusters(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "dup_clusters")
+  def dupIndex(spark: SparkSession, sfDir: String): DataFrame = stage(spark, sfDir, "dup_index")
+
+  /** Resolved relations whose object is a defined entity: a view, not a
+    * stage. It is `resolved` less the relations with an unknown object
+    * (at sf0.1 1.41 M of 1.51 M rows, 9.6 of 10.5 MB), reached by one
+    * broadcast semi join, so committing it cost a write and a re-read of
+    * nearly `resolved` again; its query consumers plan the join instead, and
+    * [[edges]] needs no such filter. Built over committed `resolved` and
+    * `nodes` (one row per name by construction), it runs no Spark job once
+    * those have committed. */
+  def triples(spark: SparkSession, sfDir: String): DataFrame =
+    Triples.knownOnly(resolved(spark, sfDir), nodes(spark, sfDir).select("canonical_name"))
+
+  /** A view, not a stage: a filter and projection of the committed
+    * `version_nodes` with one query consumer, so a commit would only add a
+    * write job. Runs no Spark job once `version_nodes` has committed. */
+  def versionEdges(spark: SparkSession, sfDir: String): DataFrame =
+    Versions.versionEdges(versionNodes(spark, sfDir))
 
   /** Append-only incremental build over a NEW batch of conversations.
     *
@@ -116,70 +191,6 @@ object Pipeline {
     (m, r, Triples.knownOnly(r, Triples.entityMentions(m)))
   }
 
-  def nodes(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "nodes") {
-      Canonical.nodes(entityNames(spark, sfDir))
-    }
-
-  /** Resolved relations whose object is a defined entity: a view, not a
-    * stage. It is `resolved` less the relations with an unknown object
-    * (at sf0.1 1.41 M of 1.51 M rows, 9.6 of 10.5 MB), reached by one
-    * broadcast semi join, so committing it cost a write and a re-read of
-    * nearly `resolved` again; its query consumers plan the join instead, and
-    * [[edges]] needs no such filter. Built over committed `resolved` and
-    * `nodes`, it runs no Spark job once those have committed.
-    *
-    * The entity vocabulary is read from the COMMITTED nodes table (one
-    * row per name by construction), not re-derived: entityNames is a
-    * distinct over the full entity_def mention stream — one corpus-sized
-    * shuffle — that runs once, inside the nodes stage. */
-  def triples(spark: SparkSession, sfDir: String): DataFrame =
-    Triples.knownOnly(resolved(spark, sfDir), nodes(spark, sfDir).select("canonical_name"))
-
-  def mintedNodes(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "minted_nodes") {
-      val known = nodes(spark, sfDir)
-      Canonical.mintedNodes(StageStore.committedRows(spark, sfDir, "nodes"),
-        Triples.mintedNames(resolved(spark, sfDir), known.select("canonical_name")))
-    }
-
-  /** Built from `resolved`, not [[triples]]: `Canonical.edges` inner-joins
-    * each object against `nodes`, which drops an unknown object just as
-    * the triples' semi join does. */
-  def edges(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "edges") {
-      Canonical.edges(resolved(spark, sfDir), nodes(spark, sfDir))
-    }
-
-  def versionNodes(spark: SparkSession, sfDir: String): DataFrame =
-    StageStore.getOrCreate(spark, sfDir, "version_nodes") {
-      Versions.versionNodes(mentions(spark, sfDir))
-    }
-
-  /** A view, not a stage: a filter and projection of the committed
-    * `version_nodes` with one query consumer, so a commit would only add a
-    * write job. Runs no Spark job once `version_nodes` has committed. */
-  def versionEdges(spark: SparkSession, sfDir: String): DataFrame =
-    Versions.versionEdges(versionNodes(spark, sfDir))
-
-  /** One pipeline stage: the name of its committed table, the stages its
-    * accessor reads, and the accessor, which commits the stage on its
-    * first call and returns a reader of the committed table. */
-  private[graft] final case class Stage(name: String, inputs: Seq[String],
-      accessor: (SparkSession, String) => DataFrame)
-
-  /** The stage DAG, in dependency order (reference lifecycle, SURVEY.md
-    * §3.1). `inputs` is exact: an accessor commits no stage beyond its
-    * own, given its inputs (PipelineSpec builds each stage from a store
-    * holding only those). */
-  private[graft] val stages: Seq[Stage] = Seq(
-    Stage("mentions", Nil, mentions),
-    Stage("resolved", Seq("mentions"), resolved),
-    Stage("nodes", Seq("mentions"), nodes),
-    Stage("minted_nodes", Seq("resolved", "nodes"), mintedNodes),
-    Stage("edges", Seq("resolved", "nodes"), edges),
-    Stage("version_nodes", Seq("mentions"), versionNodes))
-
   /** Run every stage to completion (idempotent / resumable) and return the
     * emitted edge count: the committed edge table's footer row sum (its
     * `output_rows`), so no count job runs. */
@@ -192,7 +203,7 @@ object Pipeline {
     * each stage is a `Future` on its inputs' futures, so independent
     * stages run as concurrent Spark jobs from their own driver threads
     * and back-fill the cores another stage's task tail leaves idle. The
-    * accessor runs in `blocking`, so a global pool of one or two threads
+    * build runs in `blocking`, so a global pool of one or two threads
     * grows instead of starving. Stage outputs are pure functions of
     * committed inputs, so the schedule changes no commit.
     *
@@ -226,7 +237,7 @@ object Pipeline {
     val failures = table.foldLeft(Map.empty[String, Future[Option[Throwable]]]) { (started, s) =>
       started + (s.name -> Future.sequence(s.inputs.map(started)).map { in =>
         in.flatten.headOption.orElse(blocking {
-          try { s.accessor(spark, sfDir); None } catch { case e: Throwable => Some(e) }
+          try { run(spark, sfDir, s); None } catch { case e: Throwable => Some(e) }
         })
       })
     }

@@ -353,16 +353,16 @@ object Clustering {
   }
 
   /** Ensemble of two independently-seeded clusterings joined per vector
-    * (the reference's ensemble cluster join, SURVEY J9): each member is a
-    * full Lloyd iteration with a disjoint seed window; the equi-join on
-    * vec_id (both sides distinct per key — no skew possible) emits the
-    * co-assignment, whose distinct pairs are the consensus groups. */
-  def ensemble(emb: DataFrame, k: Int = 8): DataFrame = {
-    val a = lloydStep(emb, k, seedFrom = 0)
-      .withColumnRenamed("cluster", "cluster_a")
+    * (the reference's ensemble cluster join, SURVEY J9): member A is a
+    * given (vec_id, cluster) assignment (the committed seed-window-0
+    * [[lloydStep]]), member B the full Lloyd iteration over `emb` with the
+    * disjoint seed window [k, 2k); the equi-join on vec_id (both sides
+    * distinct per key — no skew possible) emits the co-assignment, whose
+    * distinct pairs are the consensus groups. */
+  def ensemble(a: DataFrame, emb: DataFrame, k: Int = 8): DataFrame = {
     val b = lloydStep(emb, k, seedFrom = k)
       .withColumnRenamed("cluster", "cluster_b")
-    a.join(b, Seq("vec_id"))
+    a.withColumnRenamed("cluster", "cluster_a").join(b, Seq("vec_id"))
       .select(col("vec_id"), col("cluster_a"), col("cluster_b"),
         (col("cluster_a") * k + col("cluster_b")).as("consensus_key"))
   }

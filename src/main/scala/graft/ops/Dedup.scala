@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.graph.ParquetTableIO
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -203,15 +202,19 @@ object Dedup {
     (withHash, withHash.groupBy(col("_h")).agg(min(col(idCol)).as("_rep")))
   }
 
-  /** The verified near-dup pairs (a, b, jaccard) [[dupClusters]]
-    * collapses: [[verifiedPairs]] over the exact-dup representatives
-    * (see [[digestGroups]]). */
-  private[graft] def dupPairs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", threshold: Double = 0.5): DataFrame = {
+  /** The rows of `docs` that represent their exact-dup group (see
+    * [[digestGroups]]). */
+  private def representatives(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val (_, reps) = digestGroups(docs, idCol, textCol)
-    verifiedPairs(docs.join(reps.select(col("_rep").as(idCol)), Seq(idCol)),
-      idCol, textCol, threshold)
+    docs.join(reps.select(col("_rep").as(idCol)), Seq(idCol))
   }
+
+  /** The verified near-dup pairs (a, b, jaccard) [[dupClusters]]
+    * collapses: [[verifiedPairs]] over the exact-dup representatives. */
+  private[graft] def dupPairs(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", threshold: Double = 0.5): DataFrame =
+    verifiedPairs(representatives(docs, idCol, textCol), idCol, textCol, threshold)
 
   /** The collapse of [[dupClusters]] given its representative-level
     * pairs: connected components over the representatives, inherited by
@@ -259,27 +262,6 @@ object Dedup {
       .localCheckpoint()
     jaccardAtLeast(candidatePairs(buckets, idCol), withSh, idCol, threshold)
   }
-
-  /** [[dupClusters]] with the verified pair set routed through a
-    * committed stage table keyed by the corpus dir (VERDICT r04 #5 —
-    * the same move node_clusters made for Lloyd): the
-    * minhash -> candidates -> verify derivation ([[dupPairs]]) runs ONCE
-    * per corpus; the CC collapse and any future consumer (a dup-aware
-    * sampler, a pair auditor) re-read the committed (a, b, jaccard)
-    * table. Warm invocations pay one small-table read + the digest
-    * joins + CC rounds only. Threshold 1/2, the [[dupClusters]] default. */
-  def dupClustersStaged(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    // two committed tables: dup_pairs is the CONSUMER surface (a
-    // dup-aware sampler / pair auditor reads verified (a, b, jaccard)
-    // rows), dup_clusters the collapse result — warm callers pay ONE
-    // table read, no digest re-derivation, no CC rounds
-    graft.graph.StageStore.getOrCreate(s, dir, "dup_clusters") {
-      val docs = ParquetTableIO.read(s, s"$dir/documents.parquet")
-      val pairs = graft.graph.StageStore.getOrCreate(s, dir, "dup_pairs") {
-        dupPairs(docs)
-      }
-      dupClustersFrom(docs, pairs)
-    }
 
   /** Train↔eval decontamination — the n-gram-overlap scrub every LLM
     * training pipeline runs before training (flag training docs sharing
@@ -333,20 +315,16 @@ object Dedup {
     bandsOf(docs.select(col(idCol), wordSig(col(textCol), ngram, k)), Seq(idCol), k,
       rowsPerBand)
 
-  /** Committed near-dup index of a corpus dir: the minhash band buckets
-    * of the corpus's exact-dup representatives (same pre-collapse as
-    * [[dupPairs]] — identical texts index once). Index once,
-    * probe incrementally: the production shape for an append-heavy
+  /** Near-dup index of a corpus: the minhash band buckets of its
+    * exact-dup representatives (the pre-collapse of [[dupPairs]] —
+    * identical texts index once; a doc under 3 words has no band
+    * under any representative rule). Index once, probe incrementally
+    * ([[checkAgainstIndex]]): the production shape for an append-heavy
     * corpus, where re-running the full O(corpus) chain per ingest batch
     * is the thing to avoid. */
-  def dupIndex(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "dup_index") {
-      val docs = ParquetTableIO.read(s, s"$dir/documents.parquet")
-      val reps = docs.select(col("doc_id"), md5(col("text")).as("_h"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      minhashBuckets(docs.join(reps, Seq("doc_id")))
-    }
+  def dupIndex(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    minhashBuckets(representatives(docs, idCol, textCol), idCol, textCol)
 
   /** Probe new documents against a committed corpus index: bucket
     * equi-join -> distinct (new, corpus-rep) candidates -> exact

@@ -6,13 +6,6 @@ import graft.canonical.Canonical
 class CanonicalSpec extends SparkSpec {
   import spark.implicits._
 
-  test("denseIds: dense 0..n-1, ordered by key") {
-    val names = Seq("b", "a", "c").toDF("canonical_name")
-    val ids = Canonical.denseIds(names).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(ids === Map("a" -> 0L, "b" -> 1L, "c" -> 2L))
-  }
-
   test("denseIdsBucketed: bijection onto 0..n-1, stable across parallelism") {
     val names = (0 until 500).map(i => s"name_$i").toDF("canonical_name")
     def run(parts: Int) = Canonical

@@ -173,7 +173,7 @@ class OpsSpec extends SparkSpec {
 
   test("dupIndex is a committed stage table over exact-dup representatives") {
     val dir = "/root/testdata/sf0.001"
-    val idx = Dedup.dupIndex(spark, dir)
+    val idx = graft.graph.Pipeline.dupIndex(spark, dir)
     assert(new java.io.File(
       s"${graft.graph.StageStore.baseFor(dir)}/dup_index").exists)
     // 4 bands per representative; representative set = distinct texts
@@ -592,14 +592,14 @@ class OpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val direct = Dedup.dupClusters(docs)
-    val staged = Dedup.dupClustersStaged(spark, dir)
+    val staged = graft.graph.Pipeline.dupClusters(spark, dir)
     assertSameRows(staged, direct)
     // the verified (a, b, jaccard) set is a committed stage table — the
     // expensive minhash->candidates->verify chain ran once; warm calls
     // (and future consumers, e.g. a dup-aware sampler) read it back
     val base = graft.graph.StageStore.baseFor(dir)
     assert(new java.io.File(s"$base/dup_pairs").exists, "committed pair table")
-    assertSameRows(Dedup.dupClustersStaged(spark, dir), direct)
+    assertSameRows(graft.graph.Pipeline.dupClusters(spark, dir), direct)
   }
 
   test("repetition signals: duplicate words and a repeated bigram dominate") {

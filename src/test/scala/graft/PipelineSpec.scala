@@ -40,7 +40,7 @@ class PipelineSpec extends SparkSpec {
       assert(spark.read.parquet(s"$base/mentions").count() === marker)
       // committed readers carry the schema a parquet read would infer
       Pipeline.stages.foreach { s =>
-        assert(s.accessor(spark, sfDir).schema ===
+        assert(Pipeline.stage(spark, sfDir, s.name).schema ===
           spark.read.parquet(s"$base/${s.name}").schema, s.name)
       }
     }
@@ -68,10 +68,11 @@ class PipelineSpec extends SparkSpec {
 
   test("each declared stage builds from its declared inputs alone and commits only itself") {
     val full = withStageRoot {
-      Pipeline.runAll(spark, sf0001)
+      Pipeline.schedule(spark, sf0001, Pipeline.registered)
       Paths.get(StageStore.baseFor(sf0001))
     }
-    Pipeline.stages.foreach { s =>
+    assert(Pipeline.registered.size === 15)
+    Pipeline.registered.foreach { s =>
       withStageRoot {
         val base = Paths.get(StageStore.baseFor(sf0001))
         s.inputs.foreach { i =>
@@ -83,10 +84,31 @@ class PipelineSpec extends SparkSpec {
           } }
         }
         assert(committed(sf0001) === s.inputs.toSet)
-        s.accessor(spark, sf0001)
+        Pipeline.stage(spark, sf0001, s.name)
         assert(committed(sf0001) === s.inputs.toSet + s.name,
           s"${s.name} must commit itself and no undeclared upstream stage")
       }
+    }
+  }
+
+  test("reading a committed stage touches none of its inputs") {
+    withStageRoot {
+      Pipeline.runAll(spark, sf0001)
+      val mentions = new java.io.File(StageStore.baseFor(sf0001), "mentions")
+      Using.resource(Files.walk(mentions.toPath)) { paths =>
+        paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      }
+      assert(jobsOf(Pipeline.edges(spark, sf0001)) === 0)
+      assert(!mentions.exists, "mentions must not be committed again")
+    }
+  }
+
+  test("a build that reads an undeclared stage throws before it writes anything") {
+    withStageRoot {
+      val stray = Pipeline.Stage("stray", Nil, in => in("mentions"))
+      intercept[IllegalArgumentException](Pipeline.schedule(spark, sf0001, Seq(stray)))
+      assert(committed(sf0001).isEmpty)
+      assert(!new java.io.File(StageStore.baseFor(sf0001), "stray").exists)
     }
   }
 
@@ -185,7 +207,7 @@ class PipelineSpec extends SparkSpec {
     withStageRoot {
       val boom = new IllegalStateException("resolve failed")
       val failing = Pipeline.stages.map(s =>
-        if (s.name == "resolved") s.copy(accessor = (_, _) => throw boom) else s)
+        if (s.name == "resolved") s.copy(build = _ => throw boom) else s)
       val thrown = intercept[IllegalStateException](Pipeline.schedule(spark, sf0001, failing))
       assert(thrown eq boom)
       // the dependents of resolved never start; every independent stage
@@ -213,17 +235,19 @@ class PipelineSpec extends SparkSpec {
     val deep = new StackOverflowError("deep plan")
     val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def stage(name: String, inputs: String*)(body: => Unit) =
-      Pipeline.Stage(name, inputs, (s, _) => { body; ran.add(name); s.emptyDataFrame })
+      Pipeline.Stage(name, inputs, in => { body; ran.add(name); in.spark.range(1).toDF() })
     val table = Seq(
       stage("a")(throw deep),
       stage("b", "a")(()),
       stage("c")(()))
-    // on its own thread with a deadline, so a scheduler that never
-    // completes fails this test instead of hanging the suite
-    val outcome = Future {
-      try { Pipeline.schedule(spark, sf0001, table); None } catch { case e: Throwable => Some(e) }
+    withStageRoot {
+      // on its own thread with a deadline, so a scheduler that never
+      // completes fails this test instead of hanging the suite
+      val outcome = Future {
+        try { Pipeline.schedule(spark, sf0001, table); None } catch { case e: Throwable => Some(e) }
+      }
+      assert(Await.result(outcome, 60.seconds).exists(_ eq deep))
     }
-    assert(Await.result(outcome, 60.seconds).exists(_ eq deep))
     assert(ran.toArray.toSeq === Seq("c"))
   }
 

@@ -63,7 +63,8 @@ class PlanSpec extends SparkSpec {
 
   test("nodes: the entity vocabulary reads mentions with one FileScan") {
     withStageRoot {
-      val p = graft.graph.Pipeline.entityNames(spark, sfDir).queryExecution.executedPlan
+      val p = graft.triples.Triples.entityNames(graft.graph.Pipeline.mentions(spark, sfDir))
+        .queryExecution.executedPlan
       val scans = PlanWalk.collect(p) { case s: FileSourceScanExec => s.relation.location.rootPaths }
       assert(scans.map(_.map(_.getName)) === Seq(Seq("mentions")), p.toString.take(2000))
     }
@@ -134,7 +135,7 @@ class PlanSpec extends SparkSpec {
     // runs in the bytecode interpreter for every row of its stage
     withStageRoot {
       val sizes = Pipeline.stages.flatMap { s =>
-        plansOf(s.accessor(spark, sfDir)).flatMap(p =>
+        plansOf(Pipeline.stage(spark, sfDir, s.name)).flatMap(p =>
           PlanWalk.collect(p) { case w: WholeStageCodegenExec => w }).map { w =>
           val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
           (s.name, w.codegenStageId, stats.maxMethodCodeSize)

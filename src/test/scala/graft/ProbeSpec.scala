@@ -32,15 +32,18 @@ class ProbeSpec extends SparkSpec {
       s"graft.tools holds one CLI, graft.tools.Probe; add a subcommand there: $mains")
   }
 
-  test("each literal stage name is declared at exactly one getOrCreate call site") {
+  test("every committed table is declared once, in the Pipeline registry") {
     // a stage committed from two call sites is built by whichever runs
-    // first, so the two builds would have to be kept identical by hand
-    val call = """getOrCreate\([^,()]+,[^,()]+,\s*"([^"]+)"\)""".r
-    val sites = sources(root).flatMap(f =>
-      call.findAllMatchIn(text(f)).map(m => m.group(1) -> f.getName))
-    assert(sites.size >= 10, s"the scan found too few stage declarations: $sites")
-    val twice = sites.groupBy(_._1).filter(_._2.size > 1)
-    assert(twice.isEmpty, s"stage names declared more than once: $twice")
+    // first, so the two builds would have to be kept identical by hand (a
+    // stage commit passes arguments; a session's `getOrCreate()` none)
+    val call = """getOrCreate\((?!\))""".r
+    val sites = sources(root).filterNot(_.getPath.endsWith("graph/StageStore.scala"))
+      .flatMap(f => call.findAllIn(text(f)).map(_ => f.getPath.split("/graft/").last))
+    assert(sites === Seq("graph/Pipeline.scala"), "only the stage registry commits a stage")
+    val ops = sources(new File(root, "graft/ops")).filter(text(_).contains("StageStore"))
+    assert(ops.isEmpty, s"the ops modules must not name the stage store: $ops")
+    val names = Pipeline.registered.map(_.name)
+    assert(names.size === 15 && names.distinct === names, names)
   }
 
   test("src/main reads exactly the declared environment variables and system properties") {
